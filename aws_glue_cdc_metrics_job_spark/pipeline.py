@@ -15,6 +15,18 @@ lifecycle is one explicit, testable object over the operator library:
   C1); then the order_revenue join overwritten.
 - gold (:225-571): the mart library over silver, each overwritten.
 
+The stages keep the reference's order, but inside a stage the independent
+units run concurrently: bronze and silver one unit per table, gold one unit
+per mart write. The reference issues them one after another, which leaves
+the task slots idle while the driver plans, commits and lists each write;
+submitted from a thread pool as wide as the unit count, their Spark jobs
+overlap in the one ``SparkContext``. Each unit runs under the caller's job
+group, description and local properties. A stage returns only when every
+unit has finished; if any failed, it then raises the first failure in unit
+order. Within a unit the order is unchanged (a table's watermark advances
+only after its write), so a failed unit replays on the next run like a
+failed serial run would.
+
 Deliberate improvements over the reference (each flagged in SURVEY.md):
 - ``df.cache()`` at multi-action nodes -- the reference recomputes the
   bronze frame for each of its 3 sinks (:84,111,112) and the silver frame
@@ -36,10 +48,15 @@ nothing collects to the driver except the tiny watermark values.
 from __future__ import annotations
 
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.util import inheritable_thread_target
 
 from .operators.cdc import CDC_ACTION, CDC_TS, cdc_diff, tag_appends
 from .operators.incremental import advance_watermark, incremental_read
@@ -47,6 +64,8 @@ from .operators.relational import keep_latest
 from .session import Clock
 from .sources import MedallionLayout, path_exists, read_parquet, write_parquet
 from .state import WatermarkStore
+
+T = TypeVar("T")
 
 
 @dataclass(frozen=True)
@@ -95,90 +114,111 @@ class CdcPipeline:
     clock: Clock
     tables: list[TableSpec]
 
+    def _fan_out(self, units: list[Callable[[], T]]) -> list[T]:
+        """Run ``units`` concurrently, one thread each, under the caller's
+        job group, description and local properties. Waits for every unit,
+        then returns their results in unit order, or re-raises the first
+        failure in unit order."""
+        with ThreadPoolExecutor(max_workers=max(len(units), 1)) as pool:
+            futures = [pool.submit(inheritable_thread_target(self.spark)(unit)) for unit in units]
+        return [f.result() for f in futures]
+
     # ---- bronze -----------------------------------------------------------
 
     def run_bronze(self, read_source: Callable[[str], DataFrame]) -> dict[str, DataFrame]:
-        """Extract + CDC per table; returns the tagged change sets."""
-        changes: dict[str, DataFrame] = {}
+        """Extract + CDC per table, the tables concurrently; returns the
+        tagged change sets."""
         run_date = self.clock.today_str
         now = self.clock.now.strftime("%Y-%m-%d %H:%M:%S")
-        for spec in self.tables:
-            src = read_source(spec.name).dropDuplicates()
-            if spec.ts_col is not None:
-                src = incremental_read(src, spec.ts_col, self.store, f"bronze/{spec.name}", inclusive=True)
-            cur = src.withColumn("ingestion_timestamp", F.lit(now).cast("timestamp")).cache()
-            write_parquet(cur, self.layout.bronze(spec.name, run_date), mode="overwrite")
+        changes = self._fan_out(
+            [partial(self._bronze_table, spec, read_source, run_date, now) for spec in self.tables]
+        )
+        return {spec.name: delta for spec, delta in zip(self.tables, changes)}
 
-            if spec.ts_col is not None:
-                delta = tag_appends(cur, now)
+    def _bronze_table(
+        self, spec: TableSpec, read_source: Callable[[str], DataFrame], run_date: str, now: str
+    ) -> DataFrame:
+        src = read_source(spec.name).dropDuplicates()
+        if spec.ts_col is not None:
+            src = incremental_read(src, spec.ts_col, self.store, f"bronze/{spec.name}", inclusive=True)
+        cur = src.withColumn("ingestion_timestamp", F.lit(now).cast("timestamp")).cache()
+        write_parquet(cur, self.layout.bronze(spec.name, run_date), mode="overwrite")
+
+        if spec.ts_col is not None:
+            delta = tag_appends(cur, now)
+        else:
+            snap_path = self.layout.snapshot(spec.name)
+            # Cold start is a path probe, not a broad except: a transient
+            # read failure must fail the run, or the diff would tag every
+            # row 'insert' and corrupt the durable CDC log (S8, :95).
+            if path_exists(self.spark, snap_path):
+                prev = read_parquet(self.spark, snap_path)
             else:
-                snap_path = self.layout.snapshot(spec.name)
-                # Cold start is a path probe, not a broad except: a transient
-                # read failure must fail the run, or the diff would tag every
-                # row 'insert' and corrupt the durable CDC log (S8, :95).
-                if path_exists(self.spark, snap_path):
-                    prev = read_parquet(self.spark, snap_path)
-                else:
-                    prev = self.spark.createDataFrame([], cur.schema)
-                delta = cdc_diff(cur, prev, pks=spec.pks).withColumn(
-                    CDC_TS, F.lit(now).cast("timestamp")
-                )
-            if delta.isEmpty():
-                # empty-input short-circuit (reference :134): a files-less
-                # partitioned dir is unreadable, so don't write or re-read it
-                changes[spec.name] = delta
-                if spec.ts_col is None:
-                    write_parquet(
-                        cur.drop("ingestion_timestamp"), self.layout.snapshot(spec.name), mode="overwrite"
-                    )
-                cur.unpersist()
-                continue
-            cdc_path = self.layout.cdc(spec.name, run_date)
-            write_parquet(delta, cdc_path, mode="append", partition_by=[CDC_ACTION])
-            # refresh snapshot AFTER the log write (at-least-once, :111-112)
+                prev = self.spark.createDataFrame([], cur.schema)
+            delta = cdc_diff(cur, prev, pks=spec.pks).withColumn(
+                CDC_TS, F.lit(now).cast("timestamp")
+            )
+        if delta.isEmpty():
+            # empty-input short-circuit (reference :134): a files-less
+            # partitioned dir is unreadable, so don't write or re-read it
             if spec.ts_col is None:
                 write_parquet(
                     cur.drop("ingestion_timestamp"), self.layout.snapshot(spec.name), mode="overwrite"
                 )
-            else:
-                advance_watermark(cur, spec.ts_col, self.store, f"bronze/{spec.name}")
-            # Return the change set re-read from the durable log: the diff's
-            # lineage reads the snapshot path, which the overwrite above just
-            # invalidated (Spark refreshes caches on path writes), so the
-            # in-memory frame must not be handed out.
-            changes[spec.name] = read_parquet(self.spark, cdc_path)
             cur.unpersist()
-        return changes
+            return delta
+        # the log's schema as a read infers it: the data columns, then the
+        # partition column; passing it spares the inference job
+        logged = StructType(
+            [StructField(f.name, f.dataType) for f in delta.schema if f.name != CDC_ACTION]
+            + [StructField(CDC_ACTION, StringType())]
+        )
+        cdc_path = self.layout.cdc(spec.name, run_date)
+        write_parquet(delta, cdc_path, mode="append", partition_by=[CDC_ACTION])
+        # refresh snapshot AFTER the log write (at-least-once, :111-112)
+        if spec.ts_col is None:
+            write_parquet(
+                cur.drop("ingestion_timestamp"), self.layout.snapshot(spec.name), mode="overwrite"
+            )
+        else:
+            advance_watermark(cur, spec.ts_col, self.store, f"bronze/{spec.name}")
+        cur.unpersist()
+        # Return the change set re-read from the durable log: the diff's
+        # lineage reads the snapshot path, which the overwrite above just
+        # invalidated (Spark refreshes caches on path writes), so the
+        # in-memory frame must not be handed out.
+        return read_parquet(self.spark, cdc_path, schema=logged)
 
     # ---- silver -----------------------------------------------------------
 
     def run_silver(self) -> None:
-        """Conform bronze -> silver per table, then assemble order_revenue."""
+        """Conform bronze -> silver per table, the tables concurrently."""
         run_date = self.clock.today_str
-        for spec in self.tables:
-            raw = read_parquet(self.spark, self.layout.bronze(spec.name, run_date))
-            df = raw
-            if spec.event_date_col is not None:
-                df = df.withColumn("CREATION_DATE", F.to_date(spec.event_date_col))
-                wm = self.store.get(f"silver/{spec.name}")
-                df = df.filter(F.col("CREATION_DATE") > F.lit(wm).cast("date"))
-            for col, typ in spec.casts.items():
-                df = df.withColumn(col, F.col(col).cast(typ))
-            if df.isEmpty():
-                continue
-            order = [F.col(spec.ts_col).desc()] if spec.ts_col else []
-            df = keep_latest(df, spec.pks, order, tiebreakers=spec.pks).cache()
-            # Watermarked fact tables accrete by event date; snapshot-diff
-            # tables conform the full current image, so overwrite.
-            write_parquet(
-                df,
-                self.layout.silver(spec.name),
-                mode="append" if spec.event_date_col else "overwrite",
-                partition_by=["CREATION_DATE"] if spec.event_date_col else None,
-            )
-            if spec.event_date_col is not None:
-                advance_watermark(df, "CREATION_DATE", self.store, f"silver/{spec.name}")
-            df.unpersist()
+        self._fan_out([partial(self._silver_table, spec, run_date) for spec in self.tables])
+
+    def _silver_table(self, spec: TableSpec, run_date: str) -> None:
+        df = read_parquet(self.spark, self.layout.bronze(spec.name, run_date))
+        if spec.event_date_col is not None:
+            df = df.withColumn("CREATION_DATE", F.to_date(spec.event_date_col))
+            wm = self.store.get(f"silver/{spec.name}")
+            df = df.filter(F.col("CREATION_DATE") > F.lit(wm).cast("date"))
+        for col, typ in spec.casts.items():
+            df = df.withColumn(col, F.col(col).cast(typ))
+        if df.isEmpty():
+            return
+        order = [F.col(spec.ts_col).desc()] if spec.ts_col else []
+        df = keep_latest(df, spec.pks, order, tiebreakers=spec.pks).cache()
+        # Watermarked fact tables accrete by event date; snapshot-diff
+        # tables conform the full current image, so overwrite.
+        write_parquet(
+            df,
+            self.layout.silver(spec.name),
+            mode="append" if spec.event_date_col else "overwrite",
+            partition_by=["CREATION_DATE"] if spec.event_date_col else None,
+        )
+        if spec.event_date_col is not None:
+            advance_watermark(df, "CREATION_DATE", self.store, f"silver/{spec.name}")
+        df.unpersist()
 
     def build_order_revenue(self, items_table: str, options_table: str) -> DataFrame:
         from .plans.marts import build_order_revenue
@@ -197,34 +237,46 @@ class CdcPipeline:
     # ---- gold -------------------------------------------------------------
 
     def run_gold(self, items_table: str = "order_items", options_table: str = "order_item_options") -> None:
-        """All marts from silver, overwritten (SURVEY.md §2.10)."""
+        """All marts from silver, overwritten (SURVEY.md §2.10), the marts
+        concurrently."""
         from .plans import marts
 
         revenue = read_parquet(self.spark, self.layout.silver("order_revenue")).cache()
+        # Fill the cache before the fan-out: concurrent writers would
+        # otherwise race to compute its still-empty partitions, each
+        # building revenue again (see plans.adapters._memoized).
+        revenue.count()
         items = read_parquet(self.spark, self.layout.silver(items_table))
         options = read_parquet(self.spark, self.layout.silver(options_table))
         now = self.clock.today_str
 
-        ltv = marts.fact_ltv_daily(revenue)
-        write_parquet(ltv, self.layout.gold("fact_ltv_daily"), partition_by=["CREATION_DATE"])
-        snap = marts.ltv_snapshot(ltv)
-        write_parquet(snap, self.layout.gold("mart_customer_ltv_snapshot"))
-        write_parquet(marts.clv_segment(snap), self.layout.gold("mart_customer_clv_segment"))
-        write_parquet(marts.rfm(revenue, now), self.layout.gold("mart_customer_rfm"))
-        write_parquet(marts.churn_profile(revenue, now), self.layout.gold("mart_customer_churn_profile"))
-        for grain in ("daily", "weekly", "monthly", "hourly"):
-            write_parquet(
-                marts.sales_trends(revenue, grain), self.layout.gold(f"mart_sales_trends_{grain}")
-            )
-        write_parquet(marts.loyalty_impact(items, revenue), self.layout.gold("mart_loyalty_program_impact"))
-        write_parquet(
-            marts.location_performance(items, revenue), self.layout.gold("mart_location_performance")
-        )
-        write_parquet(
-            marts.discount_effectiveness(items, options, revenue),
-            self.layout.gold("mart_discount_effectiveness"),
-        )
-        revenue.unpersist()
+        # mart -> builder; each unit builds its mart's plan itself, so a
+        # builder that raises fails only its own unit
+        builders: dict[str, Callable[[], DataFrame]] = {
+            "fact_ltv_daily": lambda: marts.fact_ltv_daily(revenue),
+            "mart_customer_ltv_snapshot": lambda: marts.ltv_snapshot(marts.fact_ltv_daily(revenue)),
+            "mart_customer_clv_segment": lambda: marts.clv_segment(
+                marts.ltv_snapshot(marts.fact_ltv_daily(revenue))
+            ),
+            "mart_customer_rfm": lambda: marts.rfm(revenue, now),
+            "mart_customer_churn_profile": lambda: marts.churn_profile(revenue, now),
+            **{
+                f"mart_sales_trends_{grain}": partial(marts.sales_trends, revenue, grain)
+                for grain in ("daily", "weekly", "monthly", "hourly")
+            },
+            "mart_loyalty_program_impact": lambda: marts.loyalty_impact(items, revenue),
+            "mart_location_performance": lambda: marts.location_performance(items, revenue),
+            "mart_discount_effectiveness": lambda: marts.discount_effectiveness(items, options, revenue),
+        }
+
+        def write(mart: str, build: Callable[[], DataFrame]) -> None:
+            partition_by = ["CREATION_DATE"] if mart == "fact_ltv_daily" else None
+            write_parquet(build(), self.layout.gold(mart), partition_by=partition_by)
+
+        try:
+            self._fan_out([partial(write, mart, build) for mart, build in builders.items()])
+        finally:
+            revenue.unpersist()
 
     def run_all(self, read_source: Callable[[str], DataFrame]) -> None:
         self.run_bronze(read_source)

@@ -23,10 +23,13 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+def read_parquet(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
+    """``schema``, when the caller knows it, spares the inference job."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 # Fact tables whose downstream operators do real per-row compute (hash

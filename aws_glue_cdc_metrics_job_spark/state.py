@@ -19,6 +19,7 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+import threading
 
 DEFAULT_WATERMARK = "2020-01-01"
 
@@ -29,11 +30,16 @@ class WatermarkStore:
     One JSON file instead of one object per table (reference:
     one S3 key per table, scripts/cdc_metrics_job.py:30,116,151,196).
     Writes are atomic (tmp + rename) so a crashed run leaves the previous
-    watermark intact, preserving at-least-once replay."""
+    watermark intact, preserving at-least-once replay. ``set`` and
+    ``advance`` rewrite the whole file, so they hold a per-instance lock:
+    concurrent pipeline units advancing different keys must not lose each
+    other's updates."""
 
     def __init__(self, path: str, default: str = DEFAULT_WATERMARK):
         self.path = path
         self.default = default
+        # reentrant: advance() calls set() while holding it
+        self._lock = threading.RLock()
 
     def _load(self) -> dict[str, str]:
         try:
@@ -46,18 +52,19 @@ class WatermarkStore:
         return self._load().get(table, self.default)
 
     def set(self, table: str, value: str) -> None:
-        state = self._load()
-        state[table] = value
-        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.path) or ".")
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            json.dump(state, f, indent=0, sort_keys=True)
-        os.replace(tmp, self.path)
+        with self._lock:
+            state = self._load()
+            state[table] = value
+            os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
+            fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.path) or ".")
+            with os.fdopen(fd, "w", encoding="utf-8") as f:
+                json.dump(state, f, indent=0, sort_keys=True)
+            os.replace(tmp, self.path)
 
     def advance(self, table: str, value: str) -> str:
         """Monotonic set: keeps max(current, value) under string ordering
         (valid for ISO dates/timestamps). Returns the stored value."""
-        current = self.get(table)
-        newval = max(current, value)
-        self.set(table, newval)
+        with self._lock:
+            newval = max(self.get(table), value)
+            self.set(table, newval)
         return newval

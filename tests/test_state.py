@@ -1,6 +1,8 @@
 """Watermark store + incremental read (SURVEY.md C1/S9)."""
 
 import datetime as dt
+import sys
+import threading
 
 from aws_glue_cdc_metrics_job_spark.operators.incremental import (
     advance_watermark,
@@ -27,6 +29,34 @@ def test_advance_is_monotonic(tmp_path):
     store.advance("t", "2024-03-01")
     store.advance("t", "2024-01-01")
     assert store.get("t") == "2024-03-01"
+
+
+def test_concurrent_advances_lose_no_update(tmp_path):
+    """Pipeline units advance their watermarks from concurrent threads; each
+    advance rewrites the whole file, so none may drop another's key."""
+    store = WatermarkStore(str(tmp_path / "wm.json"))
+    barrier = threading.Barrier(8)
+
+    def unit(i):
+        barrier.wait()
+        for day in range(1, 11):
+            store.advance(f"t{i}", f"2024-01-{day:02d}")
+            store.advance("shared", f"2024-{i + 1:02d}-{day:02d}")
+
+    threads = [threading.Thread(target=unit, args=(i,)) for i in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    for i in range(8):
+        assert store.get(f"t{i}") == "2024-01-10"
+    assert store.get("shared") == "2024-08-10"
 
 
 def test_incremental_read_and_advance(spark, tmp_path):
