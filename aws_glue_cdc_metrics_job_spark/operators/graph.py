@@ -870,9 +870,9 @@ def hits_bucketed(
     from ..sources.parquet_io import write_bucketed
 
     spark = edges.sparkSession
-    # one materialization feeds BOTH bucketed writes (the old shape ran
-    # the distinct once per write), at measured-row width
-    ed, _ = _ckpt_edges(edges.select("SRC", "DST").distinct(), True)
+    # with checkpoint, one materialization feeds BOTH bucketed writes (the
+    # old shape ran the distinct once per write), at measured-row width
+    ed, _ = _ckpt_edges(edges.select("SRC", "DST").distinct(), checkpoint)
     write_bucketed(ed, f"{table}_src", ["SRC"], num_buckets, sort_cols=["SRC"],
                    path=os.path.join(path, "src") if path else None)
     write_bucketed(ed, f"{table}_dst", ["DST"], num_buckets, sort_cols=["DST"],

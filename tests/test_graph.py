@@ -458,17 +458,23 @@ def test_hits_bucketed_matches_plain_and_plan(spark, tmp_path):
     """Dual-bucketed layout twin: identical values to hits(), and EACH
     half-step's join reads its co-located edge copy (SRC-bucketed for hub
     pooling, DST-bucketed for auth pooling) with no exchange above the
-    edge scan."""
+    edge scan. checkpoint=False persists nothing, the edge frame that
+    feeds both bucketed writes included."""
     from aws_glue_cdc_metrics_job_spark.operators.graph import hits, hits_bucketed
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
     edges = [(1, 10), (2, 10), (2, 11), (3, 11), (3, 12), (4, 12), (10, 4)]
     df = spark.createDataFrame(edges, "SRC long, DST long")
     want = sorted(map(tuple, hits(df, iterations=2, checkpoint=False).collect()))
+    before = persisted()
     got_df = hits_bucketed(
         df, "hits_bkt_test", iterations=2, num_buckets=4,
         path=str(tmp_path / "hits_bkt"), checkpoint=False,
     )
     assert sorted(map(tuple, got_df.collect())) == want
+    assert persisted() - before == set()
 
     # plan pins: each half-step joins its OWN copy bucket-locally
     scores = spark.createDataFrame([(1, 10**9)], "NODE long, X long")
