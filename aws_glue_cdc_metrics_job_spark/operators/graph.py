@@ -20,6 +20,12 @@ long-running iterative deployment, :func:`pagerank_bucketed` persists the
 degree-annotated edges bucketed by SRC so only the (small) rank table
 moves per iteration -- the edge side of every hop reads bucket-local with
 zero exchange (plan-pinned in tests/test_graph.py).
+
+One node prep (:func:`_node_prep`), one hop step (:func:`_hop`) and one
+walk loop (:func:`_walk`) serve the whole iterative family: the uniform,
+personalized, weighted and bucketed PageRank walks are parameterizations
+of the same kernel; HITS and Katz reuse the prep and the hop step, and
+label propagation reuses the prep.
 """
 
 from __future__ import annotations
@@ -46,25 +52,33 @@ def _ckpt_big(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
 
 
+def _bcast_max_bytes() -> int:
+    """The broadcast byte budget, ``SPARK_GRAFT_GRAPH_BCAST_MAX_BYTES``
+    (default 256 MB). A value that is not a positive integer fails here,
+    naming the variable, instead of silently turning every hop join into
+    a shuffle (0) or into an oversized broadcast (a typo)."""
+    name = "SPARK_GRAFT_GRAPH_BCAST_MAX_BYTES"
+    raw = os.environ.get(name)
+    if raw is None:
+        return 256 * 1024**2
+    try:
+        value = int(raw)
+    except ValueError:
+        value = 0
+    if value <= 0:
+        raise ValueError(f"{name} must be a positive integer byte count, got {raw!r}")
+    return value
+
+
 # Broadcast ceiling for the node-sized side of a hop join, derived from
-# ESTIMATED BUILD BYTES (VERDICT r8 item 5 / ADVICE r8: a row-count
-# ceiling of 8M justified as "~16 B/row" ignored the BroadcastHashRelation
+# ESTIMATED BUILD BYTES: a bare row count ignores the BroadcastHashRelation
 # overhead -- UnsafeRow headers + the hash map cost ~50-100+ bytes per
-# narrow (long, long) row, so 8M rows is really a multi-hundred-MB
-# per-executor build). The default caps the ESTIMATE at 256 MB:
-# rows_max = 256 MB / (48 B fixed + 16 B per column). Scale-adaptive by
+# narrow (long, long) row -- and the width of the frame, so a row ceiling
+# tuned for 2-column frames over-broadcasts a 3-column rank+degree frame.
+# rows_max = budget / (48 B fixed + 16 B per column). Scale-adaptive by
 # DATA (the caller passes the measured node count, a driver scalar every
 # iterative operator already holds), not by core count.
-# SPARK_GRAFT_GRAPH_BCAST_MAX (a row count) still overrides when set;
-# 0 forces the shuffled-hash fallback everywhere.
-_BCAST_MAX_NODES = (
-    int(os.environ["SPARK_GRAFT_GRAPH_BCAST_MAX"])
-    if os.environ.get("SPARK_GRAFT_GRAPH_BCAST_MAX")
-    else None
-)
-_BCAST_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_GRAPH_BCAST_MAX_BYTES", str(256 * 1024**2))
-)
+_BCAST_MAX_BYTES = _bcast_max_bytes()
 
 
 def _bcast_row_ceiling(n_cols: int) -> int:
@@ -88,12 +102,7 @@ def _node_side(frame: DataFrame, n: int) -> DataFrame:
     Above the ceiling, shuffled-hash still beats SMJ: the node side
     shuffles, but neither side sorts. Values are join-strategy-independent
     (exact integer lattice), pinned by the unrolled-CTE oracles."""
-    ceiling = (
-        _BCAST_MAX_NODES
-        if _BCAST_MAX_NODES is not None
-        else _bcast_row_ceiling(len(frame.columns))
-    )
-    if n <= ceiling:
+    if n <= _bcast_row_ceiling(len(frame.columns)):
         return F.broadcast(frame)
     return frame.hint("shuffle_hash")
 
@@ -163,7 +172,7 @@ def triangle_counts(edges: DataFrame, checkpoint: bool = True) -> DataFrame:
     internally. Returns (NODE, DEG, N_TRIANGLES, CC_PPM) for every node
     with at least one edge.
 
-    Known hazard (ADVICE r8, the documented basket_pairs policy): the
+    Known hazard (the documented basket_pairs policy): the
     in-row wedge enumeration collects each oriented source's
     out-neighborhood into one array, so a single row holds
     O(oriented-outdeg^2) pair structs. Degree orientation bounds the
@@ -273,8 +282,8 @@ def copurchase_edges(df: DataFrame, basket_col: str, item_col: str) -> DataFrame
     # would recompute the pair stage per branch (no stage reuse across
     # union arms, measured: 33 s -> 56 s at the 10x point)
     pairs = (
-        # NULL baskets carry no co-occurrence signal (ADVICE r8: the old
-        # self-join form never matched NULL keys; groupBy would collapse
+        # NULL baskets carry no co-occurrence signal (a self-join on the
+        # basket key never matches NULL keys; groupBy would collapse
         # them into ONE pseudo-basket and emit spurious pairs)
         df.select(F.col(basket_col).alias("__b"), F.col(item_col).alias("__i"))
         .where(F.col("__b").isNotNull())
@@ -302,54 +311,187 @@ def copurchase_edges(df: DataFrame, basket_col: str, item_col: str) -> DataFrame
     ).select("__e.SRC", "__e.DST")
 
 
-def _graph_prep(edges: DataFrame, checkpoint: bool, symmetric: bool = False):
-    """Shared PageRank preamble: the materialized pair stream (SRC, DST),
-    the node UNIVERSE (distinct SRC union DST) with its out-degree
-    (0 = dangling), and the three bounded driver scalars (universe size,
-    out-node count, in-node count) that pick the recurrence path.
+def _node_prep(
+    ed: DataFrame,
+    checkpoint: bool,
+    symmetric: bool = False,
+    seeds: list[int] | None = None,
+):
+    """The node universe of an edge frame and its bounded driver scalars,
+    shared by every walk, HITS and Katz.
 
-    Round-9 shape: the pair stream is checkpointed FIRST (_ckpt_edges),
-    and everything else -- degrees, universe, scalars -- derives from the
-    checkpoint, so the (possibly expensive) edge build executes exactly
-    once; the old shape built deg/nd/ed on parallel lineage and the
-    basket->pair pipeline re-executed once per consumer query execution.
-    Degrees are NOT joined onto the edge side anymore: the hop loops fold
-    DEG into the node-sized rank frame (one edge join per hop instead of
-    two, and the edge bytes shrink by a column). The universe + degree +
-    has-in-edge flags come from ONE shuffle (a union with an origin flag
-    folded by a single groupBy), replacing union-distinct + left-join +
-    three separate count jobs with one pipeline and one scalar job.
+    ``nd`` is (NODE, OUT, IN): OUT is the out-degree -- or, when ``ed``
+    carries a weight column ``W``, the out-strength (sum of out-weights)
+    -- and IN the in-degree; 0 marks a dangling node or a teleport-only
+    one. It comes from ONE shuffle over the materialized (or bucketed)
+    edge frame: a union of the SRC arm (flag = weight, or 1) with the DST
+    arm (flag = 0) folded by a single groupBy. Weights are positive, so a
+    0 flag is exactly an in-edge. Then ONE scalar job returns a single row
+    (n, n_out, n_in, max_in, k), where k counts the surviving ``seeds``
+    (k = n without seeds) -- never row data.
 
     ``symmetric=True`` is the caller's contract that every edge has its
     mirror (anything built by copurchase_edges): the universe then EQUALS
-    the out-node set, so flag detection is skipped and the fast
-    recurrence is selected directly."""
-    es, _ = _ckpt_edges(edges.select("SRC", "DST"), checkpoint)
+    the out-node set, so the union is skipped (a bucketed edge table
+    groups on its own bucket key with no exchange) and IN = OUT."""
     if symmetric:
-        nd = es.groupBy(F.col("SRC").alias("NODE")).agg(
-            F.count(F.lit(1)).cast("long").alias("DEG")
+        nd = ed.groupBy(F.col("SRC").alias("NODE")).agg(
+            F.count(F.lit(1)).cast("long").alias("OUT")
         )
-        if checkpoint:
-            nd = nd.localCheckpoint(eager=False)
-        n = nd.count()  # the one bounded driver scalar of the fast path
-        return es, nd, n, n, n
-    flags = es.select(F.col("SRC").alias("NODE"), F.lit(1).alias("__o")).unionAll(
-        es.select(F.col("DST").alias("NODE"), F.lit(0).alias("__o"))
-    )
-    nd = flags.groupBy("NODE").agg(
-        F.sum("__o").cast("long").alias("DEG"),
-        F.max(1 - F.col("__o")).alias("__in"),
-    )
+        nd = nd.select("NODE", "OUT", F.col("OUT").alias("IN"))
+    else:
+        w = F.col("W") if "W" in ed.columns else F.lit(1)
+        nd = (
+            ed.select(F.col("SRC").alias("NODE"), w.alias("__o"))
+            .unionAll(ed.select(F.col("DST").alias("NODE"), F.lit(0).alias("__o")))
+            .groupBy("NODE")
+            .agg(
+                F.sum("__o").cast("long").alias("OUT"),
+                F.count_if(F.col("__o") == 0).cast("long").alias("IN"),
+            )
+        )
     if checkpoint:
         nd = nd.localCheckpoint(eager=False)
-    # bounded driver scalars: ONE row of three numbers, never row data
+    in_seeds = F.lit(True) if seeds is None else F.col("NODE").isin(seeds)
     row = nd.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("DEG") > 0, 1).otherwise(0)).alias("n_out"),
-        F.sum("__in").alias("n_in"),
+        F.count(F.lit(1)),
+        F.count_if(F.col("OUT") > 0),
+        F.count_if(F.col("IN") > 0),
+        F.max("IN"),
+        F.count_if(in_seeds),
     ).first()
-    n, n_out, n_in = int(row["n"] or 0), int(row["n_out"] or 0), int(row["n_in"] or 0)
-    return es, nd.select("NODE", "DEG"), n, n_out, n_in
+    return (nd, *(int(v or 0) for v in row))
+
+
+def _hop(
+    ed: DataFrame,
+    frame: DataFrame,
+    n: int,
+    key: str,
+    expr,
+    buckets: int = 0,
+) -> DataFrame:
+    """One hop of every iterative operator here: join the edges' ``key``
+    endpoint to the node-sized ``frame`` (NODE, ...) and sum ``expr`` per
+    OTHER endpoint, returning (NODE, __S) -- ONE edge-sized join plus one
+    keyed aggregation, partial-aggregated map-side.
+
+    The node side takes :func:`_node_side`'s broadcast/shuffled-hash
+    policy. An edge table bucketed on ``key`` passes its bucket count as
+    ``buckets``: the join is then forced to sort-merge and the node frame
+    is hash-partitioned into the bucket layout, so the executed plan
+    reads the edge side bucket-local with NO exchange above its scan and
+    only the node-sized frame moves (plan-pinned in tests/test_graph.py).
+    Without the explicit partitioning, a node frame that arrives
+    hash-partitioned at a different width (an aggregate's output under
+    checkpoint=False) makes the planner re-shuffle the EDGE side instead."""
+    other = "DST" if key == "SRC" else "SRC"
+    if buckets:
+        e, f = ed.hint("merge"), frame.repartition(buckets, "NODE")
+    else:
+        e, f = ed, _node_side(frame, n)
+    return (
+        e.join(f, e[key] == f["NODE"])
+        .groupBy(F.col(other).alias("NODE"))
+        .agg(F.sum(expr).cast("long").alias("__S"))
+    )
+
+
+def _walk(
+    ed: DataFrame,
+    iterations: int,
+    scale: int,
+    damping_pct: int,
+    checkpoint: bool,
+    seeds: list[int] | None = None,
+    symmetric: bool = False,
+    buckets: int = 0,
+) -> DataFrame:
+    """The one PageRank-family walk loop. ``ed`` is (SRC, DST) with
+    optional columns that pick the walk:
+
+    - ``W`` (positive integer edge weight): contribution
+      ``(damping_pct * R * W) div (100 * OUT)`` with OUT the
+      out-strength; without it w = 1, OUT = out-degree and the
+      contribution is ``(damping_pct * R) div (100 * OUT)``.
+    - ``OUT`` (bucketed tables bake degree/strength into the layout):
+      with the table's bucket count in ``buckets`` the hop reads OUT off
+      the edge side and joins bucket-locally (:func:`_hop`); otherwise
+      OUT rides the NODE-SIZED rank side (one node x node join inside
+      the broadcast/hash subtree), so each hop does exactly ONE
+      edge-sized join.
+
+    ``seeds`` is the restart set: None restarts on all n nodes, otherwise
+    on the k seeds present in the universe (absent seeds drop identically
+    on both engines; none present returns the empty frame). Mass starts
+    on, teleports to, and -- from dangling nodes -- returns to the
+    restart set:
+
+        r0(v)      = scale div k                          (v restarts)
+        r_{t+1}(v) = SUM over in-edges u->v of contribution(u)
+                     + [v restarts] * ((100-damping_pct)*scale div (100*k)
+                                       + (damping_pct * D_t) div (100*k))
+
+    with D_t the rank on dangling nodes. The general recurrence runs over
+    the FULL universe (left join + coalesce, a 1-row broadcast of D_t),
+    so nodes without in-edges keep their teleport mass. When every node
+    has both an out- and an in-edge (any symmetric graph), D_t = 0 and
+    every node receives contributions, so the fast form -- contributions
+    + teleport, no universe join -- yields the same integers.
+
+    Returns (NODE, RANK_PICOS, N_NEIGHBORS), or OUT_STRENGTH in place of
+    N_NEIGHBORS for a weighted walk."""
+    weighted = "W" in ed.columns
+    out_name = "OUT_STRENGTH" if weighted else "N_NEIGHBORS"
+    nd, n, n_out, n_in, _, k = _node_prep(ed, checkpoint, symmetric, seeds)
+    if k == 0:
+        return ed.sparkSession.createDataFrame(
+            [], f"NODE long, RANK_PICOS long, {out_name} long"
+        )
+    restarts = F.lit(True) if seeds is None else F.col("NODE").isin(seeds)
+    tele = ((100 - damping_pct) * scale) // (100 * k)
+    fast = n_out == n and n_in == n
+    strength = nd.select("NODE", "OUT")
+    w = " * W" if weighted else ""
+    contrib = F.expr(f"({damping_pct} * R{w}) div (100 * OUT)").cast("long")
+    ranks = nd.select(
+        "NODE", F.when(restarts, F.lit(scale // k)).otherwise(F.lit(0)).cast("long").alias("R")
+    )
+    for _ in range(iterations):
+        r = ranks if buckets else ranks.join(strength, "NODE")
+        s = _hop(ed, r, n, "SRC", contrib, buckets)
+        got, restart_mass = F.col("__S"), F.lit(tele)
+        if not fast:
+            s = nd.select("NODE").join(s, "NODE", "left").crossJoin(
+                F.broadcast(
+                    ranks.join(nd.where(F.col("OUT") == 0), "NODE", "left_semi").agg(
+                        F.coalesce(F.sum("R"), F.lit(0)).cast("long").alias("__D")
+                    )
+                )
+            )
+            got = F.coalesce(got, F.lit(0))
+            restart_mass = restart_mass + F.expr(f"({damping_pct} * __D) div (100 * {k})")
+        ranks = s.select(
+            "NODE",
+            (got + F.when(restarts, restart_mass).otherwise(F.lit(0))).cast("long").alias("R"),
+        )
+        if checkpoint:
+            ranks = ranks.localCheckpoint(eager=False)
+    return ranks.join(strength, "NODE").select(
+        "NODE", F.col("R").alias("RANK_PICOS"), F.col("OUT").alias(out_name)
+    )
+
+
+def _write_bucketed(
+    df: DataFrame, table: str, key: str, num_buckets: int, path: str | None
+) -> DataFrame:
+    """Persist ``df`` hash-bucketed and sorted on ``key``
+    (sources.write_bucketed) and read it back through the catalog, where
+    the bucket spec lives."""
+    from ..sources.parquet_io import write_bucketed
+
+    write_bucketed(df, table, [key], num_buckets, sort_cols=[key], path=path)
+    return df.sparkSession.table(table)
 
 
 def pagerank(
@@ -372,107 +514,29 @@ def pagerank(
 
     computed over the FULL universe every hop (left join + coalesce), so
     teleport-only nodes -- sources with no in-edges, dangling sinks --
-    keep their mass instead of silently vanishing (the round-5 VERDICT
-    defect), and dangling mass is redistributed uniformly as in the
-    original formulation (Page et al. 1999, section 2.7).
+    keep their mass instead of silently vanishing, and dangling mass is
+    redistributed uniformly as in the original formulation (Page et al.
+    1999, section 2.7).
 
     Fast path: when the graph has no dangling node AND every node has an
     in-edge (any symmetric graph, e.g. co-purchase), the recurrence above
-    degenerates to the historical in-edge-only form -- same values, fewer
-    operators -- so the pre-existing unrolled-CTE oracles replay
-    bit-identically. Detection costs two extra edge-sized distincts;
-    callers whose edges are symmetric BY CONSTRUCTION (copurchase_edges
-    mirrors every pair) pass ``symmetric=True`` to skip detection and
-    select the fast recurrence directly -- same results, measured ~40%
-    cheaper per 3-hop run. Passing it on an asymmetric graph is a
-    contract violation (nodes outside the out-node set silently drop --
-    exactly the pre-round-6 behavior).
+    degenerates to the in-edge-only form -- same values, fewer operators.
+    Callers whose edges are symmetric BY CONSTRUCTION (copurchase_edges
+    mirrors every pair) pass ``symmetric=True`` to skip the universe
+    flags and select the fast recurrence directly -- same results,
+    measured ~40% cheaper per 3-hop run. Passing it on an asymmetric
+    graph is a contract violation: nodes outside the out-node set
+    silently drop.
 
-    Per hop: ONE edge-side shuffle join + one keyed aggregation (+ on the
-    general path: a node-sized left join and a 1-row broadcast of the
-    dangling mass -- never edge-sized). Returns
+    The pair stream is checkpointed FIRST (_ckpt_edges) and the universe
+    derives from the checkpoint, so the (possibly expensive) edge build
+    executes exactly once. Per hop: ONE edge-side join + one keyed
+    aggregation (+ on the general path: a node-sized left join and a
+    1-row broadcast of the dangling mass -- never edge-sized). Returns
     (NODE, RANK_PICOS, N_NEIGHBORS) where N_NEIGHBORS is the out-degree
     (0 for dangling nodes)."""
-    ed, nd, n, n_out, n_in = _graph_prep(edges, checkpoint, symmetric)
-    if n == 0:
-        return edges.sparkSession.createDataFrame(
-            [], "NODE long, RANK_PICOS long, N_NEIGHBORS long"
-        )
-    return _pagerank_core(
-        ed, nd, n, n_out, n_in, iterations, scale, damping_pct, checkpoint
-    )
-
-
-def _pagerank_core(
-    ed: DataFrame,
-    nd: DataFrame,
-    n: int,
-    n_out: int,
-    n_in: int,
-    iterations: int,
-    scale: int,
-    damping_pct: int,
-    checkpoint: bool,
-    merge_hint: bool = False,
-) -> DataFrame:
-    """The hop loop shared by :func:`pagerank` (checkpointed in-memory
-    edges) and :func:`pagerank_bucketed` (catalog-bucketed edges;
-    ``merge_hint`` forces SMJ so the bucketed layout is provably used --
-    each hop's executed plan has NO exchange above the edge scan).
-
-    ``ed`` may carry DEG (the bucketed table bakes it into the layout) or
-    be the bare (SRC, DST) pair stream -- in the latter case DEG rides the
-    NODE-SIZED rank side (one node x node join inside the broadcast/hash
-    subtree), so each hop does exactly ONE edge-sized join and the edge
-    bytes scanned per hop shrink by a column. Contributions are identical
-    integers either way (exact lattice; join shape cannot change them)."""
-    tele = ((100 - damping_pct) * scale) // (100 * n)
-    deg_on_edges = "DEG" in ed.columns
-    ranks = nd.select("NODE", F.lit(scale // n).cast("long").alias("R"))
-    fast = n_out == n and n_in == n
-    dang = nd.where(F.col("DEG") == 0).select("NODE") if not fast else None
-    for _ in range(iterations):
-        e = ed.hint("merge") if merge_hint else ed
-        r_src = ranks if deg_on_edges else ranks.join(nd, "NODE")
-        r = r_src if merge_hint else _node_side(r_src, n)
-        contrib = (
-            e.join(r, e["SRC"] == r["NODE"])
-            .select(
-                F.col("DST"),
-                F.expr(f"({damping_pct} * R) div (100 * DEG)").cast("long").alias("__c"),
-            )
-            .groupBy(F.col("DST").alias("NODE"))
-            .agg(F.sum("__c").cast("long").alias("__S"))
-        )
-        if fast:
-            ranks = contrib.select("NODE", (F.col("__S") + F.lit(tele)).cast("long").alias("R"))
-        else:
-            dmass = (
-                ranks.join(dang, "NODE", "left_semi")
-                .agg(F.coalesce(F.sum("R"), F.lit(0)).cast("long").alias("__D"))
-            )
-            ranks = (
-                nd.select("NODE")
-                .join(contrib, "NODE", "left")
-                .crossJoin(F.broadcast(dmass))
-                .select(
-                    "NODE",
-                    (
-                        F.coalesce(F.col("__S"), F.lit(0))
-                        + F.lit(tele)
-                        + F.expr(f"({damping_pct} * __D) div (100 * {n})")
-                    )
-                    .cast("long")
-                    .alias("R"),
-                )
-            )
-        if checkpoint:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks.join(nd, "NODE").select(
-        F.col("NODE"),
-        F.col("R").alias("RANK_PICOS"),
-        F.col("DEG").alias("N_NEIGHBORS"),
-    )
+    ed, _ = _ckpt_edges(edges.select("SRC", "DST"), checkpoint)
+    return _walk(ed, iterations, scale, damping_pct, checkpoint, symmetric=symmetric)
 
 
 def pagerank_bucketed(
@@ -498,64 +562,24 @@ def pagerank_bucketed(
     rows, never the edge cardinality. At 100 TB this converts the
     iterative workload's dominant cost -- re-shuffling the edge table
     every hop -- into a one-time ingest write, exactly like the
-    orders_lineitem_revenue_bucketed recipe. Results are bit-identical to
-    :func:`pagerank` (same lattice recurrence, layout-only change).
+    orders_lineitem_revenue_bucketed recipe. The node universe is built
+    from the bucketed scan by the same prep as :func:`pagerank`. Results
+    are bit-identical to :func:`pagerank` (same lattice recurrence,
+    layout-only change).
     """
-    from ..sources.parquet_io import write_bucketed
-
-    spark = edges.sparkSession
     # NB: deg + join + write share ONE query execution (exchange reuse
     # covers the build); checkpointing the pair stream first was measured
     # SLOWER at the decade point (an extra full materialization pass)
     deg = edges.groupBy("SRC").agg(F.count(F.lit(1)).cast("long").alias("DEG"))
-    write_bucketed(
-        edges.join(deg, "SRC"),
-        table,
-        ["SRC"],
-        num_buckets,
-        sort_cols=["SRC"],
-        path=path,
-    )
-    ed = spark.table(table)
-    if symmetric:  # caller contract: mirror edges -> universe == out-nodes
-        nd = ed.select(F.col("SRC").alias("NODE"), "DEG").distinct()
-        if checkpoint:
-            nd = nd.localCheckpoint(eager=False)
-        n = nd.count()
-        if n == 0:
-            return spark.createDataFrame(
-                [], "NODE long, RANK_PICOS long, N_NEIGHBORS long"
-            )
-        n_out = n_in = n
-    else:
-        nodes = (
-            ed.select(F.col("SRC").alias("NODE"))
-            .unionAll(ed.select(F.col("DST").alias("NODE")))
-            .distinct()
-        )
-        nd = nodes.join(
-            ed.select("SRC", "DEG").distinct(), nodes["NODE"] == F.col("SRC"), "left"
-        ).select("NODE", F.coalesce(F.col("DEG"), F.lit(0)).cast("long").alias("DEG"))
-        if checkpoint:
-            nd = nd.localCheckpoint(eager=False)
-        n = nd.count()
-        if n == 0:
-            return spark.createDataFrame(
-                [], "NODE long, RANK_PICOS long, N_NEIGHBORS long"
-            )
-        n_out = nd.where(F.col("DEG") > 0).count()
-        n_in = ed.select("DST").distinct().count()
-    return _pagerank_core(
-        ed,
-        nd,
-        n,
-        n_out,
-        n_in,
+    ed = _write_bucketed(edges.join(deg, "SRC"), table, "SRC", num_buckets, path)
+    return _walk(
+        ed.select("SRC", "DST", F.col("DEG").alias("OUT")),
         iterations,
         scale,
         damping_pct,
         checkpoint,
-        merge_hint=True,
+        symmetric=symmetric,
+        buckets=num_buckets,
     )
 
 
@@ -571,84 +595,111 @@ def personalized_pagerank(
     """Personalized PageRank (random walk with restart to a SEED set) --
     the related-items primitive: rank every node by proximity to the
     seeds. Identical machinery to :func:`pagerank` (join+agg hops on the
-    integer picos lattice, per-round localCheckpoint, oracle-replayable),
+    integer picos lattice, per-hop localCheckpoint, oracle-replayable),
     except mass starts on -- and teleports back to -- the seeds only:
     dangling mass returns to the SEED set (the restart distribution), and
     the hop is computed over the full node universe so a seed with
     out-edges but no in-edges keeps receiving its restart mass instead of
-    vanishing after hop 1 (the round-5 VERDICT defect). Seeds absent from
-    the node universe are dropped identically on both engines (the
-    surviving-seed count divides the teleport mass); an all-absent seed
-    set returns the empty frame. Fast path as in :func:`pagerank`: on a
-    symmetric graph the universe left-join and dangling stage degenerate
-    away and the historical recurrence replays bit-identically.
+    vanishing after hop 1. Seeds absent from the node universe are
+    dropped identically on both engines (the surviving-seed count divides
+    the teleport mass); an all-absent seed set returns the empty frame.
+    Fast path as in :func:`pagerank`: on a symmetric graph the universe
+    left-join and dangling stage degenerate away and the in-edge-only
+    recurrence replays bit-identically.
     """
-    ed, nd, n, n_out, n_in = _graph_prep(edges, checkpoint, symmetric)
-    if n == 0:
-        return edges.sparkSession.createDataFrame(
-            [], "NODE long, RANK_PICOS long, N_NEIGHBORS long"
-        )
-    seed_lits = [int(x) for x in seeds]
-    k = nd.where(F.col("NODE").isin(seed_lits)).count()  # bounded scalar
-    if k == 0:
-        return edges.sparkSession.createDataFrame(
-            [], "NODE long, RANK_PICOS long, N_NEIGHBORS long"
-        )
-    tele_seed = ((100 - damping_pct) * scale) // (100 * k)
-    is_seed = F.col("NODE").isin(seed_lits)
-    fast = n_out == n and n_in == n
-    dang = nd.where(F.col("DEG") == 0).select("NODE") if not fast else None
-    ranks = nd.select(
-        "NODE",
-        F.when(is_seed, F.lit(scale // k)).otherwise(F.lit(0)).cast("long").alias("R"),
+    ed, _ = _ckpt_edges(edges.select("SRC", "DST"), checkpoint)
+    return _walk(
+        ed,
+        iterations,
+        scale,
+        damping_pct,
+        checkpoint,
+        seeds=[int(x) for x in seeds],
+        symmetric=symmetric,
     )
-    for _ in range(iterations):
-        # DEG rides the node-sized side (see _pagerank_core): one edge
-        # join per hop over the bare (SRC, DST) checkpoint
-        r = _node_side(ranks.join(nd, "NODE"), n)
-        contrib = (
-            ed.join(r, ed["SRC"] == r["NODE"])
-            .select(
-                F.col("DST"),
-                F.expr(f"({damping_pct} * R) div (100 * DEG)").cast("long").alias("__c"),
-            )
-            .groupBy(F.col("DST").alias("NODE"))
-            .agg(F.sum("__c").cast("long").alias("__S"))
-        )
-        if fast:
-            ranks = contrib.select(
-                "NODE",
-                (F.col("__S") + F.when(is_seed, F.lit(tele_seed)).otherwise(F.lit(0)))
-                .cast("long")
-                .alias("R"),
-            )
-        else:
-            dmass = (
-                ranks.join(dang, "NODE", "left_semi")
-                .agg(F.coalesce(F.sum("R"), F.lit(0)).cast("long").alias("__D"))
-            )
-            ranks = (
-                nd.select("NODE")
-                .join(contrib, "NODE", "left")
-                .crossJoin(F.broadcast(dmass))
-                .select(
-                    "NODE",
-                    (
-                        F.coalesce(F.col("__S"), F.lit(0))
-                        + F.when(
-                            is_seed,
-                            F.lit(tele_seed)
-                            + F.expr(f"({damping_pct} * __D) div (100 * {k})"),
-                        ).otherwise(F.lit(0))
-                    )
-                    .cast("long")
-                    .alias("R"),
-                )
-            )
-        if checkpoint:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks.join(nd, "NODE").select(
-        F.col("NODE"), F.col("R").alias("RANK_PICOS"), F.col("DEG").alias("N_NEIGHBORS")
+
+
+def pagerank_weighted(
+    edges: DataFrame,
+    iterations: int = 3,
+    scale: int = PR_SCALE,
+    damping_pct: int = 85,
+    weight_col: str = "WEIGHT",
+    checkpoint: bool = True,
+) -> DataFrame:
+    """PageRank over a WEIGHTED directed edge list: each node splits its
+    rank across out-edges in proportion to integer edge weights
+    (contribution = damping * r * w div (100 * strength(u)), strength =
+    sum of u's out-weights) -- the co-purchase-count / click-count /
+    citation-frequency form of the walk, where a 10x-heavier edge carries
+    10x the mass. Same exact-lattice discipline as :func:`pagerank`
+    (BIGINT picos, floor division, localCheckpoint per hop) and the same
+    universe recurrence: ranks live on the full node set via left join +
+    coalesce, dangling (zero-strength) nodes redistribute uniformly via a
+    1-row broadcast; on a graph where every node has out- and in-edges
+    the dangling mass is 0 and the fast recurrence of :func:`pagerank`
+    applies. With all weights equal it reduces exactly to
+    :func:`pagerank` (pinned in test_graph).
+
+    Weights must be positive integers -- rows with a non-positive or NULL
+    weight are dropped before anything else (a zero/negative weight makes
+    strength semantics undefined); parallel edges are summed into one
+    weighted edge first. Per hop: ONE edge-sized shuffle join +
+    one keyed aggregation, exactly the unweighted cost -- the weight is a
+    column, not extra rows. Overflow: r * w <= scale * total-weight must
+    stay under 2^63; at the default picos scale that bounds per-edge
+    weights to ~9e6 -- rescale weights (only ratios matter) beyond that.
+
+    Returns (NODE, RANK_PICOS, OUT_STRENGTH)."""
+    ed, _ = _ckpt_edges(_weighted_edges(edges, weight_col), checkpoint)
+    return _walk(ed, iterations, scale, damping_pct, checkpoint)
+
+
+def _weighted_edges(edges: DataFrame, weight_col: str) -> DataFrame:
+    """(SRC, DST, W): positive long weights, parallel edges pre-summed."""
+    return (
+        edges.select("SRC", "DST", F.col(weight_col).cast("long").alias("W"))
+        .where(F.col("W") > 0)
+        .groupBy("SRC", "DST")
+        .agg(F.sum("W").cast("long").alias("W"))
+    )
+
+
+def pagerank_weighted_bucketed(
+    edges: DataFrame,
+    table: str,
+    iterations: int = 3,
+    scale: int = PR_SCALE,
+    damping_pct: int = 85,
+    weight_col: str = "WEIGHT",
+    num_buckets: int = 8,
+    path: str | None = None,
+    checkpoint: bool = True,
+) -> DataFrame:
+    """:func:`pagerank_weighted` for long-running iterative deployments:
+    the weight- and strength-annotated edge table (SRC, DST, W, S) is
+    persisted ONCE, hash-bucketed + sorted on SRC
+    (sources.write_bucketed), and every hop's rank join is forced to
+    sort-merge -- the executed per-hop plan reads the edge side
+    bucket-local with ZERO exchange and zero sort above its scan (pinned
+    in tests/test_graph.py), only the node-sized rank table moves per
+    iteration. Exactly :func:`pagerank_bucketed`'s layout conversion
+    applied to the weighted walk: the per-hop edge reshuffle -- the
+    dominant iterative cost at 100 TB -- becomes a one-time ingest write.
+    Results are bit-identical to :func:`pagerank_weighted` (same lattice
+    recurrence, layout-only change; pinned in test_graph)."""
+    # strength + join + write share ONE query execution (see
+    # pagerank_bucketed: a pre-write checkpoint measured slower)
+    ew = _weighted_edges(edges, weight_col)
+    st = ew.groupBy("SRC").agg(F.sum("W").cast("long").alias("S"))
+    ed = _write_bucketed(ew.join(st, "SRC"), table, "SRC", num_buckets, path)
+    return _walk(
+        ed.select("SRC", "DST", "W", F.col("S").alias("OUT")),
+        iterations,
+        scale,
+        damping_pct,
+        checkpoint,
+        buckets=num_buckets,
     )
 
 
@@ -673,22 +724,16 @@ def label_propagation(
     shuffle after it carries at most (node x distinct-neighbor-label)
     rows -- and a node-keyed top-1 window over that bounded frame. The
     node universe rides a left join + coalesce, so isolated-side nodes
-    never vanish (the round-6 pagerank discipline). Lineage is cut per
+    never vanish (the pagerank universe discipline). Lineage is cut per
     round with localCheckpoint. Returns (NODE, COMMUNITY).
     """
     # edges first (_ckpt_edges: one materialization + width policy), then
-    # the node universe FROM the checkpoint -- the old parallel-lineage
-    # shape re-executed the edge build once per consumer query execution
+    # the node universe FROM the checkpoint through the shared prep -- a
+    # universe built on parallel lineage would re-execute the edge build
+    # once per consumer query execution
     ed, _ = _ckpt_edges(edges.select("SRC", "DST").distinct(), checkpoint)
-    nodes = (
-        ed.select(F.col("SRC").alias("NODE"))
-        .unionAll(ed.select(F.col("DST").alias("NODE")))
-        .distinct()
-    )
-    if checkpoint:
-        nodes = nodes.localCheckpoint(eager=False)
+    nodes, n, *_ = _node_prep(ed, checkpoint)
     labels = nodes.select("NODE", F.col("NODE").alias("L"))
-    n = nodes.count()  # bounded driver scalar: sizes the hop-join policy
     from pyspark.sql import Window
 
     for _ in range(iterations):
@@ -747,28 +792,9 @@ def hits(
 
     Returns (NODE, AUTH_NANOS, HUB_NANOS, IN_DEGREE, OUT_DEGREE)."""
     ed, _ = _ckpt_edges(edges.select("SRC", "DST").distinct(), checkpoint)
-    # universe + BOTH degrees from ONE shuffle over the checkpoint (the
-    # _graph_prep flags pattern): the old shape paid a union-distinct for
-    # nodes plus two fresh edge-sized degree aggregations at the end
-    flags = ed.select(F.col("SRC").alias("NODE"), F.lit(1).alias("__o")).unionAll(
-        ed.select(F.col("DST").alias("NODE"), F.lit(0).alias("__o"))
-    )
-    nodes = flags.groupBy("NODE").agg(
-        F.sum("__o").cast("long").alias("OUT_DEGREE"),
-        F.sum(1 - F.col("__o")).cast("long").alias("IN_DEGREE"),
-    )
-    if checkpoint:
-        nodes = nodes.localCheckpoint(eager=False)
-    n = nodes.count()  # the one bounded driver scalar
-    if n == 0:
-        return edges.sparkSession.createDataFrame(
-            [], "NODE long, AUTH_NANOS long, HUB_NANOS long, IN_DEGREE long, OUT_DEGREE long"
-        )
-    if scale <= n:
-        # the docstring constraint, enforced (ADVICE r6): scale <= n floors
-        # the uniform init to 0, making the first half-step total 0 and
-        # silently NULLing every score through `div __T`
-        raise ValueError(f"scale ({scale}) must exceed the node count ({n})")
+    # universe + BOTH degrees from the shared prep's one shuffle over the
+    # checkpoint, so the final select needs no fresh degree aggregations
+    nodes, n, *_ = _node_prep(ed, checkpoint)
     return _hits_core(ed, ed, nodes, n, iterations, scale, checkpoint)
 
 
@@ -780,67 +806,53 @@ def _hits_core(
     iterations: int,
     scale: int,
     checkpoint: bool,
-    merge_hint: bool = False,
+    buckets: int = 0,
 ) -> DataFrame:
     """The half-step loop shared by :func:`hits` (one in-memory edge
     frame for both joins) and :func:`hits_bucketed` (``ed_src`` bucketed
     on SRC for the hub-pooling join, ``ed_dst`` bucketed on DST for the
-    auth-pooling join; ``merge_hint`` forces SMJ so each half-step's
+    auth-pooling join, both with ``buckets`` buckets, so each half-step's
     executed plan has NO exchange above its co-located edge scan).
 
-    ``nodes`` carries (NODE, IN_DEGREE, OUT_DEGREE) -- both callers
-    compute degrees in their prep (plain hits folds them into the same
-    single shuffle that builds the universe; the bucketed twin keeps its
-    exchange-free per-copy aggregations), so the final select is one
-    node-sized join instead of two fresh edge-sized degree shuffles."""
-    hubs = nodes.select("NODE", F.lit(scale // n).cast("long").alias("H"))
-    auth = nodes.select("NODE", F.lit(scale // n).cast("long").alias("A"))
-    es = ed_src.hint("merge") if merge_hint else ed_src
-    ed = ed_dst.hint("merge") if merge_hint else ed_dst
-    for _ in range(iterations):
-        hb = hubs if merge_hint else _node_side(hubs, n)
-        ap = (
-            es.join(hb, es["SRC"] == hb["NODE"])
-            .groupBy(F.col("DST").alias("NODE"))
-            .agg(F.sum("H").cast("long").alias("__S"))
+    ``nodes`` carries (NODE, OUT, IN) degrees -- both callers compute them
+    in their prep -- so the final select is one node-sized join."""
+    if n == 0:
+        return nodes.sparkSession.createDataFrame(
+            [], "NODE long, AUTH_NANOS long, HUB_NANOS long, IN_DEGREE long, OUT_DEGREE long"
         )
-        at = ap.agg(F.sum("__S").cast("long").alias("__T"))
-        auth = (
-            nodes.join(ap, "NODE", "left")
-            .crossJoin(F.broadcast(at))
+    if scale <= n:
+        # the docstring constraint, enforced: scale <= n floors the
+        # uniform init to 0, making the first half-step total 0 and
+        # silently NULLing every score through `div __T`
+        raise ValueError(f"scale ({scale}) must exceed the node count ({n})")
+    score = {c: nodes.select("NODE", F.lit(scale // n).cast("long").alias(c)) for c in "AH"}
+    for step in range(2 * iterations):
+        # even steps pool hub mass into each edge's DST (authorities), odd
+        # steps pool the new authority mass into each edge's SRC (hubs)
+        out, src, key, e = (
+            ("A", "H", "SRC", ed_src) if step % 2 == 0 else ("H", "A", "DST", ed_dst)
+        )
+        s = _hop(e, score[src], n, key, F.col(src), buckets)
+        total = s.agg(F.sum("__S").cast("long").alias("__T"))
+        score[out] = (
+            nodes.join(s, "NODE", "left")
+            .crossJoin(F.broadcast(total))
             .select(
                 "NODE",
-                F.expr(f"(coalesce(__S, 0L) * {scale}) div __T").cast("long").alias("A"),
+                F.expr(f"(coalesce(__S, 0L) * {scale}) div __T").cast("long").alias(out),
             )
         )
         if checkpoint:
-            auth = auth.localCheckpoint(eager=False)
-        au = auth if merge_hint else _node_side(auth, n)
-        hp = (
-            ed.join(au, ed["DST"] == au["NODE"])
-            .groupBy(F.col("SRC").alias("NODE"))
-            .agg(F.sum("A").cast("long").alias("__S"))
-        )
-        ht = hp.agg(F.sum("__S").cast("long").alias("__T"))
-        hubs = (
-            nodes.join(hp, "NODE", "left")
-            .crossJoin(F.broadcast(ht))
-            .select(
-                "NODE",
-                F.expr(f"(coalesce(__S, 0L) * {scale}) div __T").cast("long").alias("H"),
-            )
-        )
-        if checkpoint:
-            hubs = hubs.localCheckpoint(eager=False)
+            score[out] = score[out].localCheckpoint(eager=False)
     return (
-        auth.join(hubs, "NODE")
+        score["A"].join(score["H"], "NODE")
         .join(nodes, "NODE")
         .select(
             "NODE",
             F.col("A").alias("AUTH_NANOS"),
             F.col("H").alias("HUB_NANOS"),
-            F.coalesce(F.col("IN_DEGREE"), F.lit(0)).cast("long").alias("IN_DEGREE"),
-            F.coalesce(F.col("OUT_DEGREE"), F.lit(0)).cast("long").alias("OUT_DEGREE"),
+            F.coalesce(F.col("IN"), F.lit(0)).cast("long").alias("IN_DEGREE"),
+            F.coalesce(F.col("OUT"), F.lit(0)).cast("long").alias("OUT_DEGREE"),
         )
     )
 
@@ -867,46 +879,34 @@ def hits_bucketed(
     iterative workload in which no edge byte ever re-shuffles. Results
     are bit-identical to :func:`hits` (same lattice trajectory,
     layout-only change)."""
-    from ..sources.parquet_io import write_bucketed
-
-    spark = edges.sparkSession
-    # with checkpoint, one materialization feeds BOTH bucketed writes (the
-    # old shape ran the distinct once per write), at measured-row width
+    # with checkpoint, one materialization feeds BOTH bucketed writes, at
+    # measured-row width
     ed, _ = _ckpt_edges(edges.select("SRC", "DST").distinct(), checkpoint)
-    write_bucketed(ed, f"{table}_src", ["SRC"], num_buckets, sort_cols=["SRC"],
-                   path=os.path.join(path, "src") if path else None)
-    write_bucketed(ed, f"{table}_dst", ["DST"], num_buckets, sort_cols=["DST"],
-                   path=os.path.join(path, "dst") if path else None)
-    ed_src, ed_dst = spark.table(f"{table}_src"), spark.table(f"{table}_dst")
+    ed_src, ed_dst = (
+        _write_bucketed(
+            ed, f"{table}_{k.lower()}", k, num_buckets,
+            os.path.join(path, k.lower()) if path else None,
+        )
+        for k in ("SRC", "DST")
+    )
     # each degree agg groups on its copy's bucket key (exchange-free
     # map-side aggregation); the full join assembles the universe with
-    # both degrees, replacing the old union-distinct plus the two fresh
-    # edge-sized degree shuffles the final select used to pay
+    # both degrees
     outdeg = ed_src.groupBy(F.col("SRC").alias("NODE")).agg(
-        F.count(F.lit(1)).cast("long").alias("OUT_DEGREE")
+        F.count(F.lit(1)).cast("long").alias("OUT")
     )
     indeg = ed_dst.groupBy(F.col("DST").alias("NODE")).agg(
-        F.count(F.lit(1)).cast("long").alias("IN_DEGREE")
+        F.count(F.lit(1)).cast("long").alias("IN")
     )
-    nodes = (
-        outdeg.join(indeg, "NODE", "full")
-        .select(
-            "NODE",
-            F.coalesce(F.col("OUT_DEGREE"), F.lit(0)).cast("long").alias("OUT_DEGREE"),
-            F.coalesce(F.col("IN_DEGREE"), F.lit(0)).cast("long").alias("IN_DEGREE"),
-        )
+    nodes = outdeg.join(indeg, "NODE", "full").select(
+        "NODE",
+        F.coalesce(F.col("OUT"), F.lit(0)).cast("long").alias("OUT"),
+        F.coalesce(F.col("IN"), F.lit(0)).cast("long").alias("IN"),
     )
     if checkpoint:
         nodes = nodes.localCheckpoint(eager=False)
-    n = nodes.count()
-    if n == 0:
-        return spark.createDataFrame(
-            [], "NODE long, AUTH_NANOS long, HUB_NANOS long, IN_DEGREE long, OUT_DEGREE long"
-        )
-    if scale <= n:
-        raise ValueError(f"scale ({scale}) must exceed the node count ({n})")
     return _hits_core(
-        ed_src, ed_dst, nodes, n, iterations, scale, checkpoint, merge_hint=True
+        ed_src, ed_dst, nodes, nodes.count(), iterations, scale, checkpoint, num_buckets
     )
 
 
@@ -1053,11 +1053,12 @@ def katz_centrality(
     high even if those walkers also point elsewhere -- the influence form
     of the walk.
 
-    Overflow guard (ADVICE r7: the old ``alpha_ppm * max_in_degree < 1e6``
-    spectral-radius bound is an INFINITE-series condition -- the truncated
-    T-hop sum is finite for any alpha, and in-degree grows with data scale,
-    so the old guard hard-failed exact, representable results): the guard
-    now replays the worst-case accumulator exactly on driver integers --
+    Overflow guard: a spectral-radius bound such as
+    ``alpha_ppm * max_in_degree < 1e6`` is an INFINITE-series condition --
+    the truncated T-hop sum is finite for any alpha, and in-degree grows
+    with data scale, so such a bound would reject exact, representable
+    results. The guard instead replays the worst-case accumulator exactly
+    on driver integers --
     ``X_{t+1} = max_in_degree * ((alpha_ppm * (scale + X_t)) div 1e6)`` --
     and raises only if a per-edge product or a per-node sum could actually
     exceed BIGINT within the requested ``iterations``. Per hop: ONE
@@ -1067,27 +1068,8 @@ def katz_centrality(
     Returns (NODE, KATZ_NANOS, IN_DEGREE)."""
     if not 0 < alpha_ppm < 10**6:
         raise ValueError(f"alpha_ppm must be in (0, 1e6), got {alpha_ppm}")
-    # edges first (_ckpt_edges), then universe + in-degree from ONE
-    # shuffle over the checkpoint (the _graph_prep flags pattern); n and
-    # max_in ride a single scalar job over the node frame
     ed, _ = _ckpt_edges(edges.select("SRC", "DST").distinct(), checkpoint)
-    flags = ed.select(F.col("SRC").alias("NODE"), F.lit(0).alias("__i")).unionAll(
-        ed.select(F.col("DST").alias("NODE"), F.lit(1).alias("__i"))
-    )
-    nodes = flags.groupBy("NODE").agg(
-        F.sum("__i").cast("long").alias("IN_DEGREE")
-    )
-    if checkpoint:
-        nodes = nodes.localCheckpoint(eager=False)
-    srow = nodes.agg(
-        F.count(F.lit(1)).alias("n"), F.max("IN_DEGREE").alias("m")
-    ).first()
-    n = int(srow["n"] or 0)
-    max_in = int(srow["m"] or 0)  # bounded driver scalar
-    # exact worst-case replay of the lattice recurrence on driver ints:
-    # every node's X is bounded by X_{t+1} = max_in * ((alpha_ppm *
-    # (scale + X_t)) div 1e6); raise only if the per-edge product or the
-    # per-node sum could actually leave BIGINT within `iterations`
+    nodes, n, _, _, max_in, _ = _node_prep(ed, checkpoint)
     worst = 0
     for hop in range(1, iterations + 1):
         per_edge_product = alpha_ppm * (scale + worst)
@@ -1099,33 +1081,19 @@ def katz_centrality(
                 f"max_in_degree={max_in}, scale={scale}) -- lower "
                 "alpha_ppm, scale, or iterations"
             )
+    contrib = F.expr(f"({alpha_ppm} * ({scale} + X)) div 1000000").cast("long")
     x = nodes.select("NODE", F.lit(0).cast("long").alias("X"))
     for _ in range(iterations):
-        xs = _node_side(x, n)
-        contrib = (
-            ed.join(xs, ed["SRC"] == xs["NODE"])
-            .select(
-                F.col("DST"),
-                F.expr(f"({alpha_ppm} * ({scale} + X)) div 1000000")
-                .cast("long")
-                .alias("__c"),
-            )
-            .groupBy(F.col("DST").alias("NODE"))
-            .agg(F.sum("__c").cast("long").alias("__S"))
-        )
-        x = (
-            nodes.join(contrib, "NODE", "left")
-            .select("NODE", F.coalesce(F.col("__S"), F.lit(0)).cast("long").alias("X"))
+        s = _hop(ed, x, n, "SRC", contrib)
+        x = nodes.join(s, "NODE", "left").select(
+            "NODE", F.coalesce(F.col("__S"), F.lit(0)).cast("long").alias("X")
         )
         if checkpoint:
             x = x.localCheckpoint(eager=False)
-    return (
-        x.join(nodes, "NODE", "left")
-        .select(
-            "NODE",
-            F.col("X").alias("KATZ_NANOS"),
-            F.coalesce(F.col("IN_DEGREE"), F.lit(0)).cast("long").alias("IN_DEGREE"),
-        )
+    return x.join(nodes, "NODE", "left").select(
+        "NODE",
+        F.col("X").alias("KATZ_NANOS"),
+        F.coalesce(F.col("IN"), F.lit(0)).cast("long").alias("IN_DEGREE"),
     )
 
 
@@ -1189,198 +1157,6 @@ def bfs_hops(
     return visited
 
 
-def pagerank_weighted(
-    edges: DataFrame,
-    iterations: int = 3,
-    scale: int = PR_SCALE,
-    damping_pct: int = 85,
-    weight_col: str = "WEIGHT",
-    checkpoint: bool = True,
-) -> DataFrame:
-    """PageRank over a WEIGHTED directed edge list: each node splits its
-    rank across out-edges in proportion to integer edge weights
-    (contribution = damping * r * w div (100 * strength(u)), strength =
-    sum of u's out-weights) -- the co-purchase-count / click-count /
-    citation-frequency form of the walk, where a 10x-heavier edge carries
-    10x the mass. Same exact-lattice discipline as :func:`pagerank`
-    (BIGINT picos, floor division, localCheckpoint per hop) and the same
-    universe recurrence: ranks live on the full node set via left join +
-    coalesce, dangling (zero-strength) nodes redistribute uniformly via a
-    1-row broadcast. With all weights equal it reduces exactly to
-    :func:`pagerank` (pinned in test_graph).
-
-    Weights must be positive integers -- rows with a non-positive or NULL
-    weight are dropped before anything else (a zero/negative weight makes
-    strength semantics undefined); parallel edges are summed into one
-    weighted edge first. Per hop: ONE edge-sized shuffle join +
-    one keyed aggregation, exactly the unweighted cost -- the weight is a
-    column, not extra rows. Overflow: r * w <= scale * total-weight must
-    stay under 2^63; at the default picos scale that bounds per-edge
-    weights to ~9e6 -- rescale weights (only ratios matter) beyond that.
-
-    Returns (NODE, RANK_PICOS, OUT_STRENGTH)."""
-    # weighted edges first (_ckpt_edges: one materialization + width
-    # policy); the node universe WITH out-strength comes from ONE shuffle
-    # over the checkpoint (SRC arm carries __w, DST arm carries 0, so
-    # sum(__w) per NODE is exactly the out-strength -- 0 for dangling)
-    ew, _ = _ckpt_edges(_weighted_edges(edges, weight_col), checkpoint)
-    flags = ew.select(F.col("SRC").alias("NODE"), F.col("__w")).unionAll(
-        ew.select(F.col("DST").alias("NODE"), F.lit(0).cast("long").alias("__w"))
-    )
-    nd = flags.groupBy("NODE").agg(F.sum("__w").cast("long").alias("__S"))
-    if checkpoint:
-        nd = nd.localCheckpoint(eager=False)
-    n = nd.count()
-    if n == 0:
-        return edges.sparkSession.createDataFrame(
-            [], "NODE long, RANK_PICOS long, OUT_STRENGTH long"
-        )
-    return _pagerank_weighted_core(
-        ew, nd, n, iterations, scale, damping_pct, checkpoint
-    )
-
-
-def _weighted_edges(edges: DataFrame, weight_col: str) -> DataFrame:
-    """(SRC, DST, __w): positive long weights, parallel edges pre-summed."""
-    return (
-        edges.select("SRC", "DST", F.col(weight_col).cast("long").alias("__w"))
-        .where(F.col("__w") > 0)
-        .groupBy("SRC", "DST")
-        .agg(F.sum("__w").cast("long").alias("__w"))
-    )
-
-
-def _pagerank_weighted_core(
-    ed: DataFrame,
-    nd: DataFrame,
-    n: int,
-    iterations: int,
-    scale: int,
-    damping_pct: int,
-    checkpoint: bool,
-    merge_hint: bool = False,
-) -> DataFrame:
-    """The weighted hop loop shared by :func:`pagerank_weighted`
-    (checkpointed in-memory edges) and :func:`pagerank_weighted_bucketed`
-    (catalog-bucketed edges; ``merge_hint`` forces SMJ so each hop's
-    executed plan has NO exchange above the bucketed edge scan -- the
-    same discipline as :func:`_pagerank_core`). ``ed`` carries
-    (SRC, DST, __w) -- plus __S when the bucketed table bakes strength
-    into the layout; otherwise __S rides the node-sized rank side (one
-    edge join per hop, see :func:`_pagerank_core`); ``nd`` carries
-    (NODE, __S)."""
-    tele = ((100 - damping_pct) * scale) // (100 * n)
-    strength_on_edges = "__S" in ed.columns
-    dang = nd.where(F.col("__S") == 0).select("NODE")
-    ranks = nd.select("NODE", F.lit(scale // n).cast("long").alias("R"))
-    for _ in range(iterations):
-        e = ed.hint("merge") if merge_hint else ed
-        r_src = ranks if strength_on_edges else ranks.join(nd, "NODE")
-        r = r_src if merge_hint else _node_side(r_src, n)
-        contrib = (
-            e.join(r, e["SRC"] == r["NODE"])
-            .select(
-                F.col("DST"),
-                F.expr(f"({damping_pct} * R * __w) div (100 * __S)")
-                .cast("long")
-                .alias("__c"),
-            )
-            .groupBy(F.col("DST").alias("NODE"))
-            .agg(F.sum("__c").cast("long").alias("__C"))
-        )
-        dmass = (
-            ranks.join(dang, "NODE", "left_semi")
-            .agg(F.coalesce(F.sum("R"), F.lit(0)).cast("long").alias("__D"))
-        )
-        ranks = (
-            nd.select("NODE")
-            .join(contrib, "NODE", "left")
-            .crossJoin(F.broadcast(dmass))
-            .select(
-                "NODE",
-                (
-                    F.coalesce(F.col("__C"), F.lit(0))
-                    + F.lit(tele)
-                    + F.expr(f"({damping_pct} * __D) div (100 * {n})")
-                )
-                .cast("long")
-                .alias("R"),
-            )
-        )
-        if checkpoint:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks.join(nd, "NODE").select(
-        "NODE", F.col("R").alias("RANK_PICOS"), F.col("__S").alias("OUT_STRENGTH")
-    )
-
-
-def pagerank_weighted_bucketed(
-    edges: DataFrame,
-    table: str,
-    iterations: int = 3,
-    scale: int = PR_SCALE,
-    damping_pct: int = 85,
-    weight_col: str = "WEIGHT",
-    num_buckets: int = 8,
-    path: str | None = None,
-    checkpoint: bool = True,
-) -> DataFrame:
-    """:func:`pagerank_weighted` for long-running iterative deployments
-    (VERDICT r6 item 7): the weight- and strength-annotated edge table is
-    persisted ONCE, hash-bucketed + sorted on SRC
-    (sources.write_bucketed), and every hop's rank join is forced to
-    sort-merge -- the executed per-hop plan reads the edge side
-    bucket-local with ZERO exchange and zero sort above its scan (pinned
-    in tests/test_graph.py), only the node-sized rank table moves per
-    iteration. Exactly :func:`pagerank_bucketed`'s layout conversion
-    applied to the weighted walk: the per-hop edge reshuffle -- the
-    dominant iterative cost at 100 TB -- becomes a one-time ingest write.
-    Results are bit-identical to :func:`pagerank_weighted` (same lattice
-    recurrence, layout-only change; pinned in test_graph)."""
-    from ..sources.parquet_io import write_bucketed
-
-    spark = edges.sparkSession
-    # strength + join + write share ONE query execution (see
-    # pagerank_bucketed: a pre-write checkpoint measured slower)
-    ew = _weighted_edges(edges, weight_col)
-    st = ew.groupBy("SRC").agg(F.sum("__w").cast("long").alias("__S"))
-    # persist with catalog-friendly names; re-alias to the core's contract
-    write_bucketed(
-        ew.join(st, "SRC").select(
-            "SRC", "DST", F.col("__w").alias("W"), F.col("__S").alias("S")
-        ),
-        table,
-        ["SRC"],
-        num_buckets,
-        sort_cols=["SRC"],
-        path=path,
-    )
-    ed = spark.table(table).select(
-        "SRC", "DST", F.col("W").alias("__w"), F.col("S").alias("__S")
-    )
-    # derive the node universe from the BUCKETED table too (one cheap
-    # scan; strengths ride the persisted column, no recompute of ew)
-    st_b = ed.select("SRC", "__S").distinct()
-    nodes = (
-        ed.select(F.col("SRC").alias("NODE"))
-        .unionAll(ed.select(F.col("DST").alias("NODE")))
-        .distinct()
-    )
-    nd = nodes.join(st_b, nodes["NODE"] == st_b["SRC"], "left").select(
-        "NODE", F.coalesce(F.col("__S"), F.lit(0)).cast("long").alias("__S")
-    )
-    if checkpoint:
-        nd = nd.localCheckpoint(eager=False)
-    n = nd.count()
-    if n == 0:
-        return spark.createDataFrame(
-            [], "NODE long, RANK_PICOS long, OUT_STRENGTH long"
-        )
-    return _pagerank_weighted_core(
-        ed, nd, n, iterations, scale, damping_pct, checkpoint, merge_hint=True
-    )
-
-
 def sssp_hops(
     edges: DataFrame,
     sources: list[int],
@@ -1418,8 +1194,8 @@ def sssp_hops(
     dist = spark.createDataFrame(
         [(int(s), 0) for s in sorted(set(sources))], "NODE long, DIST long"
     )
-    # checkpoint FIRST, validate against the blocks: the old order ran the
-    # edge build once for the negative-weight probe and again for the
+    # checkpoint FIRST, validate against the blocks: the other order runs
+    # the edge build once for the negative-weight probe and again for the
     # checkpoint materialization (exchange reuse does not cross query
     # executions)
     ed, e_cnt = _ckpt_edges(
@@ -1430,14 +1206,16 @@ def sssp_hops(
         raise ValueError("sssp_hops requires non-negative edge weights")
     dsize = len(set(sources))  # distance-map cardinality, tracked per round
     # the distance map can never exceed |sources| + |edges| (only DST
-    # nodes enter): when that bound fits the broadcast ceiling the policy
-    # can never flip to shuffled-hash, so the per-hop sizing counts are
-    # pure overhead -- skip them (the measured e_cnt makes the bound a
-    # certainty, not a guess)
-    cap = (
-        _BCAST_MAX_NODES if _BCAST_MAX_NODES is not None else _bcast_row_ceiling(2)
-    )
-    never_shj = e_cnt is not None and dsize + e_cnt <= cap
+    # nodes enter). When that proven bound fits the broadcast ceiling the
+    # policy can never flip to shuffled-hash, so the per-hop sizing counts
+    # are pure overhead and are skipped. With checkpoint=False the lineage
+    # is never cut, so a per-hop count would recompute every prior hop
+    # (O(h^2)): that path counts the edges once and sizes every later hop
+    # by the bound instead of trusting the seed count.
+    if e_cnt is None:
+        e_cnt = ed.count()
+    bound = dsize + e_cnt
+    fits = bound <= _bcast_row_ceiling(2)
     for h in range(max_hops):
         dm = _node_side(dist, dsize)
         relaxed = ed.join(dm, ed["SRC"] == dm["NODE"]).select(
@@ -1450,11 +1228,8 @@ def sssp_hops(
         )
         if checkpoint:
             dist = dist.localCheckpoint(eager=False)
-            if h + 1 < max_hops and not never_shj:
-                # bounded scalar sizing the next round's policy; ALSO
-                # shares the round's materialization with the next hop's
-                # broadcast. With checkpoint=False the lineage is never
-                # cut, so a per-hop count would recompute every prior hop
-                # (O(h^2), ADVICE r8) -- the seed-count policy stands.
-                dsize = dist.count()
+        if h + 1 < max_hops:
+            # a checkpointed round's count is a bounded scalar that ALSO
+            # shares the round's materialization with the next hop's join
+            dsize = dist.count() if checkpoint and not fits else bound
     return dist

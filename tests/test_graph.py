@@ -247,33 +247,54 @@ def test_personalized_directed_seed_keeps_restart_mass(spark):
     assert got[4] > 0  # node 4 has no in-edges yet holds restart mass
 
 
+def _bucket_local_joins(df, key):
+    """Collect ``df`` and return, for every sort-merge join on ``key`` in
+    its final executed plan, whether that join's edge (left) side reads a
+    bucketed scan with no Exchange between the join and the scan -- i.e.
+    the hop rides the bucketed layout instead of re-shuffling the edges."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    lines = plan.split("== Initial Plan ==")[0].splitlines()
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-|"))
+
+    joins = []
+    for i, line in enumerate(lines):
+        if f"SortMergeJoin [{key}" not in line:
+            continue
+        child = depth(lines[i + 1])
+        side = []
+        for nxt in lines[i + 2:]:
+            if depth(nxt) <= child:
+                break
+            side.append(nxt)
+        joins.append(
+            not any("Exchange" in x for x in side)
+            and any("FileScan" in x and "Bucketed: true" in x for x in side)
+        )
+    return joins
+
+
 def test_pagerank_bucketed_matches_plain_and_plan(spark, tmp_path):
-    """Layout-only twin: identical values to pagerank(), and the hop join
-    reads the bucketed edge table with no exchange or sort above its scan
-    -- only the rank side is exchanged (plus the contribution agg)."""
+    """Layout-only twin: identical values to pagerank() on a symmetric
+    graph (with and without the symmetric flag) and on a directed graph
+    with dangling and teleport-only nodes, and every hop of the
+    operator's OWN plan reads the bucketed edge table with no exchange
+    above its scan -- only the rank side is exchanged (plus the
+    contribution agg)."""
     from aws_glue_cdc_metrics_job_spark.operators.graph import pagerank_bucketed
 
-    df = spark.createDataFrame(EDGES, "SRC long, DST long")
-    want = sorted(map(tuple, pagerank(df, iterations=3, checkpoint=False).collect()))
-    got_df = pagerank_bucketed(
-        df, "pr_bkt_test", iterations=3, num_buckets=4,
-        path=str(tmp_path / "pr_bkt"), checkpoint=False,
-    )
-    assert sorted(map(tuple, got_df.collect())) == want
-
-    # plan pin on a single hop over the persisted table: bucketed scan,
-    # no exchange on the edge side (SRC), rank-side + agg exchanges only
-    ed = spark.table("pr_bkt_test")
-    ranks = spark.createDataFrame([(1, PR_SCALE)], "NODE long, R long")
-    hop = (
-        ed.hint("merge").join(ranks, ed["SRC"] == ranks["NODE"])
-        .select("DST", F.expr("(85 * R) div (100 * DEG)").alias("__c"))
-        .groupBy("DST").agg(F.sum("__c").alias("S"))
-    )
-    hop.collect()
-    plan = hop._jdf.queryExecution().executedPlan().toString()
-    assert "SelectedBucketsCount" in plan or "Bucketed: true" in plan, plan
-    assert "Exchange hashpartitioning(SRC" not in plan, plan
+    for i, (edges, symmetric) in enumerate(((EDGES, False), (EDGES, True), (DIRECTED, False))):
+        df = spark.createDataFrame(edges, "SRC long, DST long")
+        want = sorted(map(tuple, pagerank(df, iterations=3, checkpoint=False).collect()))
+        got_df = pagerank_bucketed(
+            df, "pr_bkt_test", iterations=3, num_buckets=4,
+            path=str(tmp_path / f"pr_bkt{i}"), checkpoint=False, symmetric=symmetric,
+        )
+        assert sorted(map(tuple, got_df.collect())) == want, edges
+        joins = _bucket_local_joins(got_df, "SRC")
+        assert len(joins) == 3 and all(joins), (edges, joins)
     spark.sql("DROP TABLE IF EXISTS pr_bkt_test")
 
 
@@ -476,25 +497,11 @@ def test_hits_bucketed_matches_plain_and_plan(spark, tmp_path):
     assert sorted(map(tuple, got_df.collect())) == want
     assert persisted() - before == set()
 
-    # plan pins: each half-step joins its OWN copy bucket-locally
-    scores = spark.createDataFrame([(1, 10**9)], "NODE long, X long")
-    es, ed = spark.table("hits_bkt_test_src"), spark.table("hits_bkt_test_dst")
-    hub_half = (
-        es.hint("merge").join(scores, es["SRC"] == scores["NODE"])
-        .groupBy(F.col("DST")).agg(F.sum("X").alias("S"))
-    )
-    hub_half.collect()
-    plan = hub_half._jdf.queryExecution().executedPlan().toString()
-    assert "SelectedBucketsCount" in plan or "Bucketed: true" in plan, plan
-    assert "Exchange hashpartitioning(SRC" not in plan, plan
-    auth_half = (
-        ed.hint("merge").join(scores, ed["DST"] == scores["NODE"])
-        .groupBy(F.col("SRC")).agg(F.sum("X").alias("S"))
-    )
-    auth_half.collect()
-    plan = auth_half._jdf.queryExecution().executedPlan().toString()
-    assert "SelectedBucketsCount" in plan or "Bucketed: true" in plan, plan
-    assert "Exchange hashpartitioning(DST" not in plan, plan
+    # plan pins on the operator's own plan: each half-step joins its OWN
+    # copy bucket-locally (SRC copy pools hubs, DST copy pools authorities)
+    for key in ("SRC", "DST"):
+        joins = _bucket_local_joins(got_df, key)
+        assert len(joins) >= 2 and all(joins), (key, joins)
     spark.sql("DROP TABLE IF EXISTS hits_bkt_test_src")
     spark.sql("DROP TABLE IF EXISTS hits_bkt_test_dst")
 
@@ -685,40 +692,59 @@ def test_weighted_pagerank_matches_replay_and_drops_bad_weights(spark):
 
 
 def test_weighted_pagerank_bucketed_matches_plain_and_plan(spark, tmp_path):
-    """Layout-only twin (VERDICT r6 item 7): identical values to
-    pagerank_weighted(), and the hop join reads the bucketed edge table
-    with no exchange or sort above its scan -- only the rank side is
-    exchanged (plus the contribution agg)."""
+    """Layout-only twin: identical values to pagerank_weighted() on a
+    weighted graph and on a directed graph with dangling and
+    teleport-only nodes, and every hop of the operator's OWN plan reads
+    the bucketed edge table with no exchange above its scan -- only the
+    rank side is exchanged (plus the contribution agg)."""
     from aws_glue_cdc_metrics_job_spark.operators.graph import (
         pagerank_weighted,
         pagerank_weighted_bucketed,
     )
 
-    edges = [(1, 2, 3), (1, 3, 1), (2, 3, 2), (3, 1, 5), (4, 1, 2), (5, 4, 7)]
-    df = spark.createDataFrame(edges, "SRC long, DST long, WEIGHT long")
-    want = sorted(
-        map(tuple, pagerank_weighted(df, iterations=3, checkpoint=False).collect())
-    )
-    got_df = pagerank_weighted_bucketed(
-        df, "wpr_bkt_test", iterations=3, num_buckets=4,
-        path=str(tmp_path / "wpr_bkt"), checkpoint=False,
-    )
-    assert sorted(map(tuple, got_df.collect())) == want
-
-    # plan pin on a single hop over the persisted table: bucketed scan,
-    # no exchange on the edge side (SRC), rank-side + agg exchanges only
-    ed = spark.table("wpr_bkt_test")
-    ranks = spark.createDataFrame([(1, 10**12)], "NODE long, R long")
-    hop = (
-        ed.hint("merge").join(ranks, ed["SRC"] == ranks["NODE"])
-        .select("DST", F.expr("(85 * R * W) div (100 * S)").alias("__c"))
-        .groupBy("DST").agg(F.sum("__c").alias("C"))
-    )
-    hop.collect()
-    plan = hop._jdf.queryExecution().executedPlan().toString()
-    assert "SelectedBucketsCount" in plan or "Bucketed: true" in plan, plan
-    assert "Exchange hashpartitioning(SRC" not in plan, plan
+    weighted = [(1, 2, 3), (1, 3, 1), (2, 3, 2), (3, 1, 5), (4, 1, 2), (5, 4, 7)]
+    directed = [(s, d, w) for (s, d), w in zip(DIRECTED, (3, 1, 2, 2))]
+    for i, edges in enumerate((weighted, directed)):
+        df = spark.createDataFrame(edges, "SRC long, DST long, WEIGHT long")
+        want = sorted(
+            map(tuple, pagerank_weighted(df, iterations=3, checkpoint=False).collect())
+        )
+        got_df = pagerank_weighted_bucketed(
+            df, "wpr_bkt_test", iterations=3, num_buckets=4,
+            path=str(tmp_path / f"wpr_bkt{i}"), checkpoint=False,
+        )
+        assert sorted(map(tuple, got_df.collect())) == want, edges
+        joins = _bucket_local_joins(got_df, "SRC")
+        assert len(joins) == 3 and all(joins), (edges, joins)
     spark.sql("DROP TABLE IF EXISTS wpr_bkt_test")
+
+
+def test_weighted_pagerank_symmetric_takes_fast_path(spark):
+    """Every node of a symmetric weighted graph has out- and in-edges, so
+    the weighted walk takes the fast recurrence (no universe cross join
+    for the dangling mass) and still equals the pure-Python replay of the
+    general weighted recurrence."""
+    from aws_glue_cdc_metrics_job_spark.operators.graph import pagerank_weighted
+
+    edges = [(a, b, (a * 7 + b * 3) % 5 + 1) for a, b in EDGES]
+    df = spark.createDataFrame(edges, "SRC long, DST long, WEIGHT long")
+    out = pagerank_weighted(df, iterations=4, checkpoint=False)
+    assert "Cross" not in out._jdf.queryExecution().logical().toString()
+    got = {r["NODE"]: (r["RANK_PICOS"], r["OUT_STRENGTH"]) for r in out.collect()}
+
+    strength = defaultdict(int)
+    for s, _, w in edges:
+        strength[s] += w
+    nodes = sorted(strength)
+    n = len(nodes)
+    r = {v: PR_SCALE // n for v in nodes}
+    for _ in range(4):
+        nxt = {v: 0 for v in nodes}
+        for s, d, w in edges:
+            nxt[d] += 85 * r[s] * w // (100 * strength[s])
+        dm = sum(r[v] for v in nodes if strength[v] == 0)
+        r = {v: nxt[v] + 15 * PR_SCALE // (100 * n) + 85 * dm // (100 * n) for v in nodes}
+    assert got == {v: (r[v], strength[v]) for v in nodes}
 
 
 class TestSsspHops:
@@ -753,6 +779,26 @@ class TestSsspHops:
         with pytest.raises(ValueError, match="non-negative"):
             sssp_hops(edges, [1], 2)
 
+    def test_unchecked_map_respects_broadcast_ceiling(self, spark, monkeypatch):
+        """checkpoint=False cannot count the distance map per hop, so once
+        the seed count no longer bounds it the map must not be broadcast
+        on faith: past hop 1 it is sized by |sources| + |edges|, which
+        here exceeds a ceiling of a few rows, so the later hops hint
+        shuffled-hash. Values equal the checkpointed run."""
+        from aws_glue_cdc_metrics_job_spark.operators import graph as G
+
+        monkeypatch.setattr(G, "_BCAST_MAX_BYTES", 3 * (48 + 16 * 2))
+        assert G._bcast_row_ceiling(2) == 3
+        rows = [(1, 2, 4), (2, 3, 1), (1, 3, 9), (3, 4, 2), (4, 5, 1), (2, 5, 8)]
+        edges = self._edges(spark, rows)
+        unchecked = G.sssp_hops(edges, [1], 3, checkpoint=False)
+        plan = unchecked._jdf.queryExecution().analyzed().toString()
+        assert "shuffle_hash" in plan.lower(), plan
+        checked = G.sssp_hops(edges, [1], 3, checkpoint=True)
+        assert sorted(map(tuple, unchecked.collect())) == sorted(
+            map(tuple, checked.collect())
+        ) == [(1, 0), (2, 4), (3, 5), (4, 7), (5, 12)]
+
 
 class TestNodeSidePolicy:
     """Byte-derived broadcast ceiling (VERDICT r8 item 5): the default
@@ -777,6 +823,21 @@ class TestNodeSidePolicy:
         assert "shuffle_hash" in plan.lower()
         under = G._node_side(frame, 10)._jdf.queryExecution().logical().toString()
         assert "broadcast" in under.lower()
+
+    def test_byte_budget_env_is_validated(self, monkeypatch):
+        """The byte budget is the one broadcast knob; a value that is not a
+        positive integer is rejected with an error naming the variable."""
+        from aws_glue_cdc_metrics_job_spark.operators import graph as G
+
+        name = "SPARK_GRAFT_GRAPH_BCAST_MAX_BYTES"
+        monkeypatch.delenv(name, raising=False)
+        assert G._bcast_max_bytes() == 256 * 1024**2
+        monkeypatch.setenv(name, "1048576")
+        assert G._bcast_max_bytes() == 1048576
+        for bad in ("0", "-5", "12MB", "1.5", ""):
+            monkeypatch.setenv(name, bad)
+            with pytest.raises(ValueError, match=name):
+                G._bcast_max_bytes()
 
 
 def test_null_baskets_emit_no_pairs(spark):
