@@ -52,24 +52,6 @@ def _ckpt_big(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
 
 
-def _bcast_max_bytes() -> int:
-    """The broadcast byte budget, ``SPARK_GRAFT_GRAPH_BCAST_MAX_BYTES``
-    (default 256 MB). A value that is not a positive integer fails here,
-    naming the variable, instead of silently turning every hop join into
-    a shuffle (0) or into an oversized broadcast (a typo)."""
-    name = "SPARK_GRAFT_GRAPH_BCAST_MAX_BYTES"
-    raw = os.environ.get(name)
-    if raw is None:
-        return 256 * 1024**2
-    try:
-        value = int(raw)
-    except ValueError:
-        value = 0
-    if value <= 0:
-        raise ValueError(f"{name} must be a positive integer byte count, got {raw!r}")
-    return value
-
-
 # Broadcast ceiling for the node-sized side of a hop join, derived from
 # ESTIMATED BUILD BYTES: a bare row count ignores the BroadcastHashRelation
 # overhead -- UnsafeRow headers + the hash map cost ~50-100+ bytes per
@@ -78,7 +60,7 @@ def _bcast_max_bytes() -> int:
 # rows_max = budget / (48 B fixed + 16 B per column). Scale-adaptive by
 # DATA (the caller passes the measured node count, a driver scalar every
 # iterative operator already holds), not by core count.
-_BCAST_MAX_BYTES = _bcast_max_bytes()
+_BCAST_MAX_BYTES = 256 * 1024**2
 
 
 def _bcast_row_ceiling(n_cols: int) -> int:
@@ -123,9 +105,7 @@ _EDGE_ROWS_PER_PART = 2_000_000  # ~64 MB of narrow long rows
 _MIN_ROWS_TO_WIDEN = 50_000  # below this a narrow layout is fine
 
 
-def _ckpt_edges(
-    df: DataFrame, checkpoint: bool, count: bool = True
-) -> tuple[DataFrame, int | None]:
+def _ckpt_edges(df: DataFrame) -> tuple[DataFrame, int]:
     """Materialize a multiply-consumed edge-sized frame ONCE and give it
     compute-proportional width. Lazy serialized localCheckpoint, then one
     bounded count (the driver scalar most callers need anyway) to (a)
@@ -134,13 +114,8 @@ def _ckpt_edges(
     which re-executes the whole build per consumer (exchange reuse does
     not cross query executions; measured as the basket->pair pipeline
     running twice per pagerank call) -- and (b) feed the width policy
-    above. Returns (frame, row_count); checkpoint=False passes the frame
-    through untouched (count=None)."""
-    if not checkpoint:
-        return df, None
+    above. Returns (frame, row_count)."""
     ck = _ckpt_big(df)
-    if not count:
-        return ck, None
     n = ck.count()
     sc = df.sparkSession.sparkContext
     target = max(sc.defaultParallelism, math.ceil(n / _EDGE_ROWS_PER_PART))
@@ -153,7 +128,7 @@ def _ckpt_edges(
     return ck, n
 
 
-def triangle_counts(edges: DataFrame, checkpoint: bool = True) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts + exact clustering coefficient (ppm) via
     degree-ordered edge orientation (Schank & Wagner 2005; the MapReduce
     classic from Suri & Vassilvitskii, WWW'11).
@@ -192,17 +167,15 @@ def triangle_counts(edges: DataFrame, checkpoint: bool = True) -> DataFrame:
             F.least("SRC", "DST").alias("A"), F.greatest("SRC", "DST").alias("B")
         )
         .where(F.col("A") != F.col("B"))
-        .distinct(),
-        checkpoint,
+        .distinct()
     )
     deg = (
         und.select(F.col("A").alias("N"))
         .unionAll(und.select(F.col("B").alias("N")))
         .groupBy("N")
         .agg(F.count(F.lit(1)).cast("long").alias("DEG"))
+        .localCheckpoint(eager=False)
     )
-    if checkpoint:
-        deg = deg.localCheckpoint(eager=False)
     n_nodes = deg.count()  # bounded driver scalar: sizes the join policy
     da = deg.select(F.col("N").alias("A"), F.col("DEG").alias("DA"))
     db = deg.select(F.col("N").alias("B"), F.col("DEG").alias("DB"))
@@ -213,10 +186,9 @@ def triangle_counts(edges: DataFrame, checkpoint: bool = True) -> DataFrame:
         F.when(lo_first, F.col("B")).otherwise(F.col("A")).alias("DST"),
         F.when(lo_first, F.col("DB")).otherwise(F.col("DA")).alias("DDEG"),
     )
-    if checkpoint:
-        # inherits width from the (possibly widened) und checkpoint via
-        # the narrow broadcast-join chain -- no second count/repartition
-        ori = _ckpt_big(ori)
+    # inherits width from the (possibly widened) und checkpoint via the
+    # narrow broadcast-join chain -- no second count/repartition
+    ori = _ckpt_big(ori)
     # wedges enumerate IN-ROW: each oriented source's out-neighbors,
     # sorted by the same (DDEG, DST) rank the old self-join compared,
     # explode to exactly the ordered pairs -- no generate-then-discard
@@ -311,12 +283,7 @@ def copurchase_edges(df: DataFrame, basket_col: str, item_col: str) -> DataFrame
     ).select("__e.SRC", "__e.DST")
 
 
-def _node_prep(
-    ed: DataFrame,
-    checkpoint: bool,
-    symmetric: bool = False,
-    seeds: list[int] | None = None,
-):
+def _node_prep(ed: DataFrame, symmetric: bool = False, seeds: list[int] | None = None):
     """The node universe of an edge frame and its bounded driver scalars,
     shared by every walk, HITS and Katz.
 
@@ -350,8 +317,7 @@ def _node_prep(
                 F.count_if(F.col("__o") == 0).cast("long").alias("IN"),
             )
         )
-    if checkpoint:
-        nd = nd.localCheckpoint(eager=False)
+    nd = nd.localCheckpoint(eager=False)
     in_seeds = F.lit(True) if seeds is None else F.col("NODE").isin(seeds)
     row = nd.agg(
         F.count(F.lit(1)),
@@ -382,9 +348,10 @@ def _hop(
     is hash-partitioned into the bucket layout, so the executed plan
     reads the edge side bucket-local with NO exchange above its scan and
     only the node-sized frame moves (plan-pinned in tests/test_graph.py).
-    Without the explicit partitioning, a node frame that arrives
-    hash-partitioned at a different width (an aggregate's output under
-    checkpoint=False) makes the planner re-shuffle the EDGE side instead."""
+    The explicit partitioning keeps that plan independent of how the node
+    frame arrives: a frame hash-partitioned on NODE at another width (an
+    aggregate's output read without a checkpoint in between) made the
+    planner re-shuffle the EDGE side instead."""
     other = "DST" if key == "SRC" else "SRC"
     if buckets:
         e, f = ed.hint("merge"), frame.repartition(buckets, "NODE")
@@ -402,7 +369,6 @@ def _walk(
     iterations: int,
     scale: int,
     damping_pct: int,
-    checkpoint: bool,
     seeds: list[int] | None = None,
     symmetric: bool = False,
     buckets: int = 0,
@@ -443,7 +409,7 @@ def _walk(
     N_NEIGHBORS for a weighted walk."""
     weighted = "W" in ed.columns
     out_name = "OUT_STRENGTH" if weighted else "N_NEIGHBORS"
-    nd, n, n_out, n_in, _, k = _node_prep(ed, checkpoint, symmetric, seeds)
+    nd, n, n_out, n_in, _, k = _node_prep(ed, symmetric, seeds)
     if k == 0:
         return ed.sparkSession.createDataFrame(
             [], f"NODE long, RANK_PICOS long, {out_name} long"
@@ -474,9 +440,7 @@ def _walk(
         ranks = s.select(
             "NODE",
             (got + F.when(restarts, restart_mass).otherwise(F.lit(0))).cast("long").alias("R"),
-        )
-        if checkpoint:
-            ranks = ranks.localCheckpoint(eager=False)
+        ).localCheckpoint(eager=False)
     return ranks.join(strength, "NODE").select(
         "NODE", F.col("R").alias("RANK_PICOS"), F.col("OUT").alias(out_name)
     )
@@ -499,7 +463,6 @@ def pagerank(
     iterations: int = 3,
     scale: int = PR_SCALE,
     damping_pct: int = 85,
-    checkpoint: bool = True,
     symmetric: bool = False,
 ) -> DataFrame:
     """Fixed-iteration integer PageRank over a GENERAL directed edge list.
@@ -535,8 +498,8 @@ def pagerank(
     1-row broadcast of the dangling mass -- never edge-sized). Returns
     (NODE, RANK_PICOS, N_NEIGHBORS) where N_NEIGHBORS is the out-degree
     (0 for dangling nodes)."""
-    ed, _ = _ckpt_edges(edges.select("SRC", "DST"), checkpoint)
-    return _walk(ed, iterations, scale, damping_pct, checkpoint, symmetric=symmetric)
+    ed, _ = _ckpt_edges(edges.select("SRC", "DST"))
+    return _walk(ed, iterations, scale, damping_pct, symmetric=symmetric)
 
 
 def pagerank_bucketed(
@@ -547,7 +510,6 @@ def pagerank_bucketed(
     damping_pct: int = 85,
     num_buckets: int = 8,
     path: str | None = None,
-    checkpoint: bool = True,
     symmetric: bool = False,
 ) -> DataFrame:
     """:func:`pagerank` for long-running iterative deployments: the
@@ -577,7 +539,6 @@ def pagerank_bucketed(
         iterations,
         scale,
         damping_pct,
-        checkpoint,
         symmetric=symmetric,
         buckets=num_buckets,
     )
@@ -589,7 +550,6 @@ def personalized_pagerank(
     iterations: int = 3,
     scale: int = PR_SCALE,
     damping_pct: int = 85,
-    checkpoint: bool = True,
     symmetric: bool = False,
 ) -> DataFrame:
     """Personalized PageRank (random walk with restart to a SEED set) --
@@ -607,13 +567,12 @@ def personalized_pagerank(
     left-join and dangling stage degenerate away and the in-edge-only
     recurrence replays bit-identically.
     """
-    ed, _ = _ckpt_edges(edges.select("SRC", "DST"), checkpoint)
+    ed, _ = _ckpt_edges(edges.select("SRC", "DST"))
     return _walk(
         ed,
         iterations,
         scale,
         damping_pct,
-        checkpoint,
         seeds=[int(x) for x in seeds],
         symmetric=symmetric,
     )
@@ -625,7 +584,6 @@ def pagerank_weighted(
     scale: int = PR_SCALE,
     damping_pct: int = 85,
     weight_col: str = "WEIGHT",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """PageRank over a WEIGHTED directed edge list: each node splits its
     rank across out-edges in proportion to integer edge weights
@@ -651,8 +609,8 @@ def pagerank_weighted(
     weights to ~9e6 -- rescale weights (only ratios matter) beyond that.
 
     Returns (NODE, RANK_PICOS, OUT_STRENGTH)."""
-    ed, _ = _ckpt_edges(_weighted_edges(edges, weight_col), checkpoint)
-    return _walk(ed, iterations, scale, damping_pct, checkpoint)
+    ed, _ = _ckpt_edges(_weighted_edges(edges, weight_col))
+    return _walk(ed, iterations, scale, damping_pct)
 
 
 def _weighted_edges(edges: DataFrame, weight_col: str) -> DataFrame:
@@ -674,7 +632,6 @@ def pagerank_weighted_bucketed(
     weight_col: str = "WEIGHT",
     num_buckets: int = 8,
     path: str | None = None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """:func:`pagerank_weighted` for long-running iterative deployments:
     the weight- and strength-annotated edge table (SRC, DST, W, S) is
@@ -698,7 +655,6 @@ def pagerank_weighted_bucketed(
         iterations,
         scale,
         damping_pct,
-        checkpoint,
         buckets=num_buckets,
     )
 
@@ -706,7 +662,6 @@ def pagerank_weighted_bucketed(
 def label_propagation(
     edges: DataFrame,
     iterations: int = 2,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et al.
     2007, made deterministic): every node starts as its own label; each
@@ -731,8 +686,8 @@ def label_propagation(
     # the node universe FROM the checkpoint through the shared prep -- a
     # universe built on parallel lineage would re-execute the edge build
     # once per consumer query execution
-    ed, _ = _ckpt_edges(edges.select("SRC", "DST").distinct(), checkpoint)
-    nodes, n, *_ = _node_prep(ed, checkpoint)
+    ed, _ = _ckpt_edges(edges.select("SRC", "DST").distinct())
+    nodes, n, *_ = _node_prep(ed)
     labels = nodes.select("NODE", F.col("NODE").alias("L"))
     from pyspark.sql import Window
 
@@ -752,9 +707,8 @@ def label_propagation(
         labels = (
             labels.join(best, "NODE", "left")
             .select("NODE", F.coalesce(F.col("__best"), F.col("L")).alias("L"))
+            .localCheckpoint(eager=False)
         )
-        if checkpoint:
-            labels = labels.localCheckpoint(eager=False)
     return labels.select("NODE", F.col("L").alias("COMMUNITY"))
 
 
@@ -765,7 +719,6 @@ def hits(
     edges: DataFrame,
     iterations: int = 2,
     scale: int = HITS_SCALE,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """HITS hubs & authorities (Kleinberg, "Authoritative Sources in a
     Hyperlinked Environment", JACM 1999) on an exact integer lattice:
@@ -791,11 +744,11 @@ def hits(
     init floors to zero.
 
     Returns (NODE, AUTH_NANOS, HUB_NANOS, IN_DEGREE, OUT_DEGREE)."""
-    ed, _ = _ckpt_edges(edges.select("SRC", "DST").distinct(), checkpoint)
+    ed, _ = _ckpt_edges(edges.select("SRC", "DST").distinct())
     # universe + BOTH degrees from the shared prep's one shuffle over the
     # checkpoint, so the final select needs no fresh degree aggregations
-    nodes, n, *_ = _node_prep(ed, checkpoint)
-    return _hits_core(ed, ed, nodes, n, iterations, scale, checkpoint)
+    nodes, n, *_ = _node_prep(ed)
+    return _hits_core(ed, ed, nodes, n, iterations, scale)
 
 
 def _hits_core(
@@ -805,7 +758,6 @@ def _hits_core(
     n: int,
     iterations: int,
     scale: int,
-    checkpoint: bool,
     buckets: int = 0,
 ) -> DataFrame:
     """The half-step loop shared by :func:`hits` (one in-memory edge
@@ -841,9 +793,8 @@ def _hits_core(
                 "NODE",
                 F.expr(f"(coalesce(__S, 0L) * {scale}) div __T").cast("long").alias(out),
             )
+            .localCheckpoint(eager=False)
         )
-        if checkpoint:
-            score[out] = score[out].localCheckpoint(eager=False)
     return (
         score["A"].join(score["H"], "NODE")
         .join(nodes, "NODE")
@@ -864,7 +815,6 @@ def hits_bucketed(
     scale: int = HITS_SCALE,
     num_buckets: int = 8,
     path: str | None = None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """:func:`hits` for long-running iterative deployments (the
     pagerank_bucketed discipline applied to BOTH half-steps): HITS joins
@@ -879,9 +829,8 @@ def hits_bucketed(
     iterative workload in which no edge byte ever re-shuffles. Results
     are bit-identical to :func:`hits` (same lattice trajectory,
     layout-only change)."""
-    # with checkpoint, one materialization feeds BOTH bucketed writes, at
-    # measured-row width
-    ed, _ = _ckpt_edges(edges.select("SRC", "DST").distinct(), checkpoint)
+    # one materialization feeds BOTH bucketed writes, at measured-row width
+    ed, _ = _ckpt_edges(edges.select("SRC", "DST").distinct())
     ed_src, ed_dst = (
         _write_bucketed(
             ed, f"{table}_{k.lower()}", k, num_buckets,
@@ -902,19 +851,14 @@ def hits_bucketed(
         "NODE",
         F.coalesce(F.col("OUT"), F.lit(0)).cast("long").alias("OUT"),
         F.coalesce(F.col("IN"), F.lit(0)).cast("long").alias("IN"),
-    )
-    if checkpoint:
-        nodes = nodes.localCheckpoint(eager=False)
-    return _hits_core(
-        ed_src, ed_dst, nodes, nodes.count(), iterations, scale, checkpoint, num_buckets
-    )
+    ).localCheckpoint(eager=False)
+    return _hits_core(ed_src, ed_dst, nodes, nodes.count(), iterations, scale, num_buckets)
 
 
 def common_neighbor_link_prediction(
     edges: DataFrame,
     max_middle_degree: int | None = None,
     min_common: int = 1,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Neighborhood-overlap link prediction (Liben-Nowell & Kleinberg,
     "The Link Prediction Problem for Social Networks", CIKM 2003): score
@@ -948,15 +892,16 @@ def common_neighbor_link_prediction(
             F.least("SRC", "DST").alias("A"), F.greatest("SRC", "DST").alias("B")
         )
         .where(F.col("A") != F.col("B"))
-        .distinct(),
-        checkpoint,
+        .distinct()
     )
     nbr = und.select(F.col("A").alias("N"), F.col("B").alias("M")).unionAll(
         und.select(F.col("B").alias("N"), F.col("A").alias("M"))
     )
-    deg = nbr.groupBy("N").agg(F.count(F.lit(1)).cast("long").alias("DEG"))
-    if checkpoint:
-        deg = deg.localCheckpoint(eager=False)
+    deg = (
+        nbr.groupBy("N")
+        .agg(F.count(F.lit(1)).cast("long").alias("DEG"))
+        .localCheckpoint(eager=False)
+    )
     n_nodes = deg.count()  # bounded driver scalar: sizes the join policy
     mid = nbr.select(F.col("M"), F.col("N"))
     if max_middle_degree is not None:
@@ -994,8 +939,7 @@ def common_neighbor_link_prediction(
         # adjacency array would be unbounded per row, the exact hazard
         # max_middle_degree exists to control. (Width inherits from the
         # widened und checkpoint through the narrow union/filter chain.)
-        if checkpoint:
-            mid = _ckpt_big(mid)
+        mid = _ckpt_big(mid)
         w1 = mid.select("M", F.col("N").alias("NODE_A"))
         w2 = mid.select("M", F.col("N").alias("NODE_B"))
         common = (
@@ -1036,7 +980,6 @@ def katz_centrality(
     iterations: int = 3,
     alpha_ppm: int = 50_000,
     scale: int = KATZ_SCALE,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Katz centrality (Katz, "A new status index derived from sociometric
     analysis", Psychometrika 1953) truncated at ``iterations`` hops on an
@@ -1068,8 +1011,8 @@ def katz_centrality(
     Returns (NODE, KATZ_NANOS, IN_DEGREE)."""
     if not 0 < alpha_ppm < 10**6:
         raise ValueError(f"alpha_ppm must be in (0, 1e6), got {alpha_ppm}")
-    ed, _ = _ckpt_edges(edges.select("SRC", "DST").distinct(), checkpoint)
-    nodes, n, _, _, max_in, _ = _node_prep(ed, checkpoint)
+    ed, _ = _ckpt_edges(edges.select("SRC", "DST").distinct())
+    nodes, n, _, _, max_in, _ = _node_prep(ed)
     worst = 0
     for hop in range(1, iterations + 1):
         per_edge_product = alpha_ppm * (scale + worst)
@@ -1087,9 +1030,7 @@ def katz_centrality(
         s = _hop(ed, x, n, "SRC", contrib)
         x = nodes.join(s, "NODE", "left").select(
             "NODE", F.coalesce(F.col("__S"), F.lit(0)).cast("long").alias("X")
-        )
-        if checkpoint:
-            x = x.localCheckpoint(eager=False)
+        ).localCheckpoint(eager=False)
     return x.join(nodes, "NODE", "left").select(
         "NODE",
         F.col("X").alias("KATZ_NANOS"),
@@ -1101,7 +1042,6 @@ def bfs_hops(
     edges: DataFrame,
     sources: list[int],
     max_hops: int = 3,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Multi-source breadth-first hop distance: the minimum number of
     directed hops from ANY source to each reachable node, capped at
@@ -1133,7 +1073,7 @@ def bfs_hops(
     )
     visited = seeds.select("NODE", F.lit(0).cast("long").alias("HOPS"))
     frontier = visited.select("NODE")
-    ed, _ = _ckpt_edges(edges.select("SRC", "DST").distinct(), checkpoint)
+    ed, _ = _ckpt_edges(edges.select("SRC", "DST").distinct())
     fsize = len(set(sources))  # frontier cardinality, tracked per round
     for h in range(1, max_hops + 1):
         fr = _node_side(frontier, fsize)
@@ -1142,17 +1082,14 @@ def bfs_hops(
             .select(F.col("DST").alias("NODE"))
             .distinct()
             .join(visited, "NODE", "left_anti")
+            .localCheckpoint(eager=False)
         )
-        if checkpoint:
-            nxt = nxt.localCheckpoint(eager=False)
         fsize = nxt.count()  # the old isEmpty scalar, now reused to size
         if fsize == 0:       # the next round's frontier-join policy
             break
         visited = visited.unionByName(
             nxt.select("NODE", F.lit(h).cast("long").alias("HOPS"))
-        )
-        if checkpoint:
-            visited = visited.localCheckpoint(eager=False)
+        ).localCheckpoint(eager=False)
         frontier = nxt
     return visited
 
@@ -1161,7 +1098,6 @@ def sssp_hops(
     edges: DataFrame,
     sources: list[int],
     max_hops: int = 3,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Multi-source single-source-shortest-path, hop-bounded Bellman-Ford:
     the minimum integer-weight cost from ANY source to each node
@@ -1199,8 +1135,7 @@ def sssp_hops(
     # checkpoint materialization (exchange reuse does not cross query
     # executions)
     ed, e_cnt = _ckpt_edges(
-        edges.select(F.col("SRC"), F.col("DST"), F.col("W").cast("bigint").alias("W")),
-        checkpoint,
+        edges.select(F.col("SRC"), F.col("DST"), F.col("W").cast("bigint").alias("W"))
     )
     if bool(ed.where(F.col("W") < 0).head(1)):
         raise ValueError("sssp_hops requires non-negative edge weights")
@@ -1208,12 +1143,7 @@ def sssp_hops(
     # the distance map can never exceed |sources| + |edges| (only DST
     # nodes enter). When that proven bound fits the broadcast ceiling the
     # policy can never flip to shuffled-hash, so the per-hop sizing counts
-    # are pure overhead and are skipped. With checkpoint=False the lineage
-    # is never cut, so a per-hop count would recompute every prior hop
-    # (O(h^2)): that path counts the edges once and sizes every later hop
-    # by the bound instead of trusting the seed count.
-    if e_cnt is None:
-        e_cnt = ed.count()
+    # are pure overhead and are skipped.
     bound = dsize + e_cnt
     fits = bound <= _bcast_row_ceiling(2)
     for h in range(max_hops):
@@ -1225,11 +1155,10 @@ def sssp_hops(
             dist.unionByName(relaxed)
             .groupBy("NODE")
             .agg(F.min("DIST").cast("bigint").alias("DIST"))
+            .localCheckpoint(eager=False)
         )
-        if checkpoint:
-            dist = dist.localCheckpoint(eager=False)
         if h + 1 < max_hops:
-            # a checkpointed round's count is a bounded scalar that ALSO
-            # shares the round's materialization with the next hop's join
-            dsize = dist.count() if checkpoint and not fits else bound
+            # a round's count is a bounded scalar that ALSO shares the
+            # round's materialization with the next hop's join
+            dsize = bound if fits else dist.count()
     return dist

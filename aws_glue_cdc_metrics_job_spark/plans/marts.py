@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import dsum, dsum_over, money, rhu
+from ..functions.numeric import dsum, dsum_over, money, rhu, sql_dsum
 from ..functions.quantile import quantile_bucket
 from ..operators.relational import pct_change
 
@@ -318,9 +318,7 @@ def discount_effectiveness(items: DataFrame, options: DataFrame, revenue: DataFr
     )
 
 
-def sales_trends_all_grains(
-    revenue: DataFrame, pre_aggregate: bool = False
-) -> DataFrame:
+def sales_trends_all_grains(revenue: DataFrame) -> DataFrame:
     """All four sales-trends grains in ONE pass: a GROUPING SETS plan over
     (grain key, restaurant, category) reads order_revenue once (Catalyst
     Expand x4 feeding a single aggregation), where the four per-grain
@@ -329,31 +327,15 @@ def sales_trends_all_grains(
     filter + rename away, values identical to sales_trends() by
     construction.
 
-    ``pre_aggregate`` picks between two physically different, value-
-    identical plans (VERDICT r4 item 5 asked for the second; both were
-    built and MEASURED this round):
-
-    - False (default): Expand x4 directly over the fact stream -- the
-      shuffle carries 4N rows.
-    - True: aggregate to the finest common grain first (date, hour,
-      restaurant, category -- week/month labels ride along as functions
-      of the date), then GROUPING SETS over that aggregate; the fact
-      shuffle carries N rows once and the Expand multiplies only the
-      collapsed base. Exactness holds because the finest-grain partials
-      stay EXACT decimals (money lattice) and decimal re-summation is
-      associative.
-
-    Which wins is a pure function of the collapse ratio N/|base|. On the
-    driver workload the finest grain does NOT collapse (sf0.1: 600,000
-    fact rows -> 588,104 base rows, ratio 1.02), so the pre-aggregation
-    is overhead -- a near-input-cardinality hash aggregate materialized
-    for nothing -- and measured ~3x SLOWER cold (41 s vs 13.5 s);
-    Expand-over-fact stays the default. On a warehouse-shaped feed where
-    thousands of lines share (restaurant, category, hour) the ratio is
-    1e2-1e4 and ``pre_aggregate=True`` is the 100 TB plan. A 4-branch
-    union of per-grain rollups was also measured and rejected: AQE gave
-    the four branches no stage reuse, so the base subtree ran four
-    times. (Both variants pinned value-identical in test_marts.)"""
+    The Expand runs directly over the fact stream, so the shuffle carries
+    4N rows. Pre-aggregating to the finest common grain (date, hour,
+    restaurant, category) first would shuffle N rows once, but on the
+    driver workload that grain does NOT collapse (sf0.1: 600,000 fact
+    rows -> 588,104 base rows, ratio 1.02): the pre-aggregate was a
+    near-input-cardinality hash aggregate materialized for nothing and
+    measured ~3x SLOWER cold (41 s vs 13.5 s). A 4-branch union of
+    per-grain rollups was also measured and rejected: AQE gave the four
+    branches no stage reuse, so the base subtree ran four times."""
     g = with_calendar_grains(revenue).select(
         F.col("CREATION_DATE").cast("string").alias("__D"),
         F.col("YEAR_WEEK").alias("__W"),
@@ -363,19 +345,6 @@ def sales_trends_all_grains(
         "ITEM_CATEGORY",
         "TOTAL_REVENUE",
     )
-    if pre_aggregate:
-        # __W/__M are functionally dependent on __D; adding them to the
-        # key does not change the granularity, it just keeps the labels
-        # available for the weekly/monthly rollups without a join back
-        src = g.groupBy(
-            "__D", "__W", "__M", "__H", "RESTAURANT_ID", "ITEM_CATEGORY"
-        ).agg(F.sum(money("TOTAL_REVENUE", 4)).alias("__rev"))
-        rev_sql = "CAST(SUM(__rev) AS DOUBLE)"
-    else:
-        src = g
-        from ..functions.numeric import sql_dsum
-
-        rev_sql = sql_dsum("TOTAL_REVENUE", 4)
     # unique view name: repeated calls must not clobber a shared catalog
     # entry out from under a concurrent consumer. Analysis is eager at
     # spark.sql() time (the resolved relation is captured in the plan),
@@ -384,9 +353,9 @@ def sales_trends_all_grains(
     import uuid
 
     view = f"_trends_all_grains_{uuid.uuid4().hex}"
-    src.createOrReplaceTempView(view)
+    g.createOrReplaceTempView(view)
     try:
-        out = src.sparkSession.sql(
+        out = g.sparkSession.sql(
             f"""
             SELECT CASE WHEN grouping(__D) = 0 THEN 'daily'
                         WHEN grouping(__W) = 0 THEN 'weekly'
@@ -394,7 +363,7 @@ def sales_trends_all_grains(
                         ELSE 'hourly' END AS GRAIN,
                    coalesce(__D, __W, __M, __H) AS GRAIN_KEY,
                    RESTAURANT_ID, ITEM_CATEGORY,
-                   {rev_sql} AS REVENUE
+                   {sql_dsum('TOTAL_REVENUE', 4)} AS REVENUE
             FROM {view}
             GROUP BY GROUPING SETS (
               (__D, RESTAURANT_ID, ITEM_CATEGORY),
@@ -405,5 +374,5 @@ def sales_trends_all_grains(
             """
         )
     finally:
-        src.sparkSession.catalog.dropTempView(view)
+        g.sparkSession.catalog.dropTempView(view)
     return out

@@ -41,6 +41,21 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory() -> str:
+    """The driver heap ``get_spark`` asks for when ``SPARK_DRIVER_MEMORY`` is
+    unset: 24g, or half of physical memory on a machine with less than 48g.
+
+    In single-JVM local mode the driver heap IS the executor memory. 8g
+    starved the 100x decade bench (SparkOutOfMemoryError inside a graph-edge
+    localCheckpoint while 32 task threads shared execution memory), hence
+    24g on a large machine. On a small one a 24g heap outgrows the machine
+    before it collects garbage: a whole-catalog oracle run on a 15 GB machine
+    grew the JVM to ~12 GB of RSS and lost it. Half leaves the rest to the
+    Python driver, DuckDB and the OS."""
+    half_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2 // 1024**2
+    return f"{min(24 * 1024, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "aws-glue-cdc-metrics-spark",
     master: str | None = None,
@@ -63,12 +78,10 @@ def get_spark(
         # sources.read_table (lossless: the generator emits whole microseconds).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Single-JVM local mode: the driver heap IS the executor memory.
-        # 8g starved the 100x decade bench (SparkOutOfMemoryError inside a
-        # graph-edge localCheckpoint while 32 task threads shared execution
-        # memory); the sandbox has 128 GiB, so default to a heap that the
-        # 32-thread local runner can actually divide. Env-overridable.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

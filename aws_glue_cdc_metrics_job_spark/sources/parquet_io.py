@@ -265,74 +265,6 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def zorder_key(cols: list[str], bits: int = 16) -> F.Column:
-    """Morton (Z-order) key: interleave the low ``bits`` of each column --
-    bit i of column j lands at position ``i*len(cols)+j``. Inputs must
-    already be non-negative integers below 2^bits
-    (:func:`scale_to_bits`). Pure codegen shift/mask expression
-    (bits x cols terms), no shuffle, no UDF."""
-    n = len(cols)
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        for j, c in enumerate(cols):
-            z = z + F.shiftleft(
-                F.shiftright(F.col(c).cast("long"), i).bitwiseAND(F.lit(1)),
-                i * n + j,
-            )
-    return z
-
-
-def scale_to_bits(df: DataFrame, cols: list[str], bits: int = 16) -> DataFrame:
-    """Min-max scale numeric columns onto the integer lattice [0, 2^bits):
-    adds ``<c>_SCALED`` per input column. One tiny min/max aggregation
-    broadcasts back; constant columns scale to 0. Linear scaling (not
-    rank) keeps the transform stateless per row -- adequate for layout
-    purposes; heavily skewed dimensions can be pre-transformed (log) by
-    the caller."""
-    aggs = []
-    for c in cols:
-        aggs += [F.min(c).alias(f"__{c}_min"), F.max(c).alias(f"__{c}_max")]
-    extent = df.agg(*aggs)
-    out = df.crossJoin(F.broadcast(extent))
-    top = (1 << bits) - 1
-    for c in cols:
-        lo, hi = F.col(f"__{c}_min").cast("double"), F.col(f"__{c}_max").cast("double")
-        span = hi - lo
-        scaled = F.when(span <= 0, F.lit(0)).otherwise(
-            F.floor((F.col(c).cast("double") - lo) * top / span).cast("long")
-        )
-        out = out.withColumn(f"{c}_SCALED", F.least(scaled, F.lit(top)))
-    return out.drop(*[f"__{c}_min" for c in cols], *[f"__{c}_max" for c in cols])
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    num_files: int | None = None,
-    bits: int = 16,
-    mode: str = "overwrite",
-    compression: str = "snappy",
-) -> None:
-    """Z-order-clustered parquet export: rows sort by the Morton key of
-    ``cols``, so every file's min/max envelope is tight in EVERY clustered
-    dimension at once -- the multi-column data-skipping layout
-    (:func:`write_sorted` is optimal for one column but leaves the others'
-    per-file ranges full-width). A box query over any subset of ``cols``
-    then prunes most files via :func:`read_pruned`'s stats intersection
-    (pruning ratio pinned against the linear layout in
-    tests/test_sources.py). Same range-partition + local-sort shape as
-    write_sorted: no single-reducer sort, bounds from one sampling pass."""
-    scaled = scale_to_bits(df, cols, bits)
-    keyed = scaled.withColumn(
-        "__z", zorder_key([f"{c}_SCALED" for c in cols], bits)
-    ).drop(*[f"{c}_SCALED" for c in cols])
-    parts = keyed.repartitionByRange(
-        *([num_files] if num_files else []), F.col("__z")
-    ).sortWithinPartitions("__z")
-    parts.drop("__z").write.mode(mode).option("compression", compression).parquet(path)
-
-
 def build_file_stats(spark: SparkSession, path: str, cols: list[str]) -> DataFrame:
     """Per-FILE min/max/count statistics for ``cols`` -- the data-skipping
     index lakehouse formats (Delta/Iceberg) keep in their manifests, built

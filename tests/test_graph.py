@@ -2,10 +2,12 @@
 pure-Python replay parity, partitioning invariance, rank-mass sanity, and
 edge-builder shape."""
 
+import contextlib
 from collections import defaultdict
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from aws_glue_cdc_metrics_job_spark.operators.graph import (
     PR_SCALE,
@@ -39,7 +41,7 @@ def test_matches_pure_python_replay(spark):
     df = spark.createDataFrame(EDGES, "SRC long, DST long")
     got = {
         row["NODE"]: row["RANK_PICOS"]
-        for row in pagerank(df, iterations=4, checkpoint=False).collect()
+        for row in pagerank(df, iterations=4).collect()
     }
     assert got == _replay(EDGES, 4)
 
@@ -58,7 +60,7 @@ def test_rank_mass_bounded(spark):
     ring = [(i, (i + 1) % 50) for i in range(50)] + [((i + 1) % 50, i) for i in range(50)]
     df = spark.createDataFrame(ring, "SRC long, DST long")
     total = (
-        pagerank(df, iterations=5, checkpoint=False)
+        pagerank(df, iterations=5)
         .agg(F.sum("RANK_PICOS").alias("T"))
         .collect()[0]["T"]
     )
@@ -133,7 +135,7 @@ def test_personalized_pagerank_concentrates_on_seed_component(spark):
     df = spark.createDataFrame(EDGES, "SRC long, DST long")
     got = {
         r["NODE"]: r["RANK_PICOS"]
-        for r in personalized_pagerank(df, seeds=[5], iterations=4, checkpoint=False).collect()
+        for r in personalized_pagerank(df, seeds=[5], iterations=4).collect()
     }
     # component {5, 6} holds all positive mass; triangle+pendant get none
     assert got[5] > 0 and got[6] > 0
@@ -202,7 +204,7 @@ def test_directed_dangling_matches_replay(spark):
     df = spark.createDataFrame(DIRECTED, "SRC long, DST long")
     got = {
         r["NODE"]: r["RANK_PICOS"]
-        for r in pagerank(df, iterations=4, checkpoint=False).collect()
+        for r in pagerank(df, iterations=4).collect()
     }
     want = _replay_general(DIRECTED, 4)
     assert got == want
@@ -216,7 +218,7 @@ def test_directed_mass_conserved(spark):
     star = [(i, 100) for i in range(1, 40)]  # 39 sources -> one sink
     df = spark.createDataFrame(star, "SRC long, DST long")
     total = (
-        pagerank(df, iterations=5, checkpoint=False)
+        pagerank(df, iterations=5)
         .agg(F.sum("RANK_PICOS").alias("T"))
         .collect()[0]["T"]
     )
@@ -239,7 +241,7 @@ def test_personalized_directed_seed_keeps_restart_mass(spark):
     got = {
         r["NODE"]: r["RANK_PICOS"]
         for r in personalized_pagerank(
-            df, seeds=[4], iterations=3, checkpoint=False
+            df, seeds=[4], iterations=3
         ).collect()
     }
     want = _replay_general(DIRECTED, 3, seeds=[4])
@@ -247,32 +249,49 @@ def test_personalized_directed_seed_keeps_restart_mass(spark):
     assert got[4] > 0  # node 4 has no in-edges yet holds restart mass
 
 
-def _bucket_local_joins(df, key):
-    """Collect ``df`` and return, for every sort-merge join on ``key`` in
-    its final executed plan, whether that join's edge (left) side reads a
-    bucketed scan with no Exchange between the join and the scan -- i.e.
-    the hop rides the bucketed layout instead of re-shuffling the edges."""
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    lines = plan.split("== Initial Plan ==")[0].splitlines()
+@contextlib.contextmanager
+def _checkpointed_frames():
+    """Record every frame handed to ``localCheckpoint`` inside the block:
+    the plans an operator materializes, hop by hop."""
+    frames, original = [], ClassicDataFrame.localCheckpoint
+
+    def record(self, *args, **kwargs):
+        frames.append(self)
+        return original(self, *args, **kwargs)
+
+    ClassicDataFrame.localCheckpoint = record
+    try:
+        yield frames
+    finally:
+        ClassicDataFrame.localCheckpoint = original
+
+
+def _bucket_local_joins(frames, key):
+    """For every sort-merge join on ``key`` in the executed plans of
+    ``frames``, whether that join's edge (left) side reads a bucketed scan
+    with no Exchange between the join and the scan -- i.e. the hop rides
+    the bucketed layout instead of re-shuffling the edges."""
 
     def depth(line):
         return len(line) - len(line.lstrip(" :+-|"))
 
     joins = []
-    for i, line in enumerate(lines):
-        if f"SortMergeJoin [{key}" not in line:
-            continue
-        child = depth(lines[i + 1])
-        side = []
-        for nxt in lines[i + 2:]:
-            if depth(nxt) <= child:
-                break
-            side.append(nxt)
-        joins.append(
-            not any("Exchange" in x for x in side)
-            and any("FileScan" in x and "Bucketed: true" in x for x in side)
-        )
+    for df in frames:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        lines = plan.split("== Initial Plan ==")[0].splitlines()
+        for i, line in enumerate(lines):
+            if f"SortMergeJoin [{key}" not in line:
+                continue
+            child = depth(lines[i + 1])
+            side = []
+            for nxt in lines[i + 2:]:
+                if depth(nxt) <= child:
+                    break
+                side.append(nxt)
+            joins.append(
+                not any("Exchange" in x for x in side)
+                and any("FileScan" in x and "Bucketed: true" in x for x in side)
+            )
     return joins
 
 
@@ -280,20 +299,21 @@ def test_pagerank_bucketed_matches_plain_and_plan(spark, tmp_path):
     """Layout-only twin: identical values to pagerank() on a symmetric
     graph (with and without the symmetric flag) and on a directed graph
     with dangling and teleport-only nodes, and every hop of the
-    operator's OWN plan reads the bucketed edge table with no exchange
-    above its scan -- only the rank side is exchanged (plus the
+    plans the operator materializes reads the bucketed edge table with no
+    exchange above its scan -- only the rank side is exchanged (plus the
     contribution agg)."""
     from aws_glue_cdc_metrics_job_spark.operators.graph import pagerank_bucketed
 
     for i, (edges, symmetric) in enumerate(((EDGES, False), (EDGES, True), (DIRECTED, False))):
         df = spark.createDataFrame(edges, "SRC long, DST long")
-        want = sorted(map(tuple, pagerank(df, iterations=3, checkpoint=False).collect()))
-        got_df = pagerank_bucketed(
-            df, "pr_bkt_test", iterations=3, num_buckets=4,
-            path=str(tmp_path / f"pr_bkt{i}"), checkpoint=False, symmetric=symmetric,
-        )
+        want = sorted(map(tuple, pagerank(df, iterations=3).collect()))
+        with _checkpointed_frames() as frames:
+            got_df = pagerank_bucketed(
+                df, "pr_bkt_test", iterations=3, num_buckets=4,
+                path=str(tmp_path / f"pr_bkt{i}"), symmetric=symmetric,
+            )
         assert sorted(map(tuple, got_df.collect())) == want, edges
-        joins = _bucket_local_joins(got_df, "SRC")
+        joins = _bucket_local_joins(frames, "SRC")
         assert len(joins) == 3 and all(joins), (edges, joins)
     spark.sql("DROP TABLE IF EXISTS pr_bkt_test")
 
@@ -330,7 +350,7 @@ def test_label_propagation_matches_replay_and_converges(spark):
     for iters in (1, 2, 3):
         got = {
             r["NODE"]: r["COMMUNITY"]
-            for r in label_propagation(df, iterations=iters, checkpoint=False).collect()
+            for r in label_propagation(df, iterations=iters).collect()
         }
         assert got == _lpa_replay(edges, iters), iters
 
@@ -346,7 +366,7 @@ def test_label_propagation_no_in_edges_keeps_label(spark):
     df = spark.createDataFrame([(7, 8)], "SRC long, DST long")
     got = {
         r["NODE"]: r["COMMUNITY"]
-        for r in label_propagation(df, iterations=2, checkpoint=False).collect()
+        for r in label_propagation(df, iterations=2).collect()
     }
     assert got == {7: 7, 8: 7}
 
@@ -357,15 +377,15 @@ def test_symmetric_flag_matches_autodetect(spark):
     from aws_glue_cdc_metrics_job_spark.operators.graph import personalized_pagerank
 
     df = spark.createDataFrame(EDGES, "SRC long, DST long")
-    auto = sorted(map(tuple, pagerank(df, iterations=3, checkpoint=False).collect()))
+    auto = sorted(map(tuple, pagerank(df, iterations=3).collect()))
     fast = sorted(map(tuple, pagerank(
-        df, iterations=3, checkpoint=False, symmetric=True).collect()))
+        df, iterations=3, symmetric=True).collect()))
     assert auto == fast
 
     pauto = sorted(map(tuple, personalized_pagerank(
-        df, seeds=[5], iterations=3, checkpoint=False).collect()))
+        df, seeds=[5], iterations=3).collect()))
     pfast = sorted(map(tuple, personalized_pagerank(
-        df, seeds=[5], iterations=3, checkpoint=False, symmetric=True).collect()))
+        df, seeds=[5], iterations=3, symmetric=True).collect()))
     assert pauto == pfast
 
 
@@ -401,7 +421,7 @@ def test_hits_matches_pure_python_replay(spark):
     df = spark.createDataFrame(edges, "SRC long, DST long")
     got = {
         r["NODE"]: (r["AUTH_NANOS"], r["HUB_NANOS"], r["IN_DEGREE"], r["OUT_DEGREE"])
-        for r in hits(df, iterations=3, checkpoint=False).collect()
+        for r in hits(df, iterations=3).collect()
     }
     a, h = _hits_replay(edges, 3)
     for v in a:
@@ -418,7 +438,7 @@ def test_hits_empty_graph(spark):
     from aws_glue_cdc_metrics_job_spark.operators.graph import hits
 
     df = spark.createDataFrame([], "SRC long, DST long")
-    assert hits(df, checkpoint=False).count() == 0
+    assert hits(df).count() == 0
 
 
 def test_katz_matches_pure_python_replay(spark):
@@ -433,7 +453,7 @@ def test_katz_matches_pure_python_replay(spark):
     got = {
         r["NODE"]: (r["KATZ_NANOS"], r["IN_DEGREE"])
         for r in katz_centrality(
-            df, iterations=3, alpha_ppm=alpha, checkpoint=False
+            df, iterations=3, alpha_ppm=alpha
         ).collect()
     }
     nodes = sorted({s for s, _ in edges} | {d for _, d in edges})
@@ -460,7 +480,7 @@ def test_katz_guards_overflow_and_alpha(spark):
     df = spark.createDataFrame(star, "SRC long, DST long")
     out = {
         r["NODE"]: r["KATZ_NANOS"]
-        for r in katz_centrality(df, alpha_ppm=100_000, checkpoint=False).collect()
+        for r in katz_centrality(df, alpha_ppm=100_000).collect()
     }
     # exact replay: only length-1 paths end at the hub (leaves have no
     # in-edges), so x(0) = 20 * (alpha * scale // 1e6) at every T >= 1
@@ -468,39 +488,35 @@ def test_katz_guards_overflow_and_alpha(spark):
     # enough hops on the same growing walk DOES overflow -> raise, naming
     # the failing hop inputs
     with pytest.raises(ValueError, match="overflow BIGINT"):
-        katz_centrality(df, alpha_ppm=999_999, iterations=12, checkpoint=False)
+        katz_centrality(df, alpha_ppm=999_999, iterations=12)
     with pytest.raises(ValueError, match="alpha_ppm"):
-        katz_centrality(df, alpha_ppm=0, checkpoint=False)
+        katz_centrality(df, alpha_ppm=0)
     with pytest.raises(ValueError, match="alpha_ppm"):
-        katz_centrality(df, alpha_ppm=10**6, checkpoint=False)
+        katz_centrality(df, alpha_ppm=10**6)
 
 
 def test_hits_bucketed_matches_plain_and_plan(spark, tmp_path):
     """Dual-bucketed layout twin: identical values to hits(), and EACH
     half-step's join reads its co-located edge copy (SRC-bucketed for hub
     pooling, DST-bucketed for auth pooling) with no exchange above the
-    edge scan. checkpoint=False persists nothing, the edge frame that
-    feeds both bucketed writes included."""
+    edge scan."""
     from aws_glue_cdc_metrics_job_spark.operators.graph import hits, hits_bucketed
-
-    def persisted():
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
     edges = [(1, 10), (2, 10), (2, 11), (3, 11), (3, 12), (4, 12), (10, 4)]
     df = spark.createDataFrame(edges, "SRC long, DST long")
-    want = sorted(map(tuple, hits(df, iterations=2, checkpoint=False).collect()))
-    before = persisted()
-    got_df = hits_bucketed(
-        df, "hits_bkt_test", iterations=2, num_buckets=4,
-        path=str(tmp_path / "hits_bkt"), checkpoint=False,
-    )
+    want = sorted(map(tuple, hits(df, iterations=2).collect()))
+    with _checkpointed_frames() as frames:
+        got_df = hits_bucketed(
+            df, "hits_bkt_test", iterations=2, num_buckets=4,
+            path=str(tmp_path / "hits_bkt"),
+        )
     assert sorted(map(tuple, got_df.collect())) == want
-    assert persisted() - before == set()
 
-    # plan pins on the operator's own plan: each half-step joins its OWN
-    # copy bucket-locally (SRC copy pools hubs, DST copy pools authorities)
+    # plan pins on the plans the operator materializes: each half-step
+    # joins its OWN copy bucket-locally (SRC copy pools hubs, DST copy
+    # pools authorities)
     for key in ("SRC", "DST"):
-        joins = _bucket_local_joins(got_df, key)
+        joins = _bucket_local_joins(frames, key)
         assert len(joins) >= 2 and all(joins), (key, joins)
     spark.sql("DROP TABLE IF EXISTS hits_bkt_test_src")
     spark.sql("DROP TABLE IF EXISTS hits_bkt_test_dst")
@@ -517,7 +533,7 @@ def test_hits_rejects_scale_not_exceeding_node_count(spark):
     ring = [(i, (i + 1) % 10) for i in range(10)]
     df = spark.createDataFrame(ring, "SRC long, DST long")
     with _pytest.raises(ValueError, match="scale"):
-        hits(df, scale=10, checkpoint=False)
+        hits(df, scale=10)
 
 
 def test_hits_mass_conserved(spark):
@@ -528,7 +544,7 @@ def test_hits_mass_conserved(spark):
     ring = [(i, (i + 1) % 20) for i in range(20)]
     df = spark.createDataFrame(ring, "SRC long, DST long")
     row = (
-        hits(df, iterations=2, checkpoint=False)
+        hits(df, iterations=2)
         .agg(
             F.sum("AUTH_NANOS").alias("a"),
             F.sum("HUB_NANOS").alias("h"),
@@ -553,7 +569,7 @@ def test_link_prediction_hand_checked(spark):
     sym = edges + [(b, a) for a, b in edges]
     df = spark.createDataFrame(sym, "SRC long, DST long")
     rows = sorted(
-        common_neighbor_link_prediction(df, min_common=2, checkpoint=False).collect(),
+        common_neighbor_link_prediction(df, min_common=2).collect(),
         key=lambda r: (r["NODE_A"], r["NODE_B"]),
     )
     assert [(r["NODE_A"], r["NODE_B"]) for r in rows] == [(1, 3), (2, 4)]
@@ -572,7 +588,7 @@ def test_link_prediction_excludes_existing_edges(spark):
     edges = [(1, 2), (2, 3), (1, 3)]
     sym = edges + [(b, a) for a, b in edges]
     df = spark.createDataFrame(sym, "SRC long, DST long")
-    assert common_neighbor_link_prediction(df, checkpoint=False).count() == 0
+    assert common_neighbor_link_prediction(df).count() == 0
 
 
 def test_link_prediction_middle_cap(spark):
@@ -585,10 +601,10 @@ def test_link_prediction_middle_cap(spark):
     star = [(0, i) for i in range(1, 6)]
     sym = star + [(b, a) for a, b in star]
     df = spark.createDataFrame(sym, "SRC long, DST long")
-    uncapped = common_neighbor_link_prediction(df, checkpoint=False)
+    uncapped = common_neighbor_link_prediction(df)
     assert uncapped.count() == 10  # C(5,2) leaf pairs
     capped = common_neighbor_link_prediction(
-        df, max_middle_degree=4, checkpoint=False
+        df, max_middle_degree=4
     )
     assert capped.count() == 0
 
@@ -605,7 +621,7 @@ def test_bfs_hops_chain_and_min_distance(spark):
     df = spark.createDataFrame(edges, "SRC long, DST long")
     got = {
         r["NODE"]: r["HOPS"]
-        for r in bfs_hops(df, sources=[1], max_hops=2, checkpoint=False).collect()
+        for r in bfs_hops(df, sources=[1], max_hops=2).collect()
     }
     assert got == {1: 0, 2: 1, 3: 1, 4: 2}
 
@@ -617,7 +633,7 @@ def test_bfs_hops_multi_source_and_absent_seed(spark):
     df = spark.createDataFrame(edges, "SRC long, DST long")
     got = {
         r["NODE"]: r["HOPS"]
-        for r in bfs_hops(df, sources=[1, 10, 99], max_hops=3, checkpoint=False).collect()
+        for r in bfs_hops(df, sources=[1, 10, 99], max_hops=3).collect()
     }
     # 99 is absent from the graph but still reported at hop 0
     assert got == {1: 0, 10: 0, 99: 0, 2: 1, 11: 1}
@@ -630,7 +646,7 @@ def test_bfs_hops_early_exit_and_validation(spark):
     # max_hops far beyond the diameter: early exit, same answer
     got = {
         r["NODE"]: r["HOPS"]
-        for r in bfs_hops(df, sources=[1], max_hops=50, checkpoint=False).collect()
+        for r in bfs_hops(df, sources=[1], max_hops=50).collect()
     }
     assert got == {1: 0, 2: 1}
     with pytest.raises(ValueError):
@@ -649,11 +665,11 @@ def test_weighted_pagerank_reduces_to_unweighted(spark):
     w1 = df.withColumn("WEIGHT", F.lit(1))
     a = {
         r["NODE"]: r["RANK_PICOS"]
-        for r in pagerank_weighted(w1, iterations=3, checkpoint=False).collect()
+        for r in pagerank_weighted(w1, iterations=3).collect()
     }
     b = {
         r["NODE"]: r["RANK_PICOS"]
-        for r in pagerank(df, iterations=3, checkpoint=False).collect()
+        for r in pagerank(df, iterations=3).collect()
     }
     assert a == b
 
@@ -670,7 +686,7 @@ def test_weighted_pagerank_matches_replay_and_drops_bad_weights(spark):
     )
     got = {
         r["NODE"]: (r["RANK_PICOS"], r["OUT_STRENGTH"])
-        for r in pagerank_weighted(df, iterations=3, checkpoint=False).collect()
+        for r in pagerank_weighted(df, iterations=3).collect()
     }
     assert 9 not in got  # all its edges were invalid
 
@@ -694,9 +710,9 @@ def test_weighted_pagerank_matches_replay_and_drops_bad_weights(spark):
 def test_weighted_pagerank_bucketed_matches_plain_and_plan(spark, tmp_path):
     """Layout-only twin: identical values to pagerank_weighted() on a
     weighted graph and on a directed graph with dangling and
-    teleport-only nodes, and every hop of the operator's OWN plan reads
-    the bucketed edge table with no exchange above its scan -- only the
-    rank side is exchanged (plus the contribution agg)."""
+    teleport-only nodes, and every hop of the plans the operator
+    materializes reads the bucketed edge table with no exchange above its
+    scan -- only the rank side is exchanged (plus the contribution agg)."""
     from aws_glue_cdc_metrics_job_spark.operators.graph import (
         pagerank_weighted,
         pagerank_weighted_bucketed,
@@ -706,15 +722,14 @@ def test_weighted_pagerank_bucketed_matches_plain_and_plan(spark, tmp_path):
     directed = [(s, d, w) for (s, d), w in zip(DIRECTED, (3, 1, 2, 2))]
     for i, edges in enumerate((weighted, directed)):
         df = spark.createDataFrame(edges, "SRC long, DST long, WEIGHT long")
-        want = sorted(
-            map(tuple, pagerank_weighted(df, iterations=3, checkpoint=False).collect())
-        )
-        got_df = pagerank_weighted_bucketed(
-            df, "wpr_bkt_test", iterations=3, num_buckets=4,
-            path=str(tmp_path / f"wpr_bkt{i}"), checkpoint=False,
-        )
+        want = sorted(map(tuple, pagerank_weighted(df, iterations=3).collect()))
+        with _checkpointed_frames() as frames:
+            got_df = pagerank_weighted_bucketed(
+                df, "wpr_bkt_test", iterations=3, num_buckets=4,
+                path=str(tmp_path / f"wpr_bkt{i}"),
+            )
         assert sorted(map(tuple, got_df.collect())) == want, edges
-        joins = _bucket_local_joins(got_df, "SRC")
+        joins = _bucket_local_joins(frames, "SRC")
         assert len(joins) == 3 and all(joins), (edges, joins)
     spark.sql("DROP TABLE IF EXISTS wpr_bkt_test")
 
@@ -728,7 +743,7 @@ def test_weighted_pagerank_symmetric_takes_fast_path(spark):
 
     edges = [(a, b, (a * 7 + b * 3) % 5 + 1) for a, b in EDGES]
     df = spark.createDataFrame(edges, "SRC long, DST long, WEIGHT long")
-    out = pagerank_weighted(df, iterations=4, checkpoint=False)
+    out = pagerank_weighted(df, iterations=4)
     assert "Cross" not in out._jdf.queryExecution().logical().toString()
     got = {r["NODE"]: (r["RANK_PICOS"], r["OUT_STRENGTH"]) for r in out.collect()}
 
@@ -779,25 +794,28 @@ class TestSsspHops:
         with pytest.raises(ValueError, match="non-negative"):
             sssp_hops(edges, [1], 2)
 
-    def test_unchecked_map_respects_broadcast_ceiling(self, spark, monkeypatch):
-        """checkpoint=False cannot count the distance map per hop, so once
-        the seed count no longer bounds it the map must not be broadcast
-        on faith: past hop 1 it is sized by |sources| + |edges|, which
-        here exceeds a ceiling of a few rows, so the later hops hint
-        shuffled-hash. Values equal the checkpointed run."""
+    def test_distance_map_respects_broadcast_ceiling(self, spark, monkeypatch):
+        """When |sources| + |edges| exceeds the broadcast ceiling (here a
+        few rows), every hop after the first is sized by the previous
+        round's counted distance map: hop 2's map (3 rows) still
+        broadcasts, hop 3's (5 rows) hints shuffled-hash."""
+        import re
+
         from aws_glue_cdc_metrics_job_spark.operators import graph as G
 
         monkeypatch.setattr(G, "_BCAST_MAX_BYTES", 3 * (48 + 16 * 2))
         assert G._bcast_row_ceiling(2) == 3
         rows = [(1, 2, 4), (2, 3, 1), (1, 3, 9), (3, 4, 2), (4, 5, 1), (2, 5, 8)]
         edges = self._edges(spark, rows)
-        unchecked = G.sssp_hops(edges, [1], 3, checkpoint=False)
-        plan = unchecked._jdf.queryExecution().analyzed().toString()
-        assert "shuffle_hash" in plan.lower(), plan
-        checked = G.sssp_hops(edges, [1], 3, checkpoint=True)
-        assert sorted(map(tuple, unchecked.collect())) == sorted(
-            map(tuple, checked.collect())
-        ) == [(1, 0), (2, 4), (3, 5), (4, 7), (5, 12)]
+        with _checkpointed_frames() as frames:
+            out = G.sssp_hops(edges, [1], 3)
+        hints = [
+            m.group(1)
+            for df in frames
+            for m in re.finditer(r"strategy=(\w+)", df._jdf.queryExecution().analyzed().toString())
+        ]
+        assert hints == ["broadcast", "broadcast", "shuffle_hash"], hints
+        assert sorted(map(tuple, out.collect())) == [(1, 0), (2, 4), (3, 5), (4, 7), (5, 12)]
 
 
 class TestNodeSidePolicy:
@@ -823,21 +841,6 @@ class TestNodeSidePolicy:
         assert "shuffle_hash" in plan.lower()
         under = G._node_side(frame, 10)._jdf.queryExecution().logical().toString()
         assert "broadcast" in under.lower()
-
-    def test_byte_budget_env_is_validated(self, monkeypatch):
-        """The byte budget is the one broadcast knob; a value that is not a
-        positive integer is rejected with an error naming the variable."""
-        from aws_glue_cdc_metrics_job_spark.operators import graph as G
-
-        name = "SPARK_GRAFT_GRAPH_BCAST_MAX_BYTES"
-        monkeypatch.delenv(name, raising=False)
-        assert G._bcast_max_bytes() == 256 * 1024**2
-        monkeypatch.setenv(name, "1048576")
-        assert G._bcast_max_bytes() == 1048576
-        for bad in ("0", "-5", "12MB", "1.5", ""):
-            monkeypatch.setenv(name, bad)
-            with pytest.raises(ValueError, match=name):
-                G._bcast_max_bytes()
 
 
 def test_null_baskets_emit_no_pairs(spark):

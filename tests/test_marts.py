@@ -248,23 +248,3 @@ class TestAllGrainsTrends:
         assert after == before
         # the plan stays executable after the view is dropped
         assert out.limit(1).count() >= 0
-
-
-
-def test_all_grains_pre_aggregate_variant_identical(spark, sf_dir):
-    """The warehouse-scale plan (finest-grain pre-aggregation feeding the
-    GROUPING SETS) is value-identical to the default Expand-over-fact
-    plan: decimal partials re-sum exactly."""
-    from aws_glue_cdc_metrics_job_spark.plans import adapters, marts
-
-    rev = adapters.order_revenue(spark, sf_dir)
-    key = ["GRAIN", "GRAIN_KEY", "RESTAURANT_ID", "ITEM_CATEGORY"]
-    got = {
-        tuple(r[k] for k in key): r["REVENUE"]
-        for r in marts.sales_trends_all_grains(rev, pre_aggregate=True).collect()
-    }
-    exp = {
-        tuple(r[k] for k in key): r["REVENUE"]
-        for r in marts.sales_trends_all_grains(rev).collect()
-    }
-    assert got == exp and len(got) > 50

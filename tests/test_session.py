@@ -63,6 +63,19 @@ def test_second_round_reuses_compiled_code(tmp_path):
     assert second <= MAX_SECOND_ROUND, (first, second)
 
 
+def test_default_driver_memory_is_half_the_machine_up_to_24g(monkeypatch):
+    """With SPARK_DRIVER_MEMORY unset, get_spark asks for half of physical
+    memory, capped at the 24g a large machine gets."""
+    from aws_glue_cdc_metrics_job_spark import session
+
+    page = 4096
+    for phys_gb, want in ((15, "7680m"), (48, "24576m"), (128, "24576m")):
+        pages = phys_gb * 1024**3 // page
+        sizes = {"SC_PHYS_PAGES": pages, "SC_PAGE_SIZE": page}
+        monkeypatch.setattr(session.os, "sysconf", sizes.__getitem__)
+        assert session.default_driver_memory() == want, phys_gb
+
+
 if __name__ == "__main__":
     sys.path.insert(0, ROOT)
     print(json.dumps(compiles_per_round(sys.argv[1])))

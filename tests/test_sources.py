@@ -184,39 +184,21 @@ def test_file_stats_pruned_read(spark, tmp_path):
     assert empty.count() == 0 and empty.columns == ["v", "tag"]
 
 
-def test_zorder_key_matches_python_reference(spark):
-    from pyspark.sql import functions as F
-
-    from aws_glue_cdc_metrics_job_spark.sources.parquet_io import zorder_key
-
-    def py_z(vals, bits):
-        z = 0
-        for i in range(bits):
-            for j, v in enumerate(vals):
-                z += ((v >> i) & 1) << (i * len(vals) + j)
-        return z
-
-    rows = [(5, 3), (0, 0), (255, 1), (170, 85)]
-    df = spark.createDataFrame(rows, "x long, y long")
-    got = [r["Z"] for r in df.select(zorder_key(["x", "y"], bits=8).alias("Z")).collect()]
-    assert got == [py_z(v, 8) for v in rows]
-
-
 def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
     from pyspark.sql import functions as F
 
+    from aws_glue_cdc_metrics_job_spark.functions.zorder import write_zordered
     from aws_glue_cdc_metrics_job_spark.sources.parquet_io import (
         build_file_stats,
         read_pruned,
         write_sorted,
-        write_zordered,
     )
 
     grid = spark.range(4096).select(
         (F.col("id") % 64).alias("x"), (F.col("id") / 64).cast("long").alias("y")
     )
     zpath, lpath = str(tmp_path / "zorder"), str(tmp_path / "linear")
-    write_zordered(grid, zpath, ["x", "y"], num_files=16)
+    write_zordered(grid, zpath, ["x", "y"], bits=6, num_files=16)
     write_sorted(grid, lpath, ["x"], num_files=16)
     zstats = build_file_stats(spark, zpath, ["x", "y"])
     lstats = build_file_stats(spark, lpath, ["x", "y"])

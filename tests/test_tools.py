@@ -51,6 +51,65 @@ def test_canon_cell_basics_unchanged():
     assert oc.canon_cell([1.5, None]) == "[1.5,NULL]"
 
 
+def _fake_session(sc):
+    """Stands in for a SparkSession: ``sc`` plays the JVM's SparkContext."""
+    from types import SimpleNamespace
+
+    return SimpleNamespace(sparkContext=SimpleNamespace(_jsc=SimpleNamespace(sc=sc)))
+
+
+def _fake_queries(ran, failing):
+    """Three catalog queries a, b, c with no oracle; ``failing`` maps a name
+    to the exception its Spark side raises."""
+    from types import SimpleNamespace
+
+    def query(name):
+        def fn(spark, sf_dir):
+            ran.append(name)
+            if name in failing:
+                raise failing[name]
+            return SimpleNamespace(columns=["X"], collect=lambda: [(1,)])
+
+        return fn
+
+    return {name: query(name) for name in "abc"}
+
+
+def test_oracle_check_stops_when_the_spark_jvm_dies(capsys):
+    """A Spark error after which the session's JVM is gone stops the run with
+    one line naming the query and the count not run, instead of reporting
+    every later query as a connection failure."""
+    from py4j.protocol import Py4JNetworkError
+
+    oc = _load_oracle_check()
+    refused = Py4JNetworkError("An error occurred while trying to connect to the Java server")
+
+    def dead_jvm():
+        raise refused
+
+    ran = []
+    qs = _fake_queries(ran, {"a": refused})
+    assert oc.check_all(_fake_session(dead_jvm), "unused", qs, {}, set()) == 1
+    out = capsys.readouterr().out.splitlines()
+    assert ran == ["a"]
+    assert len(out) == 1 and out[0].startswith("ABORT a:") and "2 queries not run" in out[0]
+
+
+def test_oracle_check_goes_on_after_a_query_error_in_a_live_session(capsys):
+    """A Spark error in a session whose JVM is alive is one FAIL, and the
+    run goes on to the next query."""
+    from types import SimpleNamespace
+
+    oc = _load_oracle_check()
+    ran = []
+    qs = _fake_queries(ran, {"a": RuntimeError("query failed")})
+    alive = _fake_session(lambda: SimpleNamespace(isStopped=lambda: False))
+    assert oc.check_all(alive, "unused", qs, {}, set()) == 1
+    out = capsys.readouterr().out
+    assert ran == ["a", "b", "c"]
+    assert "FAIL  a: spark error: query failed" in out and "1 failed, 2 rows-only" in out
+
+
 def test_bench_json_contract(monkeypatch, capsys, tmp_path):
     """bench.py must emit ONE parseable JSON line with the driver's
     expected keys, under the 2000-char stdout-tail budget. Runs a

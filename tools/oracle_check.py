@@ -124,42 +124,40 @@ def duckdb_run(sf_dir: str, sql: str):
     return cols, rows, divergences
 
 
-def main() -> int:
-    argv = sys.argv[1:]
-    vanilla = "--vanilla" in argv
-    argv = [a for a in argv if a != "--vanilla"]
-    sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
-    only = set(argv[1:])
+def session_alive(spark) -> bool:
+    """One cheap call into the session's JVM. False when the JVM is gone (the
+    py4j gateway refuses the connection) or its SparkContext has stopped."""
+    from py4j.protocol import Py4JError
 
-    sys.path.insert(0, ".")
-    import __spark_entry__ as e
+    try:
+        return not spark.sparkContext._jsc.sc().isStopped()
+    except (Py4JError, OSError):
+        return False
 
-    if vanilla:
-        from pyspark.sql import SparkSession
 
-        spark = (
-            SparkSession.builder.master("local[32]")
-            .appName("oracle-check-vanilla")
-            .config("spark.sql.shuffle.partitions", "32")
-            .getOrCreate()
-        )
-    else:
-        from aws_glue_cdc_metrics_job_spark.session import get_spark
-
-        spark = get_spark(app_name="oracle-check")
-    qs = e.queries()
-    oracles = e.oracle_sql()
+def check_all(spark, sf_dir: str, qs: dict, oracles: dict, only: set[str]) -> int:
+    """Run every selected query in Spark and its oracle in DuckDB, print one
+    line per query and a summary; 0 iff nothing failed. A Spark error after
+    which the session's JVM is gone stops the run: every later query would
+    fail the same way, for the crash and not for a wrong answer."""
+    names = [n for n in sorted(qs) if not only or n in only]
     failed, passed, skipped = [], [], []
 
-    for name, fn in sorted(qs.items()):
-        if only and name not in only:
-            continue
+    for i, name in enumerate(names):
+        fn = qs[name]
         t0 = time.monotonic()
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
             srows = sdf.collect()
         except Exception as ex:  # noqa: BLE001
+            if not session_alive(spark):
+                print(
+                    f"ABORT {name}: the Spark JVM is gone ({str(ex)[:200]});"
+                    f" {len(names) - i - 1} queries not run",
+                    flush=True,
+                )
+                return 1
             failed.append((name, f"SPARK ERROR: {ex}"))
             print(f"FAIL  {name}: spark error: {str(ex)[:500]}", flush=True)
             continue
@@ -196,6 +194,32 @@ def main() -> int:
 
     print(f"\n{len(passed)} passed, {len(failed)} failed, {len(skipped)} rows-only")
     return 1 if failed else 0
+
+
+def main() -> int:
+    argv = sys.argv[1:]
+    vanilla = "--vanilla" in argv
+    argv = [a for a in argv if a != "--vanilla"]
+    sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
+    only = set(argv[1:])
+
+    sys.path.insert(0, ".")
+    import __spark_entry__ as e
+
+    if vanilla:
+        from pyspark.sql import SparkSession
+
+        spark = (
+            SparkSession.builder.master("local[32]")
+            .appName("oracle-check-vanilla")
+            .config("spark.sql.shuffle.partitions", "32")
+            .getOrCreate()
+        )
+    else:
+        from aws_glue_cdc_metrics_job_spark.session import get_spark
+
+        spark = get_spark(app_name="oracle-check")
+    return check_all(spark, sf_dir, e.queries(), e.oracle_sql(), only)
 
 
 if __name__ == "__main__":
