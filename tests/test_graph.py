@@ -794,7 +794,7 @@ class TestSsspHops:
         with pytest.raises(ValueError, match="non-negative"):
             sssp_hops(edges, [1], 2)
 
-    def test_distance_map_respects_broadcast_ceiling(self, spark, monkeypatch):
+    def test_unchecked_map_respects_broadcast_ceiling(self, spark, monkeypatch):
         """When |sources| + |edges| exceeds the broadcast ceiling (here a
         few rows), every hop after the first is sized by the previous
         round's counted distance map: hop 2's map (3 rows) still
