@@ -10,8 +10,7 @@ values, then right-closed CASE ranges matching qcut's ``(lo, hi]`` bins.
 The exact cuts come from the distributed-ranking shape
 (:func:`ranked_quantile_cuts`): range-bucketed order statistics with
 bounded driver collects -- NOT from ``percentile``, whose aggregation
-state buffers every value in a single reducer (the 100 TB OOM VERDICT r6
-flagged). Distributed end-to-end; driver traffic is <= buckets split
+state buffers every value in a single reducer (an OOM at 100 TB). Distributed end-to-end; driver traffic is <= buckets split
 points + <= buckets counts + <= 2 neighbor rows per cut.
 """
 
@@ -38,7 +37,7 @@ def exact_quantile_cuts(df: DataFrame, value_col: str, probs: list[float]) -> Da
 # A rank-holding bucket whose row count exceeds max(window_cap,
 # _DOMINANT_FACTOR * uniform-share) is "dominant": heavy ties collapsed the
 # approxQuantile boundaries under set(), so the partitioned row_number
-# window would sort ~the whole input in ONE task (ADVICE r7 medium). Such
+# window would sort ~the whole input in ONE task. Such
 # buckets are resolved without a window: a tied single-value bucket yields
 # its value directly (any row IS the order statistic), anything else
 # recurses the bucketing within the bucket. Depth-capped; the window path
@@ -196,7 +195,7 @@ def ranked_quantile_cuts(
     """Exact interpolated quantiles, bit-identical to Spark's
     ``percentile`` (and hence to the DuckDB ``quantile_cont`` oracles),
     computed with the distributed-ranking shape instead of percentile's
-    single aggregation state (VERDICT r6 item 1, the last scale-killer).
+    single aggregation state.
 
     ``percentile()`` buffers EVERY input value in ONE reducer -- at 100 TB
     (billions of entity rows) that is a guaranteed OOM. Here every job has

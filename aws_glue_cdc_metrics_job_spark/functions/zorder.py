@@ -28,7 +28,7 @@ def _norm(col: str, lo: str, hi: str, bits: int, div: str = "DIV") -> str:
     is the engine's integer-division operator: Spark spells it DIV,
     DuckDB //.
 
-    Out-of-bounds values are CLAMPED to the lattice ends (ADVICE r6):
+    Out-of-bounds values are CLAMPED to the lattice ends:
     without the clamp, values above ``hi`` alias modulo 2^bits through the
     interleave (norm 256 at bits=8 sorts like 0), and values below ``lo``
     hit the one place Spark's DIV (truncate toward zero) and DuckDB's //

@@ -198,8 +198,9 @@ def _scoped_persist(df: DataFrame) -> DataFrame:
     least-recently-used persisted plan is unpersisted once more than
     _PERSIST_CAP distinct plans are alive, so repeated calls over
     different inputs cannot accumulate cache entries for the process
-    lifetime (the round-1 leak) while the current call keeps the
-    fully-lazy persist plan (the round-2 fix's regression).
+    lifetime (an unbounded cache leak) while the current call keeps the
+    fully-lazy persist plan (an eager checkpoint instead costs +50%, see
+    below).
 
     The scope is keyed by semanticHash(): Spark's CacheManager dedups
     identical canonicalized plans into ONE cache entry shared by every
@@ -285,8 +286,8 @@ def _minhash_sighset_bands(
     three plan inputs, and Catalyst does not reuse the shingle-window
     subplan across them (4x recompute measured) -- persist() makes it one
     shingle pass: K longs + a shingle-hash array per doc (~1-2 KB),
-    spillable. The round-2 eager localCheckpoint+unpersist fixed the
-    unbounded-cache leak but cost +50% (synchronous materialization,
+    spillable. An eager localCheckpoint+unpersist also stops the
+    unbounded-cache leak but costs +50% (synchronous materialization,
     truncated lineage blinds AQE); _scoped_persist keeps the fast
     fully-lazy persist plan and bounds the leak instead: at most
     _PERSIST_CAP signature caches stay alive process-wide, oldest evicted
@@ -333,15 +334,15 @@ def minhash_index(
     (parquet_io.write_bucketed) so each delivery's candidate probe is a
     co-located join, and the hset table bucketed by id.
 
-    EXEMPLAR-COMPACTED (VERDICT r7 item 3): documents with IDENTICAL
+    EXEMPLAR-COMPACTED: documents with IDENTICAL
     shingle sets keep only their min-id representative in the index.
     Rejection decisions are unchanged -- identical hsets give identical
     Jaccard against any probe, so one exemplar answers for the group --
     but a corpus holding C exact copies of a text contributes 1 candidate
     per probe instead of C. Without this, the per-delivery candidate
     count (and the decade scaling of the whole operator) grows O(C^2) on
-    copy-heavy corpora; measured 11.76x for 10x data at 100 copies/doc in
-    BENCH r7, the one >10x decade ratio."""
+    copy-heavy corpora; measured 11.76x for 10x data at 100 copies/doc
+    without it."""
     sighset, banded = _minhash_sighset_bands(df, id_col, text_col, n, num_perm, bands, seed)
     # reps feeds BOTH outputs: checkpoint the id list (doc-id-sized) so
     # the md5(sorted-hset-json) exemplar pass runs once, not per consumer
@@ -394,7 +395,7 @@ def minhash_dedup_incremental(
     appends :func:`minhash_index` of the ADMITTED rows to the stored index
     (associative, same seed/params required).
 
-    Copy-heavy batches stay linear (VERDICT r7 item 3): batch documents
+    Copy-heavy batches stay linear: batch documents
     with IDENTICAL shingle sets collapse to their min-id exemplar first --
     the others are rejected outright (their exemplar is a smaller-id
     J=1.0 near-dup by definition) -- and only exemplars enter the banded

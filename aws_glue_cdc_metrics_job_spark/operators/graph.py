@@ -344,17 +344,14 @@ def _hop(
 
     The node side takes :func:`_node_side`'s broadcast/shuffled-hash
     policy. An edge table bucketed on ``key`` passes its bucket count as
-    ``buckets``: the join is then forced to sort-merge and the node frame
-    is hash-partitioned into the bucket layout, so the executed plan
-    reads the edge side bucket-local with NO exchange above its scan and
-    only the node-sized frame moves (plan-pinned in tests/test_graph.py).
-    The explicit partitioning keeps that plan independent of how the node
-    frame arrives: a frame hash-partitioned on NODE at another width (an
-    aggregate's output read without a checkpoint in between) made the
-    planner re-shuffle the EDGE side instead."""
+    ``buckets``: the join is then forced to sort-merge, so the executed
+    plan reads the edge side bucket-local with NO exchange above its scan
+    and only the node-sized frame moves into the bucket layout, whatever
+    the width of the checkpoint it arrives as (plan-pinned in
+    tests/test_graph.py)."""
     other = "DST" if key == "SRC" else "SRC"
     if buckets:
-        e, f = ed.hint("merge"), frame.repartition(buckets, "NODE")
+        e, f = ed.hint("merge"), frame
     else:
         e, f = ed, _node_side(frame, n)
     return (

@@ -170,7 +170,7 @@ def decode_real(payload: bytes, media_type: str) -> dict:
     n_bytes + mean intensity + dimension). Images: PIL when installed
     (any format Pillow reads); otherwise the pure-Python grayscale-PNG
     subset decoder, so the real-decode path is exercisable in THIS
-    environment, not just documented (VERDICT r4 item 9) -- for an image
+    environment, not just documented -- for an image
     outside that subset with no PIL, NotImplementedError names the
     missing dependency. Audio/video still need torchaudio/pyav and stay
     honestly unimplemented."""

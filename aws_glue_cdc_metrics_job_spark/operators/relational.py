@@ -239,8 +239,8 @@ def basket_pairs(
     # cheap agg above it measured faster than materializing the arrays)
     baskets = (
         # NULL baskets carry no pair signal and must not count in the
-        # lift denominator (ADVICE r8: the old self-join never matched
-        # NULL keys; groupBy would collapse them into ONE pseudo-basket)
+        # lift denominator (a self-join never matches NULL keys;
+        # groupBy would collapse them into ONE pseudo-basket)
         df.select(F.col(basket_col).alias("__b"), F.col(item_col).alias("__i"))
         .where(F.col("__b").isNotNull())
         .groupBy("__b")

@@ -453,7 +453,7 @@ def brute_force_topk_fast(
     shuffle at k rows per query per partition; a final window rank merges.
 
     ~10-50x faster than the zip_with/aggregate expression form on wide
-    vectors. Since round 6 this path is decision-identical to
+    vectors. This path is decision-identical to
     :func:`brute_force_topk`: cosines are rounded to 6 dp (_rhu_np, the
     same rounding the expression form and the DuckDB oracle apply) BEFORE
     any selection, and per-partition survivors are chosen under the exact

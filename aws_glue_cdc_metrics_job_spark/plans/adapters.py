@@ -57,7 +57,7 @@ def _memoized(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
     with _SILVER_LOCK:
         if key not in _SILVER_CACHE:
             df = build().cache()
-            # Materialize EAGERLY (VERDICT r7 item 4): a cold multi-branch mart
+            # Materialize EAGERLY: a cold multi-branch mart
             # (churn profile joins three aggregations of order_revenue)
             # otherwise submits its branch stages concurrently and they RACE
             # to compute the still-empty cache partitions -- up to branch-count

@@ -14,8 +14,29 @@ from pyspark.sql import DataFrame, SparkSession
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
 
+# A query's roles in bench.py, the catalog benchmark, which builds its query
+# sets from these tags. An untagged query runs in the headline and 10x blocks
+# with one measured pass after the warm-up pass.
+TAG_NAMES = frozenset({
+    # left out of every bench.py block
+    "untimed",
+    # a second measured pass; the bench keeps the faster one (the plans the
+    # reference's gold surface rests on, and queries one slow outlier run
+    # would otherwise misreport)
+    "min2",
+    # also timed on the hot-key data set, against its uniform 10x time
+    "skew",
+    # left out of the 10x block: its cost grows with the square of a block
+    "unscaled",
+})
+TAGS: dict[str, frozenset[str]] = {}
 
-def query(name: str, oracle: str | None = None):
+
+def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
+    unknown = sorted(set(tags) - TAG_NAMES)
+    if unknown:
+        raise ValueError(f"catalog query {name!r}: unknown tags {unknown}; known: {sorted(TAG_NAMES)}")
+
     def deco(fn):
         # a second registration under an existing name would SILENTLY
         # clobber the first query and its oracle (dict assignment), which
@@ -28,6 +49,7 @@ def query(name: str, oracle: str | None = None):
                 f"{prior.__module__}.{prior.__qualname__}; pick a new name"
             )
         QUERIES[name] = fn
+        TAGS[name] = frozenset(tags)
         if oracle is not None:
             ORACLE[name] = oracle
         return fn
@@ -35,61 +57,60 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
-# The driver grades the FIRST 50 catalog entries (served in this order)
-# each round. Window history: r2 graded one representative per mechanism;
-# r3 rotated onto the then-ungraded tail; r4-r5 graded the post-window
-# additions; r8 graded everything born in the interrupted round-8 build
-# (CORRECTNESS_r08: 47/50 full match, 3 rows-only by design, zero
-# failures).
-#
-# Round 9 (this window, an optimization round): the head is every query
-# whose OPERATOR PLAN round 9 changed — the full iterative-graph family
-# (edge-frame materialization order, width policy, degree-on-rank-side
-# hop joins, byte-ceiling broadcast policy), the tokenize-once
-# selection-pipeline/bigram/DSIR path, the exemplar-checkpoint minhash
-# dedup path, and basket_pairs' NULL-basket filter — then the three
-# rows-only-by-design members of the r8 window PAIRED with their exact
-# oracle-green twins (VERDICT r8 item 8: the window should show the
-# pairing), the two r8 hot-spot queries now under min-of-two, and the
-# standing insurance re-grades of the reference gold surface + BASELINE
-# anchors. Everything else keeps its r2-r8 green row as evidence.
+# Correctness grading covers the FIRST 50 catalog entries, served in this
+# order. The window holds, in this order:
+# - the 28 queries the previous window left out, graded only in the window
+#   that followed their addition, so that their rows are current again;
+# - the walk-kernel family, whose plans the shared node prep, hop step and
+#   walk loop rewrote, and whose bucketed hops no longer repartition the
+#   node side;
+# - the reference's 12 gold marts, graded every window as insurance.
+# Every other query keeps its last green row as evidence.
 GRADE_FIRST: list[str] = [
-    # -- round-9 plan changes: iterative graph family
+    # -- left out of the previous window
+    "customers_name_fuzzy_pairs",
+    "customers_survival_hazard",
+    "docs_bm25_ndcg",
+    "docs_mojibake_screen",
+    "docs_stratified_kfold",
+    "emb_ivf_pq_topk",
+    "emb_mmr_select",
+    "events_attribution_ushape",
+    "events_calibration_bins",
+    "events_daily_mad_anomalies",
+    "events_gini_best_split",
+    "events_l_diversity",
+    "events_mann_whitney",
+    "events_pr_curve",
+    "events_value_drift",
+    "events_value_exact_percentiles",
+    "lineitem_correlation_matrix",
+    "lineitem_qty_tied_percentiles",
+    "lineitem_zorder_buckets",
+    "multimodal_features",
+    "orders_compacted_snapshot",
+    "orders_schema_evolution",
+    "orders_seasonal_decompose",
+    "orders_target_encoding",
+    "orders_time_travel",
+    "orders_version_changes",
+    "orders_versioned_delete",
+    "orders_versioned_merge",
+    # -- the walk-kernel family
     "supply_pagerank_directed",
     "parts_copurchase_pagerank",
     "parts_copurchase_pagerank_bucketed",
     "parts_copurchase_pagerank_weighted",
     "parts_copurchase_pagerank_weighted_bucketed",
     "parts_affinity_pagerank",
-    "parts_copurchase_communities",
-    "parts_bfs_reach",
-    "supply_sssp_3hops",
     "supply_hits_scores",
     "supply_hits_scores_bucketed",
     "supply_katz_centrality",
     "supply_katz_centrality_growing",
-    "parts_copurchase_triangles",
-    "parts_link_prediction",
-    "lineitem_basket_pairs",
-    # -- round-9 plan changes: tokenize-once text path
-    "docs_selection_pipeline",
-    "docs_dsir_weights",
-    "docs_bigram_logprob",
-    "docs_bigram_ppx_scored",
-    # -- r8-window rows-only members paired with their exact twins
-    "docs_incremental_near_dedup",
-    "docs_incremental_dedup",
-    "docs_minhash_lsh_pairs",
-    "docs_ngram_jaccard_pairs",
-    "mart_customer_clv_segment_approx",
-    "mart_customer_clv_segment",
-    # -- r8 hot-spot queries (VERDICT r8 items 1-2; now MIN2 in bench)
-    "emb_kmeans_update",
-    "events_value_bootstrap_ci",
-    # -- standing insurance: the reference's gold surface
-    "order_revenue",
+    # -- the reference's gold marts
     "fact_ltv_daily",
     "mart_customer_ltv_snapshot",
+    "mart_customer_clv_segment",
     "mart_customer_rfm",
     "mart_customer_churn_profile",
     "mart_sales_trends_daily",
@@ -99,17 +120,6 @@ GRADE_FIRST: list[str] = [
     "mart_loyalty_program_impact",
     "mart_location_performance",
     "mart_discount_effectiveness",
-    # -- standing insurance: BASELINE.md anchors + heavy cross-family
-    "events_asof_attribution",
-    "events_interval_join",
-    "customers_semi_urgent",
-    "customers_anti_urgent",
-    "lineitem_hash_sample",
-    "docs_train_split",
-    "pricing_summary",
-    "cdc_snapshot_diff",
-    "cdc_apply_changes",
-    "events_sessionize",
 ]
 
 

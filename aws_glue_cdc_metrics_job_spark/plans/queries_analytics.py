@@ -26,6 +26,7 @@ from .catalog import query
 
 @query(
     "orders_intersect_custkeys",
+    tags=("untimed",),
     oracle="""
 SELECT o_custkey AS CUST_ID FROM orders WHERE o_orderstatus = 'F'
 INTERSECT
@@ -49,6 +50,7 @@ _PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
 
 @query(
     "orders_priority_pivot",
+    tags=("untimed",),
     oracle="""
 SELECT o_orderstatus AS STATUS,
        COUNT(*) FILTER (WHERE o_orderpriority = '1-URGENT') AS "1-URGENT",
@@ -74,6 +76,7 @@ def q_orders_priority_pivot(spark: SparkSession, sf_dir: str):
 
 @query(
     "pricing_unpivot",
+    tags=("untimed",),
     oracle=f"""
 WITH w AS (
   SELECT l_returnflag AS RETURN_FLAG,
@@ -108,6 +111,7 @@ def q_pricing_unpivot(spark: SparkSession, sf_dir: str):
 
 @query(
     "events_lead_trailing7d",
+    tags=("untimed",),
     oracle=f"""
 SELECT event_id AS EVENT_ID, user_id AS USER_ID, ts AS TS,
        date_diff('microsecond', ts,
@@ -144,6 +148,7 @@ def q_events_lead_trailing7d(spark: SparkSession, sf_dir: str):
 
 @query(
     "orders_price_percentiles",
+    tags=("untimed",),
     oracle=f"""
 SELECT o_orderstatus AS STATUS,
        {sql_rhu("quantile_cont(o_totalprice, 0.5)", 4)} AS MEDIAN_PRICE,
@@ -175,6 +180,7 @@ def _poisson_case_sql() -> str:
 
 @query(
     "events_value_bootstrap_ci",
+    tags=("min2",),
     oracle=f"""
 WITH reps AS (
   SELECT event_type, value,
@@ -263,6 +269,7 @@ def q_events_value_winsorized(spark: SparkSession, sf_dir: str):
 
 @query(
     "events_value_ntile",
+    tags=("skew",),
     oracle="""
 WITH b AS (
   SELECT value, NTILE(4) OVER (ORDER BY value, event_id) AS BUCKET
@@ -296,6 +303,7 @@ def q_events_value_ntile(spark: SparkSession, sf_dir: str):
 
 @query(
     "orders_grouping_sets",
+    tags=("untimed",),
     oracle="""
 SELECT o_orderstatus AS STATUS, o_orderpriority AS PRIORITY,
        GROUPING(o_orderstatus) AS G_STATUS, GROUPING(o_orderpriority) AS G_PRIORITY,
@@ -324,6 +332,7 @@ def q_orders_grouping_sets(spark: SparkSession, sf_dir: str):
 
 @query(
     "events_json_props",
+    tags=("untimed",),
     oracle="""
 SELECT event_type AS EVENT_TYPE,
        CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS SUM_K,
@@ -347,6 +356,7 @@ def q_events_json_props(spark: SparkSession, sf_dir: str):
 
 @query(
     "users_event_type_profile",
+    tags=("untimed",),
     oracle="""
 SELECT user_id AS USER_ID,
        string_agg(DISTINCT event_type, ',' ORDER BY event_type) AS EVENT_TYPES,
@@ -364,6 +374,7 @@ def q_users_event_type_profile(spark: SparkSession, sf_dir: str):
 
 @query(
     "events_funnel",
+    tags=("skew",),
     oracle="""
 WITH s1 AS (
   SELECT user_id, MIN(ts) AS t FROM events WHERE event_type = 'view' GROUP BY 1
@@ -402,6 +413,7 @@ def q_events_funnel(spark: SparkSession, sf_dir: str):
 
 @query(
     "events_retention_cohorts",
+    tags=("skew",),
     oracle="""
 WITH anchors AS (
   SELECT user_id, CAST(date_trunc('week', MIN(ts)) AS DATE) AS COHORT_WEEK
@@ -431,6 +443,7 @@ def q_events_retention_cohorts(spark: SparkSession, sf_dir: str):
 
 @query(
     "events_variant_props",
+    tags=("untimed",),
     oracle="""
 SELECT event_type AS EVENT_TYPE,
        MIN(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS MIN_K,
@@ -612,13 +625,14 @@ def q_events_value_trend(spark: SparkSession, sf_dir: str):
     return grouped_trend(daily, "__x", "__y", ["EVENT_TYPE"])
 
 
-# --- round 4: sessionization, cohorts, concentration, deep-join analytics.
+# --- sessionization, cohorts, concentration, deep-join analytics.
 # Integer/decimal lattices throughout (micros, cents, ppm) per the repo's
 # cross-engine parity convention -- no rounded-double output columns.
 
 
 @query(
     "events_sessionize_stats",
+    tags=("skew",),
     oracle="""
 WITH e AS (
   SELECT user_id, ts, epoch_us(ts) AS us,
@@ -679,6 +693,7 @@ def q_events_sessionize_stats(spark: SparkSession, sf_dir: str):
 
 @query(
     "events_activity_cohorts",
+    tags=("skew",),
     oracle="""
 WITH f AS (
   SELECT user_id, CAST(MIN(date_trunc('week', ts)) AS DATE) AS cohort FROM events GROUP BY 1
@@ -874,6 +889,7 @@ def q_nation_trade_volume(spark: SparkSession, sf_dir: str):
 
 @query(
     "events_inactivity_gaps",
+    tags=("skew",),
     oracle="""
 WITH g AS (
   SELECT user_id,
@@ -1045,7 +1061,8 @@ def q_orders_bulk_quantity(spark: SparkSession, sf_dir: str):
     )
 
 
-@query("events_value_bootstrap_ci_fast")  # no oracle: xxhash64 draws exist only Spark-side
+# no oracle: xxhash64 draws exist only Spark-side
+@query("events_value_bootstrap_ci_fast", tags=("min2",))
 def q_events_value_bootstrap_ci_fast(spark: SparkSession, sf_dir: str):
     """The 100TB-default bootstrap path: identical replicate/percentile
     machinery to events_value_bootstrap_ci but one JVM xxhash64 per
@@ -1072,6 +1089,7 @@ def q_events_value_bootstrap_ci_fast(spark: SparkSession, sf_dir: str):
 
 @query(
     "events_value_rank_percentiles",
+    tags=("skew",),
     oracle="""
 WITH p AS (SELECT value FROM events WHERE event_type = 'purchase'),
 n AS (SELECT COUNT(*) AS n FROM p)
@@ -1123,7 +1141,7 @@ FROM t JOIN o vlo ON vlo.r = t.lo + 1 JOIN o vhi ON vhi.r = t.hi + 1
 def q_events_value_exact_percentiles(spark: SparkSession, sf_dir: str):
     """Exact INTERPOLATED P25/P50/P95/P99 of event values computed with
     the distributed-ranking quantile machinery
-    (functions/quantile.ranked_quantile_cuts, new in round 7): no
+    (functions/quantile.ranked_quantile_cuts): no
     single-reducer percentile buffer anywhere -- three bounded-collect
     jobs locate the two neighbor order statistics per cut and the driver
     interpolates with percentile()'s own IEEE formula. The oracle
@@ -1144,6 +1162,7 @@ def q_events_value_exact_percentiles(spark: SparkSession, sf_dir: str):
 
 @query(
     "lineitem_qty_tied_percentiles",
+    tags=("min2",),
     oracle="""
 WITH v AS (SELECT CAST(l_quantity AS DOUBLE) AS value FROM lineitem WHERE l_quantity IS NOT NULL),
 n AS (SELECT COUNT(*) AS cnt FROM v),
@@ -1166,8 +1185,8 @@ def q_lineitem_qty_tied_percentiles(spark: SparkSession, sf_dir: str):
     """Exact interpolated P25/P50/P90/P99 over a HEAVY-TIE column:
     l_quantity takes ~50 integer values, so every row shares its value
     with ~2% of the table and approxQuantile's split points collapse onto
-    the tied values. The round-8 tie-isolating bucketing
-    (functions/quantile._order_statistics, ADVICE r7 medium) gives each
+    the tied values. The tie-isolating bucketing
+    (functions/quantile._order_statistics) gives each
     collapsed boundary value its own single-valued bucket resolved from
     min==max -- window_cap=64 makes every tied bucket dominant at EVERY
     graded scale, so this query fails loudly if the dominant-bucket path
@@ -1379,7 +1398,7 @@ def q_parts_affinity_pagerank(spark: SparkSession, sf_dir: str):
     )
 
 
-# --- round-6: general DIRECTED PageRank (dangling mass + teleport-only
+# --- general DIRECTED PageRank (dangling mass + teleport-only
 # nodes) and the bucketed-edge layout twin.
 
 
@@ -1434,8 +1453,8 @@ def q_supply_pagerank_directed(spark: SparkSession, sf_dir: str):
     """PageRank on a genuinely DIRECTED graph: parts point at the
     suppliers that ship them (edge part -> 1e9+supplier, bipartite by
     construction), so EVERY supplier node is a dangling sink and every
-    part node is teleport-only -- the exact shape on which the round-5
-    recurrence silently dropped nodes. The round-6 general path keeps the
+    part node is teleport-only -- the exact shape on which an in-edge-only
+    recurrence silently drops nodes. The general path keeps the
     full universe alive each hop (left join + coalesce) and redistributes
     the dangling mass uniformly (Page et al. 1999 section 2.7), all on
     the integer picos lattice, replayed verbatim by the unrolled-CTE
@@ -1471,9 +1490,9 @@ def q_parts_copurchase_pagerank_bucketed(spark: SparkSession, sf_dir: str):
     the node-sized rank frame moves per iteration. The graded instance
     honestly pays the bucketing write inside the query; a long-running
     deployment (the operator's real target) pays it once and every
-    subsequent hop, restart, and re-run rides the layout for free. This
-    closes the round-5 VERDICT's one perf-weak item: the iterative
-    workload's per-hop edge reshuffle is now an ingest-time cost."""
+    subsequent hop, restart, and re-run rides the layout for free: the
+    iterative workload's per-hop edge reshuffle becomes an ingest-time
+    cost."""
     import hashlib
     import os
     import tempfile
@@ -1625,7 +1644,7 @@ def q_events_audience_overlap(spark: SparkSession, sf_dir: str):
     )
 
 
-# --- round-6: HITS hubs & authorities on the integer nanos lattice, the
+# --- HITS hubs & authorities on the integer nanos lattice, the
 # eigenvector companion to PageRank -- the oracle unrolls both half-steps
 # of every iteration (pool, then L1-renormalize by the 1-row global mass).
 _HITS_SCALE = 10**9
@@ -1821,14 +1840,14 @@ def q_supply_katz_centrality(spark: SparkSession, sf_dir: str):
     )
 
 
-@query("supply_katz_centrality_growing", oracle=_katz_oracle(3, 5000))
+@query("supply_katz_centrality_growing", tags=("min2",), oracle=_katz_oracle(3, 5000))
 def q_supply_katz_centrality_growing(spark: SparkSession, sf_dir: str):
     """Katz on the same supply graph with alpha = 5000 ppm -- a GROWING
     truncated walk (alpha * max_in_degree > 1e6 from sf0.1 up), i.e.
     exactly the regime the old spectral-radius guard hard-failed even
     though the 3-hop result is finite, exact, and far inside BIGINT
     (worst-case replay ~4e13 nanos at sf0.1, ~4e16 at the 100x decade
-    point; ADVICE r7). Graded with the same unrolled-recurrence oracle as
+    point). Graded with the same unrolled-recurrence oracle as
     supply_katz_centrality, so the fix is pinned cross-engine rather than
     only unit-tested."""
     from ..operators.graph import katz_centrality
@@ -2074,7 +2093,7 @@ def q_parts_copurchase_pagerank_weighted(spark: SparkSession, sf_dir: str):
 @query("parts_copurchase_pagerank_weighted_bucketed", oracle=_wpr_oracle(3))
 def q_parts_copurchase_pagerank_weighted_bucketed(spark: SparkSession, sf_dir: str):
     """Layout-only twin of parts_copurchase_pagerank_weighted (SAME
-    oracle, same lattice trajectory; VERDICT r6 item 7): the weight- and
+    oracle, same lattice trajectory): the weight- and
     strength-annotated co-purchase edges are persisted once, hash-bucketed
     + sorted on SRC, and each of the three hops sort-merge-joins the rank
     table against that bucketed scan with ZERO exchange above the edge
@@ -2150,8 +2169,8 @@ FROM ({body})"""
 
 @query("events_pr_curve", oracle=_pr_curve_oracle([1000, 2500, 5000, 7500, 9000]))
 def q_events_pr_curve(spark: SparkSession, sf_dir: str):
-    """Precision/recall threshold sweep (operators/stats.pr_curve, new in
-    round 7) treating the event value as a classifier score for the
+    """Precision/recall threshold sweep (operators/stats.pr_curve)
+    treating the event value as a classifier score for the
     is-purchase label -- the evaluation step a trained quality filter
     needs before gating a corpus. Thresholds are exact PERCENTILE_DISC
     data values from the distributed rank (no single-partition window),
@@ -2167,12 +2186,13 @@ def q_events_pr_curve(spark: SparkSession, sf_dir: str):
     )
 
 
-# --- round 8b: nonparametric testing, survival, drift monitoring,
+# --- nonparametric testing, survival, drift monitoring,
 # multi-touch attribution, seasonal decomposition, lakehouse DELETE
 
 
 @query(
     "events_mann_whitney",
+    tags=("min2",),
     oracle="""
 WITH lat AS (
   SELECT CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS v,
@@ -2223,6 +2243,7 @@ def q_events_mann_whitney(spark: SparkSession, sf_dir: str):
 
 @query(
     "customers_survival_hazard",
+    tags=("min2",),
     oracle="""
 WITH per AS (
   SELECT o_custkey, MIN(o_orderdate) AS f, MAX(o_orderdate) AS l
@@ -2279,6 +2300,7 @@ def q_customers_survival_hazard(spark: SparkSession, sf_dir: str):
 
 @query(
     "events_value_drift",
+    tags=("min2",),
     oracle="""
 WITH base AS (
   SELECT CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS v,
@@ -2333,6 +2355,7 @@ def q_events_value_drift(spark: SparkSession, sf_dir: str):
 
 @query(
     "events_attribution_ushape",
+    tags=("min2",),
     oracle="""
 WITH ev AS (
   SELECT user_id AS u, ts, event_type AS ty, value
@@ -2405,6 +2428,7 @@ def q_events_attribution_ushape(spark: SparkSession, sf_dir: str):
 
 @query(
     "orders_versioned_delete",
+    tags=("min2",),
     oracle=f"""
 SELECT CAST(1 AS BIGINT) AS VERSION, CAST(1 AS BIGINT) AS N_DIRS,
        CAST(COUNT(*) AS BIGINT) AS N_ROWS, {sql_dsum("o_totalprice", 2)} AS TOTAL_PRICE
@@ -2447,6 +2471,7 @@ def q_orders_versioned_delete(spark: SparkSession, sf_dir: str):
 
 @query(
     "orders_seasonal_decompose",
+    tags=("min2",),
     oracle="""
 WITH daily AS (
   SELECT CAST(o_orderdate AS DATE) AS DAY,
@@ -2504,6 +2529,7 @@ def q_orders_seasonal_decompose(spark: SparkSession, sf_dir: str):
 
 @query(
     "events_calibration_bins",
+    tags=("min2",),
     oracle="""
 WITH base AS (
   SELECT CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS v,
@@ -2552,6 +2578,7 @@ def q_events_calibration_bins(spark: SparkSession, sf_dir: str):
 
 @query(
     "orders_target_encoding",
+    tags=("min2",),
     oracle="""
 WITH g AS (
   SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS N,
@@ -2584,6 +2611,7 @@ def q_orders_target_encoding(spark: SparkSession, sf_dir: str):
 
 @query(
     "events_daily_mad_anomalies",
+    tags=("min2",),
     oracle="""
 WITH daily AS (
   SELECT CAST(ts AS DATE) AS DAY,
@@ -2636,6 +2664,7 @@ def q_events_daily_mad_anomalies(spark: SparkSession, sf_dir: str):
 
 @query(
     "events_l_diversity",
+    tags=("min2",),
     oracle="""
 SELECT event_type AS EVENT_TYPE,
        CAST(isodow(CAST(ts AS DATE)) - 1 AS BIGINT) AS DOW,
@@ -2711,7 +2740,7 @@ a AS (
 ORDER BY COL_A, COL_B"""
 
 
-@query("lineitem_correlation_matrix", oracle=_corr_matrix_oracle())
+@query("lineitem_correlation_matrix", tags=("min2",), oracle=_corr_matrix_oracle())
 def q_lineitem_correlation_matrix(spark: SparkSession, sf_dir: str):
     """Pairwise Pearson correlation matrix (operators/stats.
     correlation_pairs) over quantity / extended price / discount: exact
@@ -2751,7 +2780,7 @@ d{t} AS (
     return s + f"\nSELECT NODE, CAST(DIST AS BIGINT) AS DIST FROM d{k} ORDER BY NODE"
 
 
-@query("supply_sssp_3hops", oracle=_sssp_oracle())
+@query("supply_sssp_3hops", tags=("min2",), oracle=_sssp_oracle())
 def q_supply_sssp_3hops(spark: SparkSession, sf_dir: str):
     """Hop-bounded weighted shortest path (operators/graph.sssp_hops):
     cheapest 3-step route from seed parts {1,2,3} through the bipartite

@@ -27,6 +27,7 @@ _SUM_REV = sql_dsum("TOTAL_REVENUE", 4)
 
 @query(
     "order_revenue",
+    tags=("min2",),
     oracle=f"""
 WITH {CTE_ORDER_REVENUE}
 SELECT * FROM order_revenue
@@ -45,6 +46,7 @@ _CUMULATIVE = sql_dsum_over(
 
 @query(
     "fact_ltv_daily",
+    tags=("min2",),
     oracle=f"""
 WITH {CTE_ORDER_REVENUE},
 daily AS (
@@ -80,6 +82,7 @@ snapshot AS (
 
 @query(
     "mart_customer_ltv_snapshot",
+    tags=("min2",),
     oracle=f"""
 WITH {_CTE_SNAPSHOT}
 SELECT * FROM snapshot
@@ -91,6 +94,7 @@ def q_ltv_snapshot(spark: SparkSession, sf_dir: str):
 
 @query(
     "mart_customer_clv_segment",
+    tags=("min2",),
     oracle=f"""
 WITH {_CTE_SNAPSHOT},
 cuts AS (
@@ -128,6 +132,7 @@ def q_clv_segment_approx(spark: SparkSession, sf_dir: str):
 
 @query(
     "mart_customer_rfm",
+    tags=("min2",),
     oracle=f"""
 WITH {CTE_ORDER_REVENUE},
 rfm AS (
@@ -155,6 +160,7 @@ def q_rfm(spark: SparkSession, sf_dir: str):
 
 @query(
     "mart_customer_churn_profile",
+    tags=("min2",),
     oracle=f"""
 WITH {CTE_ORDER_REVENUE},
 last_order AS (
@@ -228,6 +234,7 @@ trends AS (
 
 @query(
     "mart_sales_trends_daily",
+    tags=("min2",),
     oracle=f"""
 WITH {_CTE_TRENDS}
 SELECT CREATION_DATE, RESTAURANT_ID, ITEM_CATEGORY, {_SUM_REV} AS DAILY_REVENUE
@@ -240,6 +247,7 @@ def q_trends_daily(spark: SparkSession, sf_dir: str):
 
 @query(
     "mart_sales_trends_weekly",
+    tags=("min2",),
     oracle=f"""
 WITH {_CTE_TRENDS}
 SELECT YEAR_WEEK, RESTAURANT_ID, ITEM_CATEGORY, {_SUM_REV} AS WEEKLY_REVENUE
@@ -252,6 +260,7 @@ def q_trends_weekly(spark: SparkSession, sf_dir: str):
 
 @query(
     "mart_sales_trends_monthly",
+    tags=("min2",),
     oracle=f"""
 WITH {_CTE_TRENDS}
 SELECT YEAR_MONTH, RESTAURANT_ID, ITEM_CATEGORY, {_SUM_REV} AS MONTHLY_REVENUE
@@ -264,6 +273,7 @@ def q_trends_monthly(spark: SparkSession, sf_dir: str):
 
 @query(
     "mart_sales_trends_hourly",
+    tags=("min2",),
     oracle=f"""
 WITH {_CTE_TRENDS}
 SELECT HOUR_OF_DAY, RESTAURANT_ID, ITEM_CATEGORY, {_SUM_REV} AS HOURLY_REVENUE
@@ -276,6 +286,7 @@ def q_trends_hourly(spark: SparkSession, sf_dir: str):
 
 @query(
     "mart_loyalty_program_impact",
+    tags=("min2",),
     oracle=f"""
 WITH {CTE_ORDER_REVENUE},
 dim AS (
@@ -308,6 +319,7 @@ def q_loyalty(spark: SparkSession, sf_dir: str):
 
 @query(
     "mart_location_performance",
+    tags=("min2",),
     oracle=f"""
 WITH {CTE_ORDER_REVENUE},
 joined AS (
@@ -340,6 +352,7 @@ def q_location(spark: SparkSession, sf_dir: str):
 
 @query(
     "mart_discount_effectiveness",
+    tags=("min2",),
     oracle=f"""
 WITH {CTE_ORDER_REVENUE},
 joined AS (

@@ -18,6 +18,7 @@ from .catalog import query
 
 @query(
     "scan_filter_project",
+    tags=("untimed",),
     oracle=f"""
 SELECT CAST(l_orderkey AS BIGINT) AS ORDER_ID,
        CAST(l_linenumber AS BIGINT) AS LINEITEM_ID,
@@ -49,6 +50,7 @@ def q_scan_filter_project(spark: SparkSession, sf_dir: str):
 
 @query(
     "pricing_summary",
+    tags=("min2",),
     oracle=f"""
 SELECT l_returnflag AS RETURN_FLAG, l_linestatus AS LINE_STATUS,
        SUM(l_quantity) AS SUM_QTY,
@@ -87,6 +89,7 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str):
 
 @query(
     "dedup_keep_latest",
+    tags=("min2",),
     oracle="""
 SELECT user_id AS USER_ID, event_id AS EVENT_ID, ts AS TS,
        event_type AS EVENT_TYPE, value AS VALUE
@@ -111,6 +114,7 @@ def q_dedup_keep_latest(spark: SparkSession, sf_dir: str):
 
 @query(
     "top_parts_per_supplier",
+    tags=("untimed",),
     oracle=f"""
 WITH pr AS (
   SELECT CAST(l_suppkey AS BIGINT) AS SUPPLIER_ID,
@@ -143,6 +147,7 @@ def q_top_parts(spark: SparkSession, sf_dir: str):
 
 @query(
     "set_except",
+    tags=("untimed",),
     oracle="""
 SELECT DISTINCT user_id FROM events WHERE event_type = 'click'
 EXCEPT
@@ -158,6 +163,7 @@ def q_set_except(spark: SparkSession, sf_dir: str):
 
 @query(
     "set_union",
+    tags=("untimed",),
     oracle="""
 SELECT event_id AS EVENT_ID, 'big_click' AS SRC, value AS VALUE
 FROM events WHERE event_type = 'click' AND value > 50
@@ -234,7 +240,7 @@ def _cdc_snapshots(spark: SparkSession, sf_dir: str):
     return cur, prev
 
 
-@query("cdc_snapshot_diff", oracle=_CDC_SQL)
+@query("cdc_snapshot_diff", tags=("min2",), oracle=_CDC_SQL)
 def q_cdc_snapshot_diff(spark: SparkSession, sf_dir: str):
     cur, prev = _cdc_snapshots(spark, sf_dir)
     return cdc_diff(cur, prev, pks=["o_orderkey"])
@@ -245,6 +251,7 @@ def q_cdc_snapshot_diff(spark: SparkSession, sf_dir: str):
 
 @query(
     "events_incremental_read",
+    tags=("untimed",),
     oracle="""
 SELECT event_id, ts, user_id, event_type, value
 FROM events WHERE ts >= TIMESTAMP '2024-01-15 00:00:00'
@@ -262,6 +269,7 @@ def q_events_incremental(spark: SparkSession, sf_dir: str):
 
 @query(
     "events_tumbling_daily",
+    tags=("min2", "skew"),
     oracle=f"""
 SELECT CAST(date_trunc('day', ts) AS DATE) AS EVENT_DATE,
        event_type AS EVENT_TYPE,
@@ -292,6 +300,7 @@ def q_tumbling_daily(spark: SparkSession, sf_dir: str):
 
 @query(
     "events_tumbling_hourly",
+    tags=("untimed",),
     oracle=f"""
 SELECT date_trunc('hour', ts) AS WINDOW_START,
        COUNT(*) AS N_EVENTS,
@@ -413,6 +422,7 @@ def q_events_value_interpolated(spark: SparkSession, sf_dir: str):
 
 @query(
     "events_hopping_6h",
+    tags=("skew",),
     oracle=f"""
 WITH e AS (SELECT epoch_us(ts) AS us, event_type, user_id, value FROM events),
 w AS (
@@ -462,6 +472,7 @@ def q_events_hopping_6h(spark: SparkSession, sf_dir: str):
 
 @query(
     "events_trailing_compare",
+    tags=("untimed",),
     oracle=f"""
 WITH spend AS (
   SELECT user_id AS USER_ID,
@@ -506,6 +517,7 @@ def q_trailing_compare(spark: SparkSession, sf_dir: str):
 
 @query(
     "events_sessionize",
+    tags=("min2", "skew"),
     oracle="""
 WITH ordered AS (
   SELECT user_id, event_id, ts,
@@ -551,6 +563,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str):
 
 @query(
     "cdc_apply_changes",
+    tags=("min2",),
     oracle=f"""
 WITH base AS (
   SELECT o_orderkey, o_custkey, o_orderstatus,
@@ -633,6 +646,7 @@ def q_orders_incremental_agg(spark: SparkSession, sf_dir: str):
 
 @query(
     "pricing_rollup",
+    tags=("untimed",),
     oracle=f"""
 SELECT l_returnflag AS RETURN_FLAG, l_linestatus AS LINE_STATUS,
        {sql_dsum("l_extendedprice", 2)} AS SUM_BASE_PRICE,
@@ -655,6 +669,7 @@ def q_pricing_rollup(spark: SparkSession, sf_dir: str):
 
 @query(
     "orders_status_cube",
+    tags=("untimed",),
     oracle="""
 SELECT o_orderstatus AS STATUS, o_orderpriority AS PRIORITY, COUNT(*) AS N
 FROM orders
@@ -668,7 +683,8 @@ def q_orders_cube(spark: SparkSession, sf_dir: str):
     ).agg(F.count(F.lit(1)).alias("N"))
 
 
-@query("events_approx_distinct_users")  # no oracle: HLL sketch values are engine-specific
+# no oracle: HLL sketch values are engine-specific
+@query("events_approx_distinct_users", tags=("untimed",))
 def q_events_approx_distinct(spark: SparkSession, sf_dir: str):
     """approx_count_distinct -- the 100TB substitute for exact countDistinct
     (SURVEY.md A4): mergeable HLL sketch, no distinct-expand shuffle.
@@ -682,6 +698,7 @@ def q_events_approx_distinct(spark: SparkSession, sf_dir: str):
 
 @query(
     "events_exact_distinct_users",
+    tags=("skew",),
     oracle="""
 SELECT event_type AS EVENT_TYPE,
        CAST(COUNT(DISTINCT user_id) AS BIGINT) AS N_USERS,
@@ -707,6 +724,7 @@ def q_events_exact_distinct(spark: SparkSession, sf_dir: str):
 
 @query(
     "events_asof_attribution",
+    tags=("min2",),
     oracle="""
 SELECT p.event_id AS PURCHASE_ID, p.user_id AS USER_ID, p.ts AS PURCHASE_TS,
        c.ts AS CLICK_TS, c.event_id AS CLICK_ID
@@ -741,6 +759,7 @@ def q_events_asof_attribution(spark: SparkSession, sf_dir: str):
 
 @query(
     "customers_semi_urgent",
+    tags=("min2",),
     oracle="""
 SELECT c_custkey AS CUSTOMER_ID, c_name AS NAME, c_mktsegment AS SEGMENT
 FROM customer c
@@ -762,6 +781,7 @@ def q_customers_semi_urgent(spark: SparkSession, sf_dir: str):
 
 @query(
     "customers_anti_urgent",
+    tags=("min2",),
     oracle="""
 SELECT c_custkey AS CUSTOMER_ID, c_name AS NAME, c_mktsegment AS SEGMENT
 FROM customer c
@@ -786,6 +806,7 @@ def q_customers_anti_urgent(spark: SparkSession, sf_dir: str):
 
 @query(
     "events_interval_join",
+    tags=("min2",),
     oracle="""
 SELECT e.event_id AS ERROR_ID, e.user_id AS USER_ID, e.ts AS ERROR_TS,
        c.click_id AS CLICK_ID, c.click_ts AS CLICK_TS
@@ -825,6 +846,7 @@ def q_events_interval_join(spark: SparkSession, sf_dir: str):
 
 @query(
     "lineitem_hash_sample",
+    tags=("min2",),
     oracle="""
 SELECT CAST(l_orderkey AS BIGINT) AS ORDER_ID,
        CAST(l_linenumber AS BIGINT) AS LINEITEM_ID,
@@ -850,6 +872,7 @@ def q_lineitem_hash_sample(spark: SparkSession, sf_dir: str):
 
 @query(
     "docs_train_split",
+    tags=("min2",),
     oracle="""
 SELECT doc_id AS DOC_ID,
        CASE WHEN SUBSTRING(MD5(CAST(doc_id AS VARCHAR) || '|s7'), 1, 8) < 'cccccccc' THEN 'train'
@@ -948,6 +971,7 @@ def q_scd2_user_dim(spark: SparkSession, sf_dir: str):
 
 @query(
     "scd2_active_at",
+    tags=("untimed",),
     oracle=f"""
 WITH dim AS ({_SCD2_SQL})
 SELECT PROFILE_TYPE,
@@ -1151,6 +1175,7 @@ def q_events_type_skew_report(spark: SparkSession, sf_dir: str):
 
 @query(
     "events_salted_type_join",
+    tags=("skew",),
     oracle="""
 WITH d AS (SELECT event_type, COUNT(*) AS TYPE_ROWS FROM events GROUP BY 1)
 SELECT e.event_type,
@@ -1204,7 +1229,7 @@ ORDER BY e.event_type
 """
 
 
-@query("events_aqe_skew_join", oracle=_TYPE_JOIN_ORACLE)
+@query("events_aqe_skew_join", tags=("skew",), oracle=_TYPE_JOIN_ORACLE)
 def q_events_aqe_skew_join(spark: SparkSession, sf_dir: str):
     """The AUTOMATIC half of the skew playbook, graded against the same
     oracle as events_salted_type_join (both are result-neutral layouts of
@@ -1235,7 +1260,7 @@ def q_events_aqe_skew_join(spark: SparkSession, sf_dir: str):
     )
 
 
-@query("events_hll_weekly_rollup")  # rows-only: HLL estimates engine-specific
+@query("events_hll_weekly_rollup", tags=("untimed",))  # rows-only: HLL estimates engine-specific
 def q_events_hll_weekly_rollup(spark: SparkSession, sf_dir: str):
     """Distinct users per week answered by UNIONING stored per-day HLL
     sketches (operators/sketches.py) -- the re-aggregable-sketch zone
@@ -1512,6 +1537,7 @@ def q_cdc_compact_changelog(spark: SparkSession, sf_dir: str):
 
 @query(
     "events_session_transitions",
+    tags=("skew",),
     oracle="""
 WITH ordered AS (
   SELECT event_type,
@@ -1848,7 +1874,7 @@ def q_events_dow_seasonality(spark: SparkSession, sf_dir: str):
     )
 
 
-# --- round-6b: schema-wide referential-integrity audit ----------------------
+# --- schema-wide referential-integrity audit ------------------------------
 
 _REF_RELATIONS = [
     ("lineitem.l_orderkey->orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
@@ -2000,7 +2026,7 @@ FROM orders WHERE o_orderkey % 3 IN (0, 1)
 )
 def q_orders_time_travel(spark: SparkSession, sf_dir: str):
     """Manifest-versioned snapshot isolation + time travel
-    (sources/parquet_io.versioned_write / read_version, new in round 7):
+    (sources/parquet_io.versioned_write / read_version):
     commit orders with o_orderkey%3==0 as version 1, APPEND the %3==1
     slice as version 2, then read BOTH versions back -- v1 must still
     return exactly its commit-time rows after the append (the dataset
@@ -2020,6 +2046,7 @@ def q_orders_time_travel(spark: SparkSession, sf_dir: str):
 
 @query(
     "orders_compacted_snapshot",
+    tags=("min2",),
     oracle=f"""
 SELECT CAST(1 AS BIGINT) AS VERSION, CAST(1 AS BIGINT) AS N_DIRS,
        CAST(COUNT(*) AS BIGINT) AS N_ROWS, {sql_dsum("o_totalprice", 2)} AS TOTAL_PRICE
@@ -2066,7 +2093,7 @@ FROM documents
 )
 def q_docs_stratified_kfold(spark: SparkSession, sf_dir: str):
     """Stratified 5-fold cross-validation assignment with EXACT per-stratum
-    quotas (sampling.stratified_kfold, new in round 7): within every
+    quotas (sampling.stratified_kfold): within every
     language the folds differ by at most one document -- a plain hash%k
     only balances in expectation and can put a rare language entirely in
     one fold. md5-ordered round-robin dealing, so membership replays
@@ -2082,6 +2109,7 @@ def q_docs_stratified_kfold(spark: SparkSession, sf_dir: str):
 
 @query(
     "orders_versioned_merge",
+    tags=("min2",),
     oracle=f"""
 SELECT CAST(1 AS BIGINT) AS VERSION, CAST(1 AS BIGINT) AS N_DIRS,
        CAST(COUNT(*) AS BIGINT) AS N_ROWS, {sql_dsum("o_totalprice", 2)} AS TOTAL_PRICE
@@ -2126,6 +2154,7 @@ def q_orders_versioned_merge(spark: SparkSession, sf_dir: str):
 
 @query(
     "orders_version_changes",
+    tags=("min2",),
     oracle=f"""
 SELECT 'delete' AS ACTION, CAST(COUNT(*) AS BIGINT) AS N_ROWS,
        {sql_dsum("o_totalprice", 2)} AS TOTAL_PRICE
@@ -2178,6 +2207,7 @@ def q_orders_version_changes(spark: SparkSession, sf_dir: str):
 
 @query(
     "orders_schema_evolution",
+    tags=("min2",),
     oracle=f"""
 SELECT CAST(1 AS BIGINT) AS VERSION, CAST(COUNT(*) AS BIGINT) AS N_ROWS,
        CAST(0 AS BIGINT) AS N_WITH_MARGIN,
@@ -2235,6 +2265,7 @@ def q_orders_schema_evolution(spark: SparkSession, sf_dir: str):
 
 @query(
     "customers_name_fuzzy_pairs",
+    tags=("min2",),
     oracle="""
 SELECT a.c_nationkey AS NATION_ID,
        a.c_custkey AS ID_A, b.c_custkey AS ID_B,
@@ -2254,10 +2285,10 @@ def q_customers_name_fuzzy_pairs(spark: SparkSession, sf_dir: str):
     lev <= 1 is exactly "identical or one substitution", i.e. the two
     names agree on the variant obtained by masking out ONE position --
     so each name emits length(name) masked variants and near-pairs fall
-    out of an equi-join on (nation, len, position, masked_variant). The
-    r8-build version equi-joined on (nation, len) alone; TPC-H names all
-    share one length, so every block was a whole nation and the residual
-    levenshtein ran over B^2/2 pairs per nation (quadratic in the block:
+    out of an equi-join on (nation, len, position, masked_variant). An
+    equi-join on (nation, len) alone would not do: TPC-H names all
+    share one length, so every block would be a whole nation and the
+    residual levenshtein would run over B^2/2 pairs per nation (quadratic in the block:
     4.5M scalar calls at sf0.1, 450M at sf1). The neighborhood index is
     O(N x L) rows, the join key is near-unique, and levenshtein runs
     only on true survivors -- the standard spell-checker inversion

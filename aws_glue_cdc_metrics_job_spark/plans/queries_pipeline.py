@@ -24,6 +24,7 @@ _STOPLIST = "['" + "','".join(text.EN_STOPWORDS) + "']"
 
 @query(
     "docs_fingerprint",
+    tags=("untimed",),
     oracle=f"""
 SELECT doc_id, md5({_NORM}) AS FINGERPRINT FROM documents
 """,
@@ -35,6 +36,7 @@ def q_docs_fingerprint(spark: SparkSession, sf_dir: str):
 
 @query(
     "docs_exact_dedup",
+    tags=("min2",),
     oracle=f"""
 SELECT md5({_NORM}) AS FINGERPRINT,
        MIN(doc_id) AS KEEP_ID,
@@ -48,6 +50,7 @@ def q_docs_exact_dedup(spark: SparkSession, sf_dir: str):
 
 @query(
     "docs_token_stats",
+    tags=("untimed",),
     oracle=f"""
 WITH t AS (SELECT doc_id, length(text) AS n_chars_raw, {_TOKS_NE} AS toks FROM documents)
 SELECT doc_id,
@@ -66,6 +69,7 @@ def q_docs_token_stats(spark: SparkSession, sf_dir: str):
 
 @query(
     "docs_quality_score",
+    tags=("untimed",),
     oracle=f"""
 WITH t AS (SELECT doc_id, {_TOKS_NE} AS toks FROM documents),
 s AS (
@@ -91,6 +95,7 @@ def q_docs_quality(spark: SparkSession, sf_dir: str):
 
 @query(
     "docs_lang_guess",
+    tags=("untimed",),
     oracle=f"""
 WITH t AS (SELECT doc_id, lang, {_TOKS_NE} AS toks FROM documents),
 s AS (
@@ -125,6 +130,7 @@ sh AS (
 
 @query(
     "docs_ngram_jaccard_pairs",
+    tags=("min2", "unscaled"),
     oracle=f"""
 WITH {_SHINGLES_SQL}
 SELECT ID_A, ID_B, JACCARD FROM (
@@ -147,6 +153,7 @@ def q_docs_ngram_jaccard(spark: SparkSession, sf_dir: str):
 
 @query(
     "docs_dup_clusters",
+    tags=("untimed",),
     oracle=f"""
 WITH RECURSIVE {_SHINGLES_SQL.lstrip()},
 p AS (
@@ -181,7 +188,8 @@ def q_docs_dup_clusters(spark: SparkSession, sf_dir: str):
     return dedup.dup_clusters(pairs, docs)
 
 
-@query("docs_minhash_lsh_pairs")  # no oracle: ml-based banding is not SQL-expressible
+# no oracle: ml-based banding is not SQL-expressible
+@query("docs_minhash_lsh_pairs", tags=("min2",))
 def q_docs_minhash_lsh(spark: SparkSession, sf_dir: str):
     """MinHash+LSH near-dup candidates (rows-only driver check; exactness is
     unit-tested against brute-force Jaccard in tests/test_dedup.py)."""
@@ -191,6 +199,7 @@ def q_docs_minhash_lsh(spark: SparkSession, sf_dir: str):
 
 @query(
     "docs_simhash",
+    tags=("min2",),
     oracle=f"""
 WITH t AS (SELECT doc_id, list_distinct({_TOKS}) AS toks FROM documents),
 h AS (SELECT doc_id, list_transform(toks, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT) AS hs FROM t)
@@ -222,6 +231,7 @@ sig AS (
 
 @query(
     "docs_simhash_pairs",
+    tags=("untimed",),
     oracle=f"""
 WITH {_SIMHASH_SQL}
 SELECT a.doc_id AS ID_A, b.doc_id AS ID_B,
@@ -267,6 +277,7 @@ def q_docs_fuzzy_key_pairs(spark: SparkSession, sf_dir: str):
 
 @query(
     "docs_repetition",
+    tags=("untimed",),
     oracle=f"""
 WITH t AS (SELECT doc_id, {_TOKS_NE} AS toks FROM documents),
 g AS (
@@ -302,7 +313,7 @@ def q_docs_repetition(spark: SparkSession, sf_dir: str):
 
 # shared by the expression-form query and its Arrow/numpy fast twin: both
 # rank by the 6-dp-rounded cosine with an id tie-break, so one SQL replay
-# grades both (VERDICT r5 item 4).
+# grades both.
 _COSINE_TOPK_ORACLE = """
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 q AS (SELECT vec_id AS QUERY_ID, v AS qv FROM e WHERE vec_id < 8),
@@ -321,7 +332,7 @@ QUALIFY NEIGHBOR_RANK <= 5
 """
 
 
-@query("emb_cosine_topk", oracle=_COSINE_TOPK_ORACLE)
+@query("emb_cosine_topk", tags=("min2",), oracle=_COSINE_TOPK_ORACLE)
 def q_emb_cosine_topk(spark: SparkSession, sf_dir: str):
     emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
@@ -331,6 +342,7 @@ def q_emb_cosine_topk(spark: SparkSession, sf_dir: str):
 
 @query(
     "emb_ivf_assign",
+    tags=("untimed",),
     oracle="""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 cents AS (SELECT vec_id AS CELL, v AS cv FROM e WHERE vec_id < 8),
@@ -355,6 +367,7 @@ def q_emb_ivf_assign(spark: SparkSession, sf_dir: str):
 
 @query(
     "emb_ivf_topk",
+    tags=("untimed",),
     oracle="""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 cents AS (SELECT vec_id AS CELL, v AS cv FROM e WHERE vec_id % 31 = 1),
@@ -391,8 +404,8 @@ QUALIFY NEIGHBOR_RANK <= 5
 """,
 )
 def q_emb_ivf_topk(spark: SparkSession, sf_dir: str):
-    """IVF-cell-restricted ANN top-k with multi-probe, graduated to a full
-    oracle row in round 6: the probed cells are DETERMINISTIC given the
+    """IVF-cell-restricted ANN top-k with multi-probe, with a full
+    oracle: the probed cells are DETERMINISTIC given the
     literal centroid rule (vec_id % 31 == 1), so the SQL replays the whole
     pipeline -- nearest-cell assignment (6-dp sim, cell-id tie-break),
     each query's top-4 probe cells, and the exact within-cell ranking --
@@ -409,6 +422,7 @@ def q_emb_ivf_topk(spark: SparkSession, sf_dir: str):
 
 @query(
     "multimodal_payload_meta",
+    tags=("untimed",),
     oracle="""
 SELECT doc_id,
        CAST(octet_length(text::BLOB) AS BIGINT) AS N_BYTES,
@@ -506,6 +520,7 @@ def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str):
 
 @query(
     "multimodal_features",
+    tags=("untimed",),
     oracle="""
 WITH b AS (
   SELECT doc_id, hex(encode(text)) AS hx,
@@ -532,7 +547,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str):
     """Arrow-batched feature extraction over binary payloads -- the
     multimodal decode hot path's plumbing (mapInPandas, narrow, no
     shuffle), with decode_stub standing in for the media decoder.
-    Graduated to a FULL oracle in round 7: the stub is a deterministic
+    It has a FULL oracle: the stub is a deterministic
     pure function of the bytes (n_bytes = len, feat_mean = mean of the
     first 64 byte values as an exact int/int -> double division), so the
     SQL replays it on the hex plane exactly as
@@ -568,8 +583,7 @@ FROM s
 """,
 )
 def q_multimodal_decode_roundtrip(spark: SparkSession, sf_dir: str):
-    """REAL image decode, value-checked (VERDICT r4 item 9, upgraded from
-    rows-only): each document's text bytes become the pixels of a valid
+    """REAL image decode, value-checked (not rows-only): each document's text bytes become the pixels of a valid
     grayscale PNG (multimodal.encode_png_gray, pure-stdlib container),
     the payload is DECODED back -- PIL when installed, the built-in PNG
     subset decoder otherwise (multimodal.decode_real) -- and the decoded
@@ -599,6 +613,7 @@ def q_multimodal_decode_roundtrip(spark: SparkSession, sf_dir: str):
 
 @query(
     "docs_regex_tokens",
+    tags=("min2",),
     oracle=r"""
 SELECT doc_id,
        CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS N_BPE_TOKENS,
@@ -617,6 +632,7 @@ def q_docs_regex_tokens(spark: SparkSession, sf_dir: str):
 
 @query(
     "emb_cosine_dup_pairs",
+    tags=("min2",),
     oracle="""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 cents AS (SELECT vec_id AS CELL, v AS cv FROM e WHERE vec_id % 31 = 1),
@@ -695,11 +711,10 @@ def q_emb_semantic_dedup(spark: SparkSession, sf_dir: str):
     return similarity.semantic_dedup(emb, centroids, threshold=0.35).select("vec_id", "label")
 
 
-@query("emb_cosine_topk_fast", oracle=_COSINE_TOPK_ORACLE)
+@query("emb_cosine_topk_fast", tags=("min2",), oracle=_COSINE_TOPK_ORACLE)
 def q_emb_cosine_topk_fast(spark: SparkSession, sf_dir: str):
     """Arrow/numpy mapInPandas fast path for exact top-k, graded against
-    the SAME oracle as the expression form (graduated from rows-only in
-    round 6): the fast path rounds cosines to 6 dp before any selection
+    the SAME oracle as the expression form (not rows-only): the fast path rounds cosines to 6 dp before any selection
     and resolves partition-boundary ties by id, so its decisions -- not
     just its values -- replay the declarative ranking exactly."""
     emb = read_table(spark, sf_dir, "embeddings")
@@ -753,6 +768,7 @@ def q_docs_decontaminate(spark: SparkSession, sf_dir: str):
 
 @query(
     "docs_stratified_sample",
+    tags=("untimed",),
     oracle="""
 SELECT doc_id AS DOC_ID, lang AS LANG
 FROM documents
@@ -796,6 +812,7 @@ def q_docs_heavy_hitters(spark: SparkSession, sf_dir: str):
 
 @query(
     "docs_vocab_topk",
+    tags=("untimed",),
     oracle=f"""
 WITH tok AS (SELECT doc_id, unnest({_TOKS_NE}) AS TOKEN FROM documents),
 per AS (SELECT doc_id, TOKEN, count(*) AS tf FROM tok GROUP BY 1, 2)
@@ -818,6 +835,7 @@ def q_docs_vocab_topk(spark: SparkSession, sf_dir: str):
 
 @query(
     "docs_quality_filter",
+    tags=("untimed",),
     oracle=f"""
 WITH t AS (SELECT doc_id, lang, {_TOKS_NE} AS toks FROM documents),
 s AS (
@@ -1071,6 +1089,7 @@ def q_docs_curation_pipeline(spark: SparkSession, sf_dir: str):
 
 @query(
     "emb_kmeans_update",
+    tags=("min2",),
     oracle="""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 cents AS (SELECT vec_id AS CELL, v AS cv FROM e WHERE vec_id % 31 = 1),
@@ -1314,7 +1333,7 @@ SELECT vec_id, CAST({sig} AS BIGINT) AS RP_SIG FROM e
 """
 
 
-@query("emb_rp_lsh_signature", oracle=_rp_oracle_sql())
+@query("emb_rp_lsh_signature", tags=("untimed",), oracle=_rp_oracle_sql())
 def q_emb_rp_lsh_signature(spark: SparkSession, sf_dir: str):
     """Random-hyperplane LSH signatures for cosine (the LSH-bucketed
     complement to the IVF index): 16 deterministic hyperplanes, bit-exact
@@ -1339,7 +1358,7 @@ WHERE bit_count(xor(a.RP_SIG, b.RP_SIG)) <= 1
 """
 
 
-@query("emb_rp_dup_pairs", oracle=_rp_pairs_oracle_sql())
+@query("emb_rp_dup_pairs", tags=("untimed",), oracle=_rp_pairs_oracle_sql())
 def q_emb_rp_dup_pairs(spark: SparkSession, sf_dir: str):
     """Embedding near-dup pairs at RP-signature Hamming <= 1: banded
     equi-join candidates (exact recall by pigeonhole with 2 bands),
@@ -1523,6 +1542,7 @@ def q_docs_unigram_logprob(spark: SparkSession, sf_dir: str):
 
 @query(
     "docs_bpe_pair_counts",
+    tags=("untimed",),
     oracle=f"""
 WITH words AS (
   SELECT unnest({_TOKS_NE}) AS w FROM documents
@@ -1538,8 +1558,8 @@ FROM pairs GROUP BY 1, 2
 """,
 )
 def q_docs_bpe_pair_counts(spark: SparkSession, sf_dir: str):
-    """Round 0 of BPE training made observable: adjacent character-pair
-    frequencies over the distinct-word table, weighted by multiplicity
+    """BPE training's counting step made observable: adjacent
+    character-pair frequencies over the distinct-word table, weighted by multiplicity
     (text.bpe_pair_counts). The iterative trainer (text.bpe_train) builds
     on this count step; its merge sequence is pinned against an
     independent reference implementation in tests/test_text.py."""
@@ -1818,8 +1838,8 @@ QUALIFY ROW_NUMBER() OVER (PARTITION BY QUERY_ID ORDER BY ADC_DIST, vec_id) <= 5
 def q_emb_ivf_pq_topk(spark: SparkSession, sf_dir: str):
     """IVF-PQ search (similarity.ivf_pq_topk): coarse cells restrict each
     query to nprobe=2 probed cells, PQ codes + ADC score the members --
-    the FAISS index architecture end-to-end. Graduated to a FULL oracle
-    in round 7 (VERDICT r6 item 5) by the emb_ivf_topk pattern: the
+    the FAISS index architecture end-to-end. It has a FULL oracle, by
+    the emb_ivf_topk pattern: the
     centroid rule (vec_id % 31 == 1) and the pq_constants codebook are
     deterministic, so the SQL replays every stage -- nearest-cell
     assignment (6-dp sim, cell tie-break), each query's top-2 probe
@@ -2061,7 +2081,7 @@ def q_docs_cm_estimates_fast(spark: SparkSession, sf_dir: str):
     point estimates as docs_cm_estimates but with xxhash64 cells
     (portable=False) -- one JVM hash per (item, row) instead of an md5 +
     hex parse, the dominant per-token cost in the portable build (its
-    honest ~7x-per-char 10x ratio in BENCH_r03). Estimates still satisfy
+    measured ~7x-per-char 10x ratio). Estimates still satisfy
     the CM overcount contract vs exact counts (pinned in
     tests/test_sketches.py and test_catalog_parity.py); cell addresses
     are engine-specific, so this row is rows-only by design next to its
@@ -2183,7 +2203,7 @@ def q_docs_source_datasheet(spark: SparkSession, sf_dir: str):
     return text.source_datasheet(docs)
 
 
-# --- round 4: cross-source exact dup matrix, DF table, MOSS overlap pairs,
+# --- cross-source exact dup matrix, DF table, MOSS overlap pairs,
 # Gopher rule audit, boilerplate share, grouped length quantiles, norm
 # histogram. All exact integer/ppm lattices.
 
@@ -2400,7 +2420,7 @@ def q_emb_norm_buckets(spark: SparkSession, sf_dir: str):
     )
 
 
-# --- round 4b: corpus LM scoring, data selection, hybrid retrieval,
+# --- corpus LM scoring, data selection, hybrid retrieval,
 # embedding post-processing, distributed classifier training ----------------
 
 _BIGRAM_OCC_SQL = f"""t4 AS (SELECT doc_id, lang, {_TOKS_NE} AS toks FROM documents),
@@ -2725,7 +2745,7 @@ FROM sel WHERE rn <= CEIL(cnt * 0.5) AND lw > 0
 """,
 )
 def q_docs_selection_pipeline(spark: SparkSession, sf_dir: str):
-    """Flagship data-selection composite (the round-4 operators chained
+    """Flagship data-selection composite (the text-quality operators chained
     the way a pretraining mix build chains them): Gopher-style structural
     pre-filter (token count 3..500, mean word length 2..12 as integer
     bounds) -> bigram-LM surprisal scored on the SURVIVING corpus ->
@@ -3312,7 +3332,7 @@ def q_docs_rendezvous_shards(spark: SparkSession, sf_dir: str):
 
 @query("docs_mojibake_screen", oracle=text.mojibake_sql())
 def q_docs_mojibake_screen(spark: SparkSession, sf_dir: str):
-    """Encoding-quality screen (text.mojibake_report, new in round 7):
+    """Encoding-quality screen (text.mojibake_report):
     per-document counts of U+FFFD replacement characters,
     UTF-8-decoded-as-Latin-1 ghost digraphs (literal substrings counted
     by pure length arithmetic -- no regex, engine-exact), and C0 control
@@ -3388,7 +3408,7 @@ FROM sysg, idealg
 """
 
 
-@query("docs_bm25_ndcg", oracle=_bm25_ndcg_oracle())
+@query("docs_bm25_ndcg", tags=("min2",), oracle=_bm25_ndcg_oracle())
 def q_docs_bm25_ndcg(spark: SparkSession, sf_dir: str):
     """Retrieval quality of the BM25 ranking (operators/ranking.
     ndcg_at_k): NDCG@10 of docs_bm25_topk's list against a graded
@@ -3471,7 +3491,7 @@ sel{t} AS (SELECT vec_id FROM sel{t - 1} UNION ALL SELECT vec_id FROM p{t})""")
     return head + "".join(steps) + "\n" + "\nUNION ALL\n".join(selects)
 
 
-@query("emb_mmr_select", oracle=_mmr_oracle())
+@query("emb_mmr_select", tags=("min2",), oracle=_mmr_oracle())
 def q_emb_mmr_select(spark: SparkSession, sf_dir: str):
     """Maximal Marginal Relevance context selection (operators/
     similarity.mmr_select): the 5 most query-relevant-yet-mutually-

@@ -693,8 +693,8 @@ WITH psu AS (
 pr AS (
   -- CAST: cents comes from SUM() (HUGEINT in DuckDB), and HUGEINT '//'
   -- renders as float64 through the pandas/Arrow fetch path the driver
-  -- hashes (the r4 red-row mechanism; caught locally by oracle_check's
-  -- dual-fetch divergence guard)
+  -- hashes (a value mismatch invisible in SQL; caught locally by
+  -- oracle_check's dual-fetch divergence guard)
   SELECT l_partkey, l_suppkey, CAST(cents * 10 // qty AS BIGINT) AS UNIT_MILLI FROM psu
 ),
 best AS (SELECT l_partkey, MIN(UNIT_MILLI) AS m FROM pr GROUP BY 1)
@@ -817,7 +817,7 @@ def q_nation_part_profit(spark: SparkSession, sf_dir: str):
     )
 
 
-# --- the bucketed co-location recipe, made observable (VERDICT r4 item 10):
+# --- the bucketed co-location recipe, made observable:
 # the same orders x lineitem revenue rollup as a shuffled plan and as a
 # zero-Exchange bucketed plan, value-identical, both oracle-checked against
 # the identical SQL. SCALE.md's 100 TB story: bucket both fact tables on the
@@ -909,7 +909,7 @@ def q_orders_lineitem_revenue_bucketed(spark: SparkSession, sf_dir: str):
     return _bkt_finish(joined)
 
 
-# --- round-6b: Z-order (Morton) clustering keys -- the multi-dimensional
+# --- Z-order (Morton) clustering keys -- the multi-dimensional
 # layout primitive. The oracle re-emits the IDENTICAL integer expression
 # with DuckDB's // division, bounds riding the same 1-row cross join.
 

@@ -38,12 +38,14 @@ from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on: a
+    fixed default oversubscribes a small machine with task threads."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
-def default_driver_memory() -> str:
+def default_driver_memory(ceiling_gb: int = 24) -> str:
     """The driver heap ``get_spark`` asks for when ``SPARK_DRIVER_MEMORY`` is
-    unset: 24g, or half of physical memory on a machine with less than 48g.
+    unset: half of physical memory, up to ``ceiling_gb`` (24g by default).
 
     In single-JVM local mode the driver heap IS the executor memory. 8g
     starved the 100x decade bench (SparkOutOfMemoryError inside a graph-edge
@@ -53,7 +55,7 @@ def default_driver_memory() -> str:
     grew the JVM to ~12 GB of RSS and lost it. Half leaves the rest to the
     Python driver, DuckDB and the OS."""
     half_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2 // 1024**2
-    return f"{min(24 * 1024, half_mb)}m"
+    return f"{min(ceiling_gb * 1024, half_mb)}m"
 
 
 def get_spark(

@@ -441,8 +441,8 @@ def versioned_write(
     exactly-once handshake Structured Streaming's foreachBatch needs).
     Committed batch_ids live in a compact sidecar
     (``_manifests/_batches.json``) that :func:`vacuum_versions` NEVER
-    drops (ADVICE r7: the old per-manifest scan both cost O(versions)
-    file opens per commit and silently re-appended a batch replayed
+    drops (a per-manifest scan would both cost O(versions)
+    file opens per commit and silently re-append a batch replayed
     after its manifest was vacuumed). Dedup is one sidecar read; the
     crash window between a manifest rename and the sidecar update is
     covered by scanning only the manifests NEWER than the sidecar's

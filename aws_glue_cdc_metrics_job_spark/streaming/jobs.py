@@ -491,7 +491,7 @@ def _anomaly_alert_apply(
     alert keys, used as a literal partition-pruning filter): metric-key
     cardinality is small by the control-chart contract, so blowing the
     cap means the stream is keyed on something row-like -- raise rather
-    than grow the driver without bound (VERDICT r7). High-cardinality
+    than grow the driver without bound. High-cardinality
     keying needs pruning by JOIN against the batch keys instead of a
     literal IN filter.
 

@@ -1,299 +1,47 @@
-"""Benchmark harness (driver contract): run the headline query set at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-and print a JSON line {"metric", "value", "unit", "queries", "sf"}.
+"""Catalog benchmark: run the headline query set at $SPARK_GRAFT_SF_DIR
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print a JSON
+line {"metric", "value", "unit", "queries", "sf"}.
 
 The line is CUMULATIVE and re-printed after each block (headline / sf1+skew
-/ sf10) so a timeout mid-run still leaves the completed blocks' evidence as
-the last parseable line (VERDICT r7: the end-only print lost the whole round
-to `parsed: null` when the driver killed the process).
+/ sf10), so a run killed mid-way still leaves the completed blocks' numbers
+as its last parseable line.
 
 Each query is forced end-to-end with the noop sink (full computation, no
-driver collect) after a warm-up of the session. Timings are wall-clock
-per query; "value" is the total.
+driver collect). Timings are wall-clock per query; "value" is the total.
+Which queries run in which block comes from their catalog tags
+(plans/catalog.py TAG_NAMES); only the sf10 block keeps its own list.
 """
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
-# The bench process drives two extra scale points (10x uniform+skew, 100x
-# decade) in ONE JVM; the 100x graph queries need more than the engine's
-# 24g default to hold an edge checkpoint while 32 task threads share the
-# execution pool. Scoped here, not in session.py: only bench pays it.
-os.environ.setdefault("SPARK_DRIVER_MEMORY", "48g")
+from aws_glue_cdc_metrics_job_spark.plans import catalog  # noqa: E402
 
-# The reference's gold-mart set (BASELINE.md) + representative operator and
-# training-data-pipeline queries.
-HEADLINE = [
-    # round-8 additions
-    "lineitem_qty_tied_percentiles",
-    "supply_katz_centrality_growing",
-    "orders_compacted_snapshot",
-    "events_mann_whitney",
-    "customers_survival_hazard",
-    "events_value_drift",
-    "events_attribution_ushape",
-    "orders_versioned_delete",
-    "orders_seasonal_decompose",
-    "orders_versioned_merge",
-    "orders_version_changes",
-    "docs_bm25_ndcg",
-    "events_calibration_bins",
-    "orders_target_encoding",
-    "events_daily_mad_anomalies",
-    "events_l_diversity",
-    "emb_mmr_select",
-    "orders_schema_evolution",
-    "customers_name_fuzzy_pairs",
-    "lineitem_correlation_matrix",
-    "supply_sssp_3hops",
-    # round-7 additions
-    "mart_customer_clv_segment_approx",
-    "parts_copurchase_pagerank_weighted_bucketed",
-    "supply_hits_scores_bucketed",
-    "events_value_exact_percentiles",
-    "supply_katz_centrality",
-    "orders_time_travel",
-    "docs_stratified_kfold",
-    "events_pr_curve",
-    "docs_mojibake_screen",
-    # BASELINE.md anchor queries restored in round 7 (VERDICT r6 item 1 of
-    # "what's wrong": the 2x-of-baseline gate must stay computable over all
-    # 34 anchors; these six cost <4 s total)
-    "events_asof_attribution",
-    "events_interval_join",
-    "customers_semi_urgent",
-    "customers_anti_urgent",
-    "lineitem_hash_sample",
-    "docs_train_split",
-    # round-6 additions
-    "docs_dup_substring_spans",
-    "docs_incremental_dup_spans",
-    "docs_scrubbed_text",
-    "supply_hits_scores",
-    "parts_link_prediction",
-    "parts_bfs_reach",
-    "lineitem_zorder_buckets",
-    "events_gini_best_split",
-    "dq_referential_audit",
-    "parts_copurchase_pagerank_weighted",
-    "events_type_dow_independence",
-    "docs_substring_novelty",
-    "docs_rendezvous_shards",
-    "supply_pagerank_directed",
-    "parts_copurchase_pagerank_bucketed",
-    "parts_copurchase_communities",
-    "events_audience_overlap",
-    "events_aqe_skew_join",
-    # round-5 additions
-    "parts_copurchase_pagerank",
-    "parts_copurchase_triangles",
-    "events_value_cusum_shifts",
-    "docs_head_vocab_drift",
-    "parts_affinity_pagerank",
-    "events_dow_seasonality",
-    "events_bloom_prune_revenue",
-    "multimodal_decode_roundtrip",
-    "orders_lineitem_revenue_shuffled",
-    "orders_lineitem_revenue_bucketed",
-    "events_partition_pruned_read",
-    "orders_consistent_sample_revenue",
-    "order_revenue",
-    "fact_ltv_daily",
-    "mart_customer_ltv_snapshot",
-    "mart_customer_clv_segment",
-    "mart_customer_rfm",
-    "mart_customer_churn_profile",
-    "mart_sales_trends_daily",
-    "mart_sales_trends_weekly",
-    "mart_sales_trends_monthly",
-    "mart_sales_trends_hourly",
-    "mart_loyalty_program_impact",
-    "mart_location_performance",
-    "mart_discount_effectiveness",
-    "pricing_summary",
-    "cdc_snapshot_diff",
-    "events_sessionize",
-    "events_session_transitions",
-    "events_tumbling_daily",
-    "cdc_apply_changes",
-    "orders_incremental_agg",
-    "scd2_user_dim",
-    "dq_orders_report",
-    "emb_int8_quantize",
-    "dedup_keep_latest",
-    "lineitem_basket_pairs",
-    "docs_segment_dedup",
-    "docs_pii_scrub",
-    "docs_exact_dedup",
-    "docs_incremental_dedup",
-    "docs_incremental_near_dedup",
-    "docs_intra_doc_dedup",
-    "docs_unigram_logprob",
-    "docs_collocations",
-    "docs_token_budget_mix",
-    "docs_temperature_mix",
-    "docs_minhash_lsh_pairs",
-    "docs_ngram_jaccard_pairs",
-    "docs_simhash",
-    "docs_regex_tokens",
-    "docs_decontaminate",
-    "docs_source_overlap",
-    "docs_source_datasheet",
-    "docs_winnow_fingerprints",
-    "docs_pack_sequences",
-    "docs_curation_pipeline",
-    "docs_bm25_topk",
-    "docs_encode_ids",
-    "docs_weighted_sample",
-    "docs_balanced_sample",
-    "docs_negative_samples",
-    "docs_weighted_topk_sample",
-    "events_hopping_6h",
-    "events_quantile_sketch_rollup",
-    "docs_cm_sketch",
-    "docs_cm_estimates",
-    "events_type_skew_report",
-    "events_daily_anomalies",
-    "events_daily_gapfill",
-    "events_value_winsorized",
-    "events_value_bootstrap_ci",
-    "events_value_trend",
-    "events_funnel",
-    "events_retention_cohorts",
-    "events_activity_cohorts",
-    "emb_kmeans_update",
-    "emb_cosine_topk",
-    "emb_cosine_topk_fast",
-    "emb_cosine_dup_pairs",
-    "emb_semantic_dedup",
-    "emb_pq_encode",
-    "emb_pq_adc_topk",
-    "emb_pq_train_update",
-    "emb_ivf_pq_topk",
-    "emb_cross_contamination",
-    "docs_chunk_windows",
-    "docs_segment_lang_profile",
-    "cdc_evolved_diff",
-    "cdc_compact_changelog",
-    "mart_sales_trends_all_grains",
-    "orders_shipping_priority",
-    "region_nation_volume",
-    "docs_fuzzy_key_pairs",
-    "docs_per_source_sample",
-    "docs_heavy_hitters",
-    # round 4 additions
-    "events_sessionize_stats",
-    "events_inactivity_gaps",
-    "events_exact_distinct_users",
-    "orders_pareto_deciles",
-    "customer_returns_report",
-    "nation_trade_volume",
-    "lineitem_discount_bands",
-    "docs_cross_source_dups",
-    "docs_df_table",
-    "docs_winnow_overlap_pairs",
-    "docs_gopher_report",
-    "docs_repeated_segment_share",
-    "docs_token_quantiles_by_lang",
-    "docs_cm_estimates_fast",
-    "emb_norm_buckets",
-    # round 4b additions (post-window; graded r5)
-    "docs_dsir_weights",
-    "docs_dsir_weights_fast",
-    "docs_bigram_logprob",
-    "docs_hybrid_rrf",
-    "emb_matryoshka",
-    "emb_perceptron_step",
-    "parts_small_qty_revenue",
-    "orders_bulk_quantity",
-    "docs_bpe_encode",
-    "emb_perceptron_train",
-    "events_value_bootstrap_ci_fast",
-    "docs_selection_pipeline",
-    "docs_bigram_ppx_scored",
-    "emb_sq8_topk",
-    # round 4c additions: warehouse (TPC-H-shape) completion (graded r5)
-    "orders_late_ship_priority",
-    "forecast_revenue_change",
-    "nation_market_share",
-    "part_value_concentration",
-    "returns_priority_profile",
-    "customer_order_distribution",
-    "promo_revenue_share",
-    "top_supplier_revenue",
-    "parts_supplier_diversity",
-    "disjunctive_basket_revenue",
-    "dominant_part_suppliers",
-    "sole_return_suppliers",
-    "idle_rich_customers",
-    "cheapest_supplier_per_part",
-    "docs_minhash_jaccard_est",
-    # round 4d additions: distributed ranking family + epoch mixing (graded r5)
-    "events_value_ntile",
-    "events_value_rank_percentiles",
-    "docs_epoch_plan",
-    "docs_epoch_materialize",
-    # round 4e: manual skew playbook (salted join + salted count-distinct)
-    "events_salted_type_join",
-    # round 4e: one-pass column profiler
-    "orders_table_profile",
-    # round 4e: JVM-side frame sampling over opaque payloads
-    "multimodal_frame_sample",
-    # round 4e: linear gap interpolation on the integer lattice
-    "events_value_interpolated",
-    # round 4e: k-anonymity audit over corpus metadata
-    "docs_k_anonymity",
-    # round 4e: Benford first-digit screen on the exact ppm lattice
-    "orders_benford_screen",
-    # round 4e: TPC-H Q9 shape completes the 22-pattern warehouse coverage
-    "nation_part_profit",
-]
+catalog.load_all()
 
-# Secondary 10x scale point (tools/scale_up.py -> .bench_sf1). Excludes
-# docs_ngram_jaccard_pairs: block-local exact Jaccard is quadratic in block
-# size BY DESIGN (it is the small-corpus diagnostic; the 100TB near-dup path
-# is docs_minhash_lsh_pairs, which stays in the set).
-SCALE_EXCLUDE = {"docs_ngram_jaccard_pairs"}
 
-# Hot-key stress family (VERDICT r5 item 6): the queries that shuffle or
-# window on the skewed keys (user_id / event_type), measured against
-# .bench_sf1_skew where ONE user+type holds ~20% of all event rows. Judged
-# bar: no query superlinear vs its own uniform-10x number.
-SKEW_QUERIES = [
-    "events_salted_type_join",
-    "events_aqe_skew_join",
-    "events_sessionize",
-    "events_session_transitions",
-    "events_sessionize_stats",
-    "events_inactivity_gaps",
-    "events_value_ntile",
-    "events_value_rank_percentiles",
-    "events_exact_distinct_users",
-    "events_retention_cohorts",
-    "events_activity_cohorts",
-    "events_funnel",
-    "events_tumbling_daily",
-    "events_hopping_6h",
-]
+def _tagged(tag: str) -> list[str]:
+    return [n for n in catalog.ordered_queries() if tag in catalog.TAGS[n]]
 
-# Decade-scaling evidence (VERDICT r5 item 7): the top-expensive queries
-# from the r5 10x detail, re-measured at 100x sf0.1 (.bench_sf10) to show
-# the sub-linear claims hold across TWO decades. One measured pass -- the
-# block exists for the scaling ratio, not for microsecond precision.
-# Round-9 ordering (VERDICT r8 item 7): the GRAPH family leads right
-# after the silver twins so the round-8/9 hop-loop claims get driver-side
-# decade numbers inside the 450 s budget (r8's run trimmed the block
-# before the plain pagerank ran); the round-9-optimized near-dedup and
-# selection pipeline follow; the SF10_WARM bootstrap twins (3 runs each)
-# and the perceptron pair trail and self-trim to named skips under the
-# default budget -- their full numbers re-record in BASELINE.md's
-# dedicated run.
+
+HEADLINE = [n for n in catalog.ordered_queries() if "untimed" not in catalog.TAGS[n]]
+MIN2 = set(_tagged("min2"))
+SKEW_QUERIES = _tagged("skew")
+SCALE_EXCLUDE = set(_tagged("unscaled"))
+
+# The 100x decade point times these in this order under a wall-clock
+# budget, and the budget trims from the end: the silver-reading mart twins
+# first, then the iterative graph and near-dedup queries, whose scaling is
+# the block's main evidence, then the bootstrap twins (three runs each) and
+# the perceptron pair.
 SF10_QUERIES = [
     "mart_customer_clv_segment",
     "mart_customer_clv_segment_approx",
@@ -313,20 +61,18 @@ SF10_QUERIES = [
 # The only sf10 queries that read the memoized silver caches; they run
 # FIRST, after which the block releases the two 60M-row cached frames --
 # resident but useless storage that otherwise pressures the heavy
-# graph/dedup shuffles (measured: docs_incremental_near_dedup 67 s in r6
-# -> 191 s when run under the resident caches).
+# graph/dedup shuffles (measured: docs_incremental_near_dedup 67 s -> 191 s
+# when run under the resident caches).
 SF10_SILVER = {"mart_customer_clv_segment", "mart_customer_clv_segment_approx"}
 
-# Twin-pair queries get a per-query warm-up run before their measured run
-# in the sf10 block: their sf1 denominators are warm steady-state numbers
-# (min of two passes after a full warm-up), so a single COLD sf10 pass
-# measures first-plan stage materialization -- dominated by the SHARED
-# snapshot/replicate lineage, not the twins' own difference -- and inverts
-# the pairs (r6: xxhash bootstrap 90s vs its md5 twin 65s by position
-# alone; r7 preview: clv exact 28.8x while its post-warm work is ~15s).
+# Twin-pair queries get an unmeasured run, then the min of two measured
+# runs: their sf1 denominators are warm steady-state numbers, and a single
+# COLD sf10 pass measures the SHARED snapshot/replicate lineage's first
+# materialization instead of the twins' own difference, inverting the pairs
+# by position alone (measured: xxhash bootstrap 90 s vs its md5 twin 65 s).
 # The iterative graph queries stay single-pass cold: each hop is a fresh
-# shuffle either way (localCheckpoint cuts lineage), so warm-up buys them
-# little and the cold number stays the conservative decade bound.
+# shuffle either way, so warm-up buys them little and the cold number stays
+# the conservative decade bound.
 SF10_WARM = {
     "mart_customer_clv_segment",
     "mart_customer_clv_segment_approx",
@@ -334,68 +80,32 @@ SF10_WARM = {
     "events_value_bootstrap_ci_fast",
 }
 
-# BASELINE.md's 34 anchor queries (the 2x-of-baseline gate) plus this
-# round's new entries: the only sf0.1 queries that get min-of-two measured
-# passes. Everything else is warm-up + ONE measured pass -- VERDICT r7
-# item 1: the 184-query x 3-pass protocol blew the driver's wall clock
-# (BENCH_r07 rc 124) for precision the sub-2s tail doesn't need.
-MIN2 = {
-    "order_revenue", "fact_ltv_daily", "mart_customer_ltv_snapshot",
-    "mart_customer_clv_segment", "mart_customer_rfm",
-    "mart_customer_churn_profile", "mart_sales_trends_daily",
-    "mart_sales_trends_weekly", "mart_sales_trends_monthly",
-    "mart_sales_trends_hourly", "mart_loyalty_program_impact",
-    "mart_location_performance", "mart_discount_effectiveness",
-    "pricing_summary", "cdc_snapshot_diff", "events_sessionize",
-    "events_tumbling_daily", "dedup_keep_latest", "docs_exact_dedup",
-    "docs_minhash_lsh_pairs", "docs_ngram_jaccard_pairs", "docs_simhash",
-    "docs_regex_tokens", "cdc_apply_changes", "emb_cosine_topk",
-    "emb_cosine_topk_fast", "emb_cosine_dup_pairs",
-    "events_asof_attribution", "events_interval_join",
-    "customers_semi_urgent", "customers_anti_urgent",
-    "lineitem_hash_sample", "docs_train_split",
-    # round-8 new entries (first bench round: no prior number to anchor on)
-    "lineitem_qty_tied_percentiles", "supply_katz_centrality_growing",
-    "orders_compacted_snapshot", "events_mann_whitney",
-    "customers_survival_hazard", "events_value_drift",
-    "events_attribution_ushape", "orders_versioned_delete",
-    "orders_seasonal_decompose", "orders_versioned_merge",
-    "orders_version_changes", "docs_bm25_ndcg",
-    "events_calibration_bins", "orders_target_encoding",
-    "events_daily_mad_anomalies", "events_l_diversity",
-    "emb_mmr_select", "orders_schema_evolution",
-    "customers_name_fuzzy_pairs", "lineitem_correlation_matrix",
-    "supply_sssp_3hops",
-    # round-9 additions (VERDICT r8 items 1-2): the r8 driver run reported
-    # 20.3 s / 14.9 s for these two, 10-15x above every isolated AND
-    # in-context re-measurement this round (1.3-2.0 s) -- a transient
-    # machine event landing on one single-pass slot (the two sit 5 slots
-    # apart in HEADLINE order). Min-of-two is the bench's documented
-    # defense against exactly that failure mode; measurement-protocol
-    # change declared in OPTIMIZATION_r09.md.
-    "emb_kmeans_update", "events_value_bootstrap_ci",
-    "events_value_bootstrap_ci_fast",
-}
+# a renamed query must fail the bench, not drop out of it
+_unknown = sorted({*SF10_QUERIES, *SF10_SILVER, *SF10_WARM} - catalog.QUERIES.keys())
+if _unknown:
+    raise ValueError(f"bench.py sf10 names not in the catalog: {_unknown}")
 
-# sf1 queries that get a second measured pass: the decade-ratio
-# denominators (SF10_QUERIES) and the skew-ratio denominators
-# (SKEW_QUERIES). The rest report a single warm pass -- their sf1 numbers
-# feed no judged ratio, only the per-query scaling table.
-SF1_MIN2 = set(SF10_QUERIES) | set(SKEW_QUERIES)
+# Each query execution leaves localCheckpoint blocks and broadcasts whose
+# removal waits for ContextCleaner, which learns of dead references only
+# after a DRIVER GC. Left alone, a naturally-triggered GC floods the block
+# manager with removals while some contiguous window of queries runs
+# (measured: 13 queries at 2-6x their isolated cost, in a different place
+# each run). So the bench collects between queries, never inside a timing,
+# every _GC_EVERY queries, and after every sf10 run.
+_GC_EVERY = 25
 
 
 def _emit(out: dict, detail: dict, detail_path: str) -> None:
     """Write the detail file and print ONE cumulative JSON line.
 
-    Called after EVERY block (headline / sf1+skew / sf10), not only at exit
-    (VERDICT r7 item 1): a timeout or crash mid-run leaves the previous
-    block's line as the last parseable evidence instead of `parsed: null`.
-    Each line is kept under the driver's 2000-char stdout tail by dropping
-    the FASTEST per-query entries first (the slow ones are the regression
-    signal); bench_detail.json always has the full set.
+    Called after EVERY block, not only at exit: a timeout or crash mid-run
+    leaves the previous block's line as the last parseable output. Each
+    line is kept under a 2000-char stdout tail by dropping the FASTEST
+    per-query entries first (the slow ones are the regression signal);
+    bench_detail.json always has the full set.
     """
-    # tmp + atomic rename: a driver kill mid-dump must not clobber the
-    # previous block's complete detail file with a truncated one
+    # tmp + atomic rename: a kill mid-dump must not clobber the previous
+    # block's complete detail file with a truncated one
     with open(detail_path + ".tmp", "w") as fh:
         json.dump(detail, fh, indent=1)
     os.replace(detail_path + ".tmp", detail_path)
@@ -414,30 +124,6 @@ def _emit(out: dict, detail: dict, detail_path: str) -> None:
     print(line, flush=True)
 
 
-_GC_EVERY = 25  # queries between cleanup nudges (see _gc_nudge)
-
-
-def _gc_nudge(spark) -> None:
-    """Flush the session's deferred cleanup debt OUTSIDE any timed region.
-
-    Each query execution leaves localCheckpoint blocks and broadcasts
-    whose removal waits for ContextCleaner, which only learns of dead
-    references after a DRIVER GC -- so after a few hundred executions a
-    naturally-triggered GC floods the block manager with removals while
-    some unlucky CONTIGUOUS WINDOW of queries is running. Measured: a
-    13-query window at 2-6x its isolated cost, in a different position
-    each run (r8's driver run: events_value_bootstrap_ci 14.9 s /
-    emb_kmeans_update 20.3 s, five slots apart; this round's rehearsals:
-    the warehouse block at slots 180-192). The sf10 block has nudged
-    between twin runs since r8 for the same reason; this extends the
-    discipline to the headline/sf1 blocks at a fixed cadence, between
-    queries (per-query timing never includes it)."""
-    import gc
-
-    gc.collect()
-    spark.sparkContext._jvm.System.gc()
-
-
 def _scan_warm(spark, data_dir: str) -> None:
     """Pull a dataset's parquet bytes through the OS page cache (noop sink)
     so cold disk reads are not charged to whichever query runs first."""
@@ -448,54 +134,71 @@ def _scan_warm(spark, data_dir: str) -> None:
             ).format("noop").save()
 
 
+def _driver_memory() -> str:
+    """The bench session's heap: ``SPARK_DRIVER_MEMORY``, else half of
+    physical memory up to 48g. The sf1 and sf10 blocks run in the same
+    JVM, and the 100x graph queries hold an edge checkpoint while every
+    task thread shares the execution pool, so a large machine gets twice
+    the engine's 24g default."""
+    from aws_glue_cdc_metrics_job_spark.session import default_driver_memory
+
+    return os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(ceiling_gb=48)
+
+
 def main() -> int:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    import __spark_entry__ as e
+    from aws_glue_cdc_metrics_job_spark.plans import adapters
     from aws_glue_cdc_metrics_job_spark.session import get_spark
 
-    # Repo-local shuffle/scratch dir (VERDICT r7 item 1): the r7 driver run
-    # died on a shuffle-fetch FileNotFoundException under /tmp
-    # (blockmgr-.../shuffle_6353...). Keeping block-manager files under the
-    # repo rules out /tmp cleaners or tmpfs pressure as a failure mode.
-    scratch = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".spark_scratch")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf1_dir = os.environ.get("SPARK_GRAFT_SF1_DIR", os.path.join(ROOT, ".bench_sf1"))
+    skew_dir = os.environ.get("SPARK_GRAFT_SKEW_DIR", os.path.join(ROOT, ".bench_sf1_skew"))
+    sf10_dir = os.environ.get("SPARK_GRAFT_SF10_DIR", os.path.join(ROOT, ".bench_sf10"))
+    detail_path = os.environ.get("SPARK_GRAFT_DETAIL", os.path.join(ROOT, "bench_detail.json"))
+    # Block-manager files under the repo, not /tmp: a shuffle-fetch
+    # FileNotFoundException under /tmp once killed a run, so /tmp cleaners
+    # and tmpfs pressure stay out of the picture.
+    scratch = os.path.join(ROOT, ".spark_scratch")
     os.makedirs(scratch, exist_ok=True)
-    spark = get_spark(app_name="bench", extra_conf={"spark.local.dir": scratch})
-    qs = e.queries()
-    names = [n for n in HEADLINE if n in qs]
-    detail_path = os.environ.get(
-        "SPARK_GRAFT_DETAIL",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_detail.json"),
+    spark = get_spark(
+        app_name="bench",
+        extra_conf={"spark.local.dir": scratch, "spark.driver.memory": _driver_memory()},
     )
+    gc_spent: dict[str, float] = {}
 
-    # Warm-up pass: JVM/codegen warm-up + populates the cached silver frames
-    # (adapters._SILVER_CACHE), so the measured pass reports steady-state
-    # engine throughput rather than first-plan compilation.
-    for i, name in enumerate(names):
-        if i % _GC_EVERY == 0:
-            _gc_nudge(spark)
-        qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+    def collect(block: str) -> None:
+        t0 = time.monotonic()
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        gc_spent[block] = gc_spent.get(block, 0.0) + time.monotonic() - t0
 
-    # One measured pass for everything; a second (min-of-two) pass only for
-    # the BASELINE anchors + round-new entries (MIN2): one-off events
-    # (silver-cache eviction, a major GC) otherwise land on whichever query
-    # runs first and report as a fake regression. The full-set second pass
-    # was the r7 wall-clock blowout; the sub-2s tail doesn't need it.
+    def timed(name: str, data_dir: str) -> float:
+        t0 = time.monotonic()
+        catalog.QUERIES[name](spark, data_dir).write.mode("overwrite").format("noop").save()
+        return round(time.monotonic() - t0, 3)
+
+    def sweep(names, data_dir, block, label=None, into=None, nudge=True) -> None:
+        """One pass over ``names``, collecting every _GC_EVERY queries
+        when ``nudge``; with ``into``, keep each query's fastest time."""
+        for i, name in enumerate(names):
+            if nudge and i % _GC_EVERY == 0:
+                collect(block)
+            t = timed(name, data_dir)
+            if into is not None:
+                into[name] = min(into.get(name, t), t)
+                print(f"# {label}{name}: {t:.2f}s", file=sys.stderr)
+
+    def emit() -> None:
+        detail["gc_overhead_s"] = {b: round(s, 3) for b, s in gc_spent.items()}
+        _emit(out, detail, detail_path)
+
+    # A warm-up pass (JVM/codegen, the cached silver frames), then one
+    # measured pass, then a second (min-of-two) pass for the MIN2 queries
+    # only: the sub-2 s tail does not need it.
+    names = list(HEADLINE)
     timings: dict[str, float] = {}
-    for i, name in enumerate(names):
-        if i % _GC_EVERY == 0:
-            _gc_nudge(spark)  # between queries: never inside a timing
-        t0 = time.monotonic()
-        qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-        timings[name] = round(time.monotonic() - t0, 3)
-        print(f"# {name}: {timings[name]:.2f}s", file=sys.stderr)
-    for i, name in enumerate([n for n in names if n in MIN2]):
-        if i % _GC_EVERY == 0:
-            _gc_nudge(spark)
-        t0 = time.monotonic()
-        qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-        t = round(time.monotonic() - t0, 3)
-        timings[name] = min(timings[name], t)
-        print(f"# min2 {name}: {t:.2f}s", file=sys.stderr)
+    sweep(names, sf_dir, "headline")
+    sweep(names, sf_dir, "headline", "", timings)
+    sweep([n for n in names if n in MIN2], sf_dir, "headline", "min2 ", timings)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
@@ -510,86 +213,46 @@ def main() -> int:
         "sf": sf_val,
     }
     detail: dict = {"sf": sf_val, "queries": timings}
-    _emit(out, detail, detail_path)
+    emit()
 
-    # Secondary 10x scale point (VERDICT r1 item 8): derived .bench_sf1 data
-    # exposes shuffle-volume scaling the fixed-overhead-bound sf0.1 numbers
-    # hide. One measured pass (session/codegen already warm); reported as an
-    # extra key on the same single JSON line.
-    sf1_dir = os.environ.get(
-        "SPARK_GRAFT_SF1_DIR",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_sf1"),
-    )
+    # 10x point (tools/scale_up.py): exposes the shuffle-volume scaling the
+    # fixed-overhead-bound sf0.1 numbers hide. Per-query times go to the
+    # detail file only, to keep the stdout line short.
     if not os.path.isdir(sf1_dir):
-        # Loud, because silent was expensive once: a fresh workspace lacks
-        # the derived scale dirs (they are gitignored) and a run without
-        # them reports headline-only with no visible reason. Rebuild:
-        #   python tools/scale_up.py 10 && python tools/scale_up.py --skew
-        #   && python tools/scale_up.py 100 .bench_sf10
+        # a fresh checkout lacks the derived (gitignored) scale dirs
         print(
             f"# WARNING: {sf1_dir} missing -- sf1/skew/sf10 blocks SKIPPED"
-            " (tools/scale_up.py rebuilds them)",
+            " (python tools/scale_up.py 10 && python tools/scale_up.py --skew"
+            " && python tools/scale_up.py 100 .bench_sf10 rebuild them)",
             file=sys.stderr,
         )
-    if os.path.isdir(sf1_dir):
-        # Cheap warm instead of a full warm-up pass (VERDICT r7 item 1: the
-        # full-pass warm-up tripled the block's wall clock): page-cache the
-        # parquet bytes and materialize the shared silver caches once,
-        # outside any timing. Plan codegen is already warm from the sf0.1
-        # block (generated classes key on the plan shape, not the input
-        # path), so a single measured pass is steady-state.
+    else:
+        # Cheap warm instead of a warm-up pass: page-cache the parquet
+        # bytes and materialize the shared silver caches outside any
+        # timing. Codegen is warm from the sf0.1 block (generated classes
+        # key on the plan shape, not the input path).
         _scan_warm(spark, sf1_dir)
-        from aws_glue_cdc_metrics_job_spark.plans import adapters as _ad
-
-        _ad.order_revenue(spark, sf1_dir).write.mode("overwrite").format("noop").save()
+        adapters.order_revenue(spark, sf1_dir).write.mode("overwrite").format("noop").save()
         scale_names = [n for n in names if n not in SCALE_EXCLUDE]
         t1: dict[str, float] = {}
-        for i, name in enumerate(scale_names):
-            if i % _GC_EVERY == 0:
-                _gc_nudge(spark)  # between queries: never inside a timing
-            t0 = time.monotonic()
-            qs[name](spark, sf1_dir).write.mode("overwrite").format("noop").save()
-            t1[name] = round(time.monotonic() - t0, 3)
-            print(f"# sf1 {name}: {t1[name]:.2f}s", file=sys.stderr)
-        # Second (min-of-two) pass only for the judged-ratio denominators:
-        # decade numerators divide by these (sf10 block) and skew numerators
-        # divide by these (skew block), so they get the steady-state min.
-        for i, name in enumerate([n for n in scale_names if n in SF1_MIN2]):
-            if i % _GC_EVERY == 0:
-                _gc_nudge(spark)
-            t0 = time.monotonic()
-            qs[name](spark, sf1_dir).write.mode("overwrite").format("noop").save()
-            t = round(time.monotonic() - t0, 3)
-            t1[name] = min(t1[name], t)
-            print(f"# sf1 min2 {name}: {t:.2f}s", file=sys.stderr)
-        # Per-query sf1 timings go to the detail file only: the driver
-        # captures a bounded stdout tail (2000 chars), and round 2's full
-        # two-scale per-query line outgrew it (BENCH_r02 "parsed": null).
+        sweep(scale_names, sf1_dir, "sf1", "sf1 ", t1)
+        # min-of-two only for the denominators of the judged sf10 and
+        # skew ratios
+        ratio_names = set(SF10_QUERIES) | set(SKEW_QUERIES)
+        sweep([n for n in scale_names if n in ratio_names], sf1_dir, "sf1", "sf1 min2 ", t1)
         out["sf1"] = {"value": round(sum(t1.values()), 3), "scale": "10x sf0.1",
                       "detail": "bench_detail.json"}
         detail["sf1"] = {"value": round(sum(t1.values()), 3), "queries": t1,
                          "scale": "10x sf0.1"}
 
-        # Hot-key stress block (VERDICT r5 item 6): same row count as the
-        # uniform 10x point, one user+type at ~20% of rows. Reported as
-        # worst skew/uniform ratio; per-query detail in bench_detail.json.
-        skew_dir = os.environ.get(
-            "SPARK_GRAFT_SKEW_DIR",
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_sf1_skew"),
-        )
+        # Hot-key block: the uniform 10x row count with one user+type at
+        # ~20% of event rows; reported as the worst skew/uniform ratio.
         if os.path.isdir(skew_dir):
-            skew_names = [n for n in SKEW_QUERIES if n in qs]
-            for name in skew_names:
-                qs[name](spark, skew_dir).write.mode("overwrite").format("noop").save()
             ts: dict[str, float] = {}
+            sweep(SKEW_QUERIES, skew_dir, "skew", nudge=False)
             for _pass in range(2):
-                for name in skew_names:
-                    t0 = time.monotonic()
-                    qs[name](spark, skew_dir).write.mode("overwrite").format("noop").save()
-                    t = round(time.monotonic() - t0, 3)
-                    ts[name] = min(ts.get(name, t), t)
-                    print(f"# skew {name}: {t:.2f}s", file=sys.stderr)
-            ratios = {n: round(ts[n] / t1[n], 2) for n in skew_names if t1.get(n)}
+                sweep(SKEW_QUERIES, skew_dir, "skew", "skew ", ts, nudge=False)
+            ratios = {n: round(ts[n] / t1[n], 2) for n in SKEW_QUERIES if t1.get(n)}
             worst = max(ratios, key=ratios.get) if ratios else None
             out["sf1_skew"] = {
                 "value": round(sum(ts.values()), 3),
@@ -602,63 +265,28 @@ def main() -> int:
                 "ratio_vs_uniform": ratios,
                 "scale": "10x sf0.1, one user/type at 20% of event rows",
             }
-        _emit(out, detail, detail_path)
+        emit()
 
-    # Decade point (VERDICT r5 item 7): 100x sf0.1 for the top-expensive
-    # queries only, ONE measured pass after warm-up -- the deliverable is
-    # the 10x->100x scaling ratio per query, not absolute precision.
-    sf10_dir = os.environ.get(
-        "SPARK_GRAFT_SF10_DIR",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_sf10"),
-    )
+    # Decade point: 100x sf0.1 for the SF10_QUERIES, one COLD measured
+    # pass (SF10_WARM aside) -- the deliverable is the 10x->100x ratio per
+    # query, and cold numbers only bias it upward. At 100x the previous
+    # query's checkpointed edges otherwise pin enough storage memory to OOM
+    # the next one, hence the collect after every run. The budget counts
+    # the block's wall clock; queries past it are skipped AND NAMED
+    # (SPARK_GRAFT_SF10_BUDGET=1e9 runs them all).
     if os.path.isdir(sf10_dir):
-        import gc
-
-        # Single COLD pass under a wall-clock budget: a warm-up pass would
-        # double a block whose heaviest query alone runs minutes, and cold
-        # numbers only bias the decade ratios UPWARD (conservative).
-        # Between queries, checkpointed edge RDDs from the previous query
-        # are released (driver+JVM gc -> ContextCleaner) -- at 100x they
-        # otherwise pin enough storage memory to OOM the next query's
-        # execution pool. Queries past the budget are SKIPPED AND NAMED
-        # (no silent caps); the full set lives in BASELINE.md's one-time
-        # dedicated run.
-        # Default 450 s (was 900): VERDICT r7 item 1 -- the block must
-        # self-trim inside the driver's wall clock instead of being killed.
-        # The budget counts WALL CLOCK spent in the block (warm-up runs
-        # included), not just measured time. Queries past it are skipped
-        # and named; the full set lives in BASELINE.md's dedicated run
-        # (re-recorded each round via SPARK_GRAFT_SF10_BUDGET=1e9).
         budget = float(os.environ.get("SPARK_GRAFT_SF10_BUDGET", "450"))
-        sf10_names = [n for n in SF10_QUERIES if n in qs]
-        # Warm the OS page cache + parquet footers with one cheap full
-        # scan of each input file BEFORE the block (seconds for ~2.3 GB at
-        # 32 threads; not charged to the budget): r6's fully-cold pass
-        # charged the disk read-in to whichever query ran first, inverting
-        # twin pairs (the xxhash bootstrap read slower than its md5 twin
-        # purely by position). Queries themselves stay single-pass.
+        # page cache + parquet footers and the silver caches, outside the
+        # budget: a cold pass otherwise charges the disk read-in and the
+        # whole silver build to the first query it meets
         _scan_warm(spark, sf10_dir)
-        # Materialize the shared silver cache once, outside any timing
-        # (adapters._SILVER_CACHE): the sf0.1/sf1 blocks' warm-up passes
-        # populate it implicitly, but the cold sf10 pass otherwise charges
-        # the whole 4-table silver build to the FIRST mart query it meets
-        # -- whose decade ratio then measures the cache, not the query
-        # (r7 preview: clv_segment 28.8x while its own post-cache work is
-        # ~7s and its approx twin, running one slot later, read 7.8x).
-        from aws_glue_cdc_metrics_job_spark.plans import adapters
-
-        # (order_revenue's build materializes the order_items cache too)
-        adapters.order_revenue(spark, sf10_dir).write.mode("overwrite").format(
-            "noop"
-        ).save()
+        adapters.order_revenue(spark, sf10_dir).write.mode("overwrite").format("noop").save()
         t10: dict[str, float] = {}
         skipped: list[str] = []
         block_t0 = time.monotonic()
         silver_released = False
-        for name in sf10_names:
+        for name in SF10_QUERIES:
             if not silver_released and name not in SF10_SILVER:
-                # release the silver caches once the mart twins are done
-                # (see SF10_SILVER): nothing below reads them
                 for k in [k for k in adapters._SILVER_CACHE if k[1] == sf10_dir]:
                     adapters._SILVER_CACHE.pop(k).unpersist()
                 silver_released = True
@@ -666,40 +294,16 @@ def main() -> int:
                 skipped.append(name)
                 continue
             if name in SF10_WARM:
-                # steady-state semantics for the twin pairs (see SF10_WARM):
-                # one unmeasured run materializes the shared lineage's
-                # shuffle stages, matching the warm-min sf1 denominator --
-                # then min of TWO measured runs, because storage-eviction /
-                # GC one-offs at this scale land on a single run at random
-                # and invert twin pairs (the sf0.1/sf1 blocks' discipline).
-                # GC between the back-to-back runs (untimed): each
-                # quantile_bucket call leaves an eager localCheckpoint
-                # whose blocks survive until ContextCleaner runs after a
-                # driver GC -- without the nudge the NEXT run pays the
-                # previous run's cleanup (measured 2-3x inflation of a
-                # twin at random in the r8 dedicated run).
-                qs[name](spark, sf10_dir).write.mode("overwrite").format("noop").save()
-                gc.collect()
-                spark.sparkContext._jvm.System.gc()
-            t0 = time.monotonic()
-            qs[name](spark, sf10_dir).write.mode("overwrite").format("noop").save()
-            t10[name] = round(time.monotonic() - t0, 3)
+                timed(name, sf10_dir)
+                collect("sf10")
+            t10[name] = timed(name, sf10_dir)
             if name in SF10_WARM:
-                gc.collect()
-                spark.sparkContext._jvm.System.gc()
-                t0 = time.monotonic()
-                qs[name](spark, sf10_dir).write.mode("overwrite").format("noop").save()
-                t10[name] = min(t10[name], round(time.monotonic() - t0, 3))
+                collect("sf10")
+                t10[name] = min(t10[name], timed(name, sf10_dir))
             print(f"# sf10 {name}: {t10[name]:.2f}s", file=sys.stderr)
-            gc.collect()
-            spark.sparkContext._jvm.System.gc()
-        d10 = {}
-        if os.path.isdir(sf1_dir):
-            d10 = {
-                n: round(t10[n] / detail["sf1"]["queries"][n], 2)
-                for n in t10
-                if detail.get("sf1", {}).get("queries", {}).get(n)
-            }
+            collect("sf10")
+        t1_queries = detail.get("sf1", {}).get("queries", {})
+        d10 = {n: round(t10[n] / t1_queries[n], 2) for n in t10 if t1_queries.get(n)}
         worst10 = max(d10, key=d10.get) if d10 else None
         out["sf10"] = {
             "value": round(sum(t10.values()), 3),
@@ -714,7 +318,7 @@ def main() -> int:
             "skipped_over_budget": skipped,
             "scale": "100x sf0.1, top-expensive subset, single cold pass",
         }
-        _emit(out, detail, detail_path)
+        emit()
     return 0
 
 

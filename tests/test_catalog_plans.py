@@ -126,3 +126,16 @@ def test_grade_first_names_all_exist():
     assert missing == [], f"GRADE_FIRST names not in the catalog: {missing}"
     dupes = [n for n in set(catalog.GRADE_FIRST) if catalog.GRADE_FIRST.count(n) > 1]
     assert dupes == [], f"GRADE_FIRST repeats (wastes window slots): {dupes}"
+
+
+def test_unknown_catalog_tag_raises():
+    """bench.py builds its query sets from catalog tags, so a misspelt tag
+    would silently move a query out of its block: only the known tags
+    register."""
+    with pytest.raises(ValueError, match="unknown tags"):
+        catalog.query("tag_probe", tags=("min-2",))
+    with pytest.raises(ValueError, match="unknown tags"):
+        catalog.query("tag_probe", tags="min2")  # a string, not a tuple of tags
+    assert "tag_probe" not in catalog.QUERIES
+    assert set(catalog.TAGS) == set(catalog.QUERIES)
+    assert all(tags <= catalog.TAG_NAMES for tags in catalog.TAGS.values())

@@ -318,6 +318,35 @@ def test_pagerank_bucketed_matches_plain_and_plan(spark, tmp_path):
     spark.sql("DROP TABLE IF EXISTS pr_bkt_test")
 
 
+def test_bucketed_hop_keeps_the_edge_side_local_for_any_node_width(spark, tmp_path):
+    """The node frames every bucketed walk hands to ``_hop`` are
+    checkpoints, and a checkpoint's width need not match the bucket count:
+    a frame hash-partitioned on NODE at 7 partitions, and one coalesced by
+    AQE from the suite's 8 shuffle partitions, both against a 4-bucket
+    edge table. Either way the merge join reads the bucketed edge scan with
+    no Exchange above it, and only the node side moves."""
+    from aws_glue_cdc_metrics_job_spark.operators.graph import _hop, _write_bucketed
+
+    assert spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled") == "true"
+    df = spark.createDataFrame(EDGES + DIRECTED, "SRC long, DST long")
+    ed = _write_bucketed(df, "hop_bkt_test", "SRC", 4, str(tmp_path / "hop_bkt"))
+    nodes = df.select(F.col("SRC").alias("NODE")).union(df.select("DST")).distinct()
+    frames = [
+        nodes.repartition(7, "NODE").select("NODE", F.lit(1).alias("R")).localCheckpoint(),
+        nodes.groupBy("NODE").agg(F.lit(1).alias("R")).localCheckpoint(),
+    ]
+    assert frames[0].rdd.getNumPartitions() == 7
+    assert frames[1].rdd.getNumPartitions() != 4
+    in_deg = defaultdict(int)
+    for src, dst in EDGES + DIRECTED:
+        in_deg[dst] += 1
+    for frame in frames:
+        hop = _hop(ed, frame, 6, "SRC", F.col("R"), buckets=4)
+        assert dict(map(tuple, hop.collect())) == in_deg
+        assert _bucket_local_joins([hop], "SRC") == [True]
+    spark.sql("DROP TABLE IF EXISTS hop_bkt_test")
+
+
 def _lpa_replay(edges, iterations):
     """Pure-Python replay of deterministic synchronous label propagation
     (most-frequent in-neighbor label, ties to the smallest label, keep own

@@ -76,6 +76,18 @@ def test_default_driver_memory_is_half_the_machine_up_to_24g(monkeypatch):
         assert session.default_driver_memory() == want, phys_gb
 
 
+def test_default_parallelism_is_the_cpus_this_process_may_use(monkeypatch):
+    """With SPARK_GRAFT_CPUS unset, get_spark runs one task thread per CPU
+    in the process's affinity mask; the variable still overrides it."""
+    from aws_glue_cdc_metrics_job_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(session.os, "sched_getaffinity", lambda pid: {0, 2, 5})
+    assert session.default_parallelism() == 3
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
+    assert session.default_parallelism() == 2
+
+
 if __name__ == "__main__":
     sys.path.insert(0, ROOT)
     print(json.dumps(compiles_per_round(sys.argv[1])))

@@ -51,6 +51,14 @@ def test_canon_cell_basics_unchanged():
     assert oc.canon_cell([1.5, None]) == "[1.5,NULL]"
 
 
+def _load_bench():
+    path = pathlib.Path(__file__).resolve().parents[1] / "bench.py"
+    spec = importlib.util.spec_from_file_location("bench", path)
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+    return bench
+
+
 def _fake_session(sc):
     """Stands in for a SparkSession: ``sc`` plays the JVM's SparkContext."""
     from types import SimpleNamespace
@@ -114,16 +122,16 @@ def test_bench_json_contract(monkeypatch, capsys, tmp_path):
     """bench.py must emit ONE parseable JSON line with the driver's
     expected keys, under the 2000-char stdout-tail budget. Runs a
     2-query HEADLINE at smoke scale so the contract (not throughput)
-    is what's tested."""
+    is what's tested, on generated data so that it runs anywhere."""
     import json
 
-    spec = importlib.util.spec_from_file_location(
-        "bench", pathlib.Path(__file__).resolve().parents[1] / "bench.py"
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
+    from tools.make_testdata import generate
+
+    bench = _load_bench()
+    sf_dir = str(tmp_path / "sf0.001")
+    generate(sf_dir, scale=1)
     monkeypatch.setattr(bench, "HEADLINE", ["pricing_summary", "order_revenue"])
-    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
     monkeypatch.setenv("SPARK_GRAFT_SF1_DIR", "/nonexistent")  # skip 10x pass
     # the 100x decade block reads its OWN env var -- without this, the
     # contract test silently runs the full SF10_QUERIES set whenever the
@@ -139,6 +147,30 @@ def test_bench_json_contract(monkeypatch, capsys, tmp_path):
     assert out["sf"] == 0.001
     assert set(out["queries"]) == {"pricing_summary", "order_revenue"}
     assert out["value"] > 0
+    # the cleanup time between queries is reported per block, outside the
+    # per-query timings
+    gc_s = json.loads((tmp_path / "detail.json").read_text())["gc_overhead_s"]
+    assert set(gc_s) == {"headline"} and gc_s["headline"] >= 0
+
+
+def test_bench_heap_is_half_the_machine_up_to_48g(monkeypatch):
+    """bench.py asks for half of physical memory up to 48g, or
+    SPARK_DRIVER_MEMORY, and importing it leaves os.environ alone."""
+    import os
+
+    from aws_glue_cdc_metrics_job_spark import session
+
+    before = dict(os.environ)
+    bench = _load_bench()
+    assert dict(os.environ) == before
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    page = 4096
+    for phys_gb, want in ((15, "7680m"), (64, "32768m"), (128, "49152m")):
+        sizes = {"SC_PHYS_PAGES": phys_gb * 1024**3 // page, "SC_PAGE_SIZE": page}
+        monkeypatch.setattr(session.os, "sysconf", sizes.__getitem__)
+        assert bench._driver_memory() == want, phys_gb
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    assert bench._driver_memory() == "3g"
 
 
 def test_dashboard_export_renders_all_tabs(spark, sf_dir):
@@ -205,9 +237,21 @@ def test_dashboard_serve_interactive_roundtrip(spark, sf_dir):
         httpd.shutdown()
 
 
+def test_bench_refuses_an_sf10_name_the_catalog_lacks(monkeypatch):
+    """The sf10 block's hand list is checked against the catalog at import:
+    a renamed query fails the bench instead of dropping out of it."""
+    import pytest
+
+    from aws_glue_cdc_metrics_job_spark.plans import catalog
+
+    catalog.load_all()
+    monkeypatch.delitem(catalog.QUERIES, "emb_perceptron_train")
+    with pytest.raises(ValueError, match="emb_perceptron_train"):
+        _load_bench()
+
+
 def test_bench_emit_trims_and_writes_atomically(tmp_path):
-    """_emit (VERDICT r7 item 1): every emitted line must fit the driver's
-    2000-char stdout tail by dropping the FASTEST queries first, the full
+    """_emit: every emitted line must fit a 2000-char stdout tail by dropping the FASTEST queries first, the full
     dict must always land in the detail file, the original out dict must
     stay untrimmed for later cumulative emits, and the detail write must
     be tmp+rename (no truncated file visible at the final path)."""
@@ -216,11 +260,7 @@ def test_bench_emit_trims_and_writes_atomically(tmp_path):
     import os
     from contextlib import redirect_stdout
 
-    spec = importlib.util.spec_from_file_location(
-        "bench2", pathlib.Path(__file__).resolve().parents[1] / "bench.py"
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
+    bench = _load_bench()
 
     queries = {f"query_name_{i:04d}": round(0.01 * i, 2) for i in range(400)}
     out = {

@@ -1,6 +1,6 @@
 """Render the 7 dashboard tabs to ONE standalone HTML file, zero deps.
 
-Closes the VERDICT r4 "dashboard rendering edge" gap: the reference ships a
+The dashboard rendering edge: the reference ships a
 Streamlit+Plotly app (streamlit_app/app.py, 7 tabs) over the gold marts;
 this engine computes every tab's frame in Spark (bi.py, parity-tested vs
 pandas) and here renders them -- stat-tile KPI rows, SVG bar charts with

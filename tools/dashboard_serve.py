@@ -1,6 +1,6 @@
 """Interactive dashboard server over the gold marts, zero deps (stdlib).
 
-Closes the round-5 VERDICT "What's missing #2": the reference ships a LIVE
+The live dashboard: the reference ships a LIVE
 Streamlit app (streamlit_app/app.py) that recomputes each tab's frames on
 demand; tools/dashboard_export.py already renders every tab statically,
 and this serves the SAME rendering behind a long-lived SparkSession with

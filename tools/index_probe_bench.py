@@ -1,5 +1,5 @@
-"""Decade evidence for the incremental-dedup production claim (VERDICT r6
-item 6): per-delivery cost is O(batch + one hash-keyed index probe) -- the
+"""Decade evidence for the incremental-dedup production claim:
+per-delivery cost is O(batch + one hash-keyed index probe) -- the
 indexed corpus is never re-tokenized / re-shingled. This measures a FIXED
 batch probed against persisted indexes built from 10x and 100x corpora and
 reports how probe time moves with index size (the honest number: the floor

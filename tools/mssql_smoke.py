@@ -1,4 +1,4 @@
-"""Live SQL Server smoke test for the S1/S2 ingest paths (VERDICT r4 item 7).
+"""Live SQL Server smoke test for the S1/S2 ingest paths.
 
 The engine's JDBC surface (sources/jdbc.py: sqlserver_url, sqlserver_read,
 incremental_query) mirrors the reference's Glue->SQL Server ingest

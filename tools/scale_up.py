@@ -1,6 +1,6 @@
 """Build derived bench-only scale points from the driver's sf0.1 tables.
 
-VERDICT r1 item 8: the 2x-of-baseline criterion is judged at sf0.1, where
+The 2x-of-baseline criterion is judged at sf0.1, where
 several queries are fixed-overhead-bound; a 10x point exposes shuffle-volume
 regressions those numbers hide. No sf1 directory ships with the sandbox, so
 this derives one: K key-shifted copies of every sf0.1 fact table, with key
@@ -12,7 +12,7 @@ real dims. Document/embedding copies keep identical text/vectors -- at 10x
 every doc has 10 exact dups, which is precisely the workload the dedup
 operators exist for.
 
-Round-6 additions (VERDICT r5 items 6-7):
+Further scale points:
 
 - ``--skew``: hot-key mode. Derives ``.bench_sf1_skew`` from an existing
   ``.bench_sf1``: ~20% of event rows (event_id % 5 == 0) are remapped to
