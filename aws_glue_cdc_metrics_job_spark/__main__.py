@@ -90,12 +90,14 @@ def cmd_pipeline(args) -> int:
         raise ValueError(f"no source mapping for table {name!r}")
 
     stage = args.stage
-    if stage in ("bronze", "all"):
+    if stage == "all":
+        p.run_all(read_source)
+    elif stage == "bronze":
         p.run_bronze(read_source)
-    if stage in ("silver", "all"):
+    elif stage == "silver":
         p.run_silver()
-        p.build_order_revenue("order_items", "order_item_options")
-    if stage in ("gold", "all"):
+        p.build_order_revenue()
+    else:
         p.run_gold()
     print(f"pipeline stage={stage} complete under {args.zones}")
     return 0

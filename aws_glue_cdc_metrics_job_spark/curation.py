@@ -48,6 +48,41 @@ class CurationConfig:
     pack_shards: int = 64
 
 
+def curate(docs: DataFrame, benchmark: DataFrame, cfg: CurationConfig) -> DataFrame:
+    """The curate stage: per-language quality filter, exact dedup (min-id
+    survivor per fingerprint), benchmark decontamination (n-gram overlap
+    with ``benchmark``), then the stratified data mix. The
+    ``docs_curation_pipeline`` catalog query grades this same plan."""
+    quality = text.quality_top_fraction(docs, fraction=cfg.quality_fraction)
+    dk = Window.partitionBy("FINGERPRINT").orderBy("doc_id")
+    deduped = (
+        fingerprint(quality)
+        .withColumn("__dk", F.row_number().over(dk))
+        .filter(F.col("__dk") == 1)
+        .drop("__dk", "FINGERPRINT")
+        # Two consumers below (gram expansion + the anti join) and AQE
+        # plans them as independent subtrees with no exchange reuse; the
+        # lazy checkpoint materializes the two-window pipeline once.
+        .localCheckpoint(eager=False)
+    )
+    bench_grams = ngram_hashes(benchmark, cfg.decontam_n).select("NGRAM_H").distinct()
+    dirty = (
+        ngram_hashes(deduped, cfg.decontam_n, distinct=False)  # join prunes before any dedup shuffle
+        .join(F.broadcast(bench_grams), "NGRAM_H")
+        .select("doc_id")
+        .distinct()
+    )
+    clean = deduped.join(dirty, "doc_id", "left_anti")
+    return stratified_hash_sample(
+        clean,
+        "lang",
+        cfg.mix_fractions or {"en": 0.5, "de": 0.25},
+        ["doc_id"],
+        default_fraction=cfg.mix_default_fraction,
+        seed=cfg.mix_seed,
+    )
+
+
 class CurationPipeline:
     def __init__(self, spark: SparkSession, root: str, config: CurationConfig | None = None):
         self.spark = spark
@@ -62,31 +97,7 @@ class CurationPipeline:
         per-stage counts that also land in stats/."""
         cfg = self.cfg
 
-        quality = text.quality_top_fraction(docs, fraction=cfg.quality_fraction)
-        dk = Window.partitionBy("FINGERPRINT").orderBy("doc_id")
-        deduped = (
-            fingerprint(quality)
-            .withColumn("__dk", F.row_number().over(dk))
-            .filter(F.col("__dk") == 1)
-            .drop("__dk", "FINGERPRINT")
-            .localCheckpoint(eager=False)  # two consumers below
-        )
-        bench_grams = ngram_hashes(benchmark, cfg.decontam_n).select("NGRAM_H").distinct()
-        dirty = (
-            ngram_hashes(deduped, cfg.decontam_n, distinct=False)
-            .join(F.broadcast(bench_grams), "NGRAM_H")
-            .select("doc_id")
-            .distinct()
-        )
-        clean = deduped.join(dirty, "doc_id", "left_anti")
-        curated = stratified_hash_sample(
-            clean,
-            "lang",
-            cfg.mix_fractions or {"en": 0.5, "de": 0.25},
-            ["doc_id"],
-            default_fraction=cfg.mix_default_fraction,
-            seed=cfg.mix_seed,
-        ).localCheckpoint(eager=False)  # feeds vocab, encode, and stats
+        curated = curate(docs, benchmark, cfg).localCheckpoint(eager=False)  # feeds vocab, encode, and stats
         write_parquet(curated, self.zone("curated"))
 
         vocab = text.vocab_stats(curated, top_k=cfg.vocab_top_k).withColumn(

@@ -68,14 +68,3 @@ def dsum_over(col: Column | str, window: Window, scale: int = 4) -> Column:
 
 def sql_dsum_over(expr: str, over: str, scale: int = 4) -> str:
     return f"CAST(SUM(CAST(({expr}) AS DECIMAL({PRECISION},{scale}))) OVER ({over}) AS DOUBLE)"
-
-
-def davg(col: Column, n: int, scale: int = 4) -> Column:
-    """Deterministic money average: exact decimal sum / non-null count,
-    rounded half-up to ``n`` places. Both engines divide identical doubles
-    by identical longs -> identical quotient -> identical rhu."""
-    return rhu(dsum(col, scale) / F.count(col), n)
-
-
-def sql_davg(expr: str, n: int, scale: int = 4) -> str:
-    return sql_rhu(f"{sql_dsum(expr, scale)} / COUNT({expr})", n)

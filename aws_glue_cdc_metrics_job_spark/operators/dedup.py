@@ -55,22 +55,6 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     return keep_latest(fingerprint(df, text_col), ["FINGERPRINT"], [F.col(id_col)]).drop("FINGERPRINT")
 
 
-def word_shingles(df: DataFrame, text_col: str = "text", n: int = 3, out_col: str = "shingles") -> DataFrame:
-    """Distinct word n-gram shingles as an array column, via higher-order
-    functions (no UDF). Documents shorter than n words get an empty array."""
-    toks = F.split(normalized_text(text_col), " ")
-    grams = F.expr(
-        f"""CASE WHEN size(__toks) < {n} THEN array()
-             ELSE transform(sequence(0, size(__toks) - {n}),
-                            i -> concat_ws(' ', slice(__toks, i + 1, {n}))) END"""
-    )
-    return (
-        df.withColumn("__toks", toks)
-        .withColumn(out_col, F.array_distinct(grams))
-        .drop("__toks")
-    )
-
-
 def jaccard(a: str, b: str) -> F.Column:
     """|A ∩ B| / |A ∪ B| over two distinct-element array columns."""
     inter = F.size(F.array_intersect(F.col(a), F.col(b)))
@@ -248,21 +232,6 @@ def _scoped_persist(df: DataFrame) -> DataFrame:
         except Exception:  # session already stopped: nothing to release
             pass
     return df
-
-
-def minhash_signature(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    hash_col: str = "h",
-    num_perm: int = 128,
-) -> DataFrame:
-    """MinHash signature as ``num_perm`` long columns ``mh_0..mh_{K-1}``
-    over a (doc, shingle-hash) frame: permutation k is MIN(xxhash64(h, k))
-    grouped by document -- K plain min() aggregates, fully codegen'd, with
-    map-side partial aggregation so the shuffle carries one K-long row per
-    document per partition."""
-    aggs = [F.min(F.xxhash64(F.col(hash_col), F.lit(k))).alias(f"mh_{k}") for k in range(num_perm)]
-    return df.groupBy(id_col).agg(*aggs)
 
 
 def _minhash_sighset_bands(

@@ -11,9 +11,15 @@ The engine implements the silver rule: advance only to what was actually
 processed. The filter uses ``>=`` or ``>`` per the reference's two sites
 (bronze >= :64, silver > :132); duplicates that re-enter under ``>=`` are
 dropped by the deterministic keyed dedup downstream (SURVEY.md C4).
+
+The maximum processed value is not computed here: the caller observes it
+on the write it already runs (``DataFrame.observe``), so advancing a
+watermark costs no Spark job.
 """
 
 from __future__ import annotations
+
+import datetime as dt
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -36,19 +42,17 @@ def incremental_read(
     return df.filter(c >= wm) if inclusive else df.filter(c > wm)
 
 
-def advance_watermark(df: DataFrame, ts_col: str, store: WatermarkStore, table: str) -> str | None:
-    """Advance to max(ts actually processed) -- call only after the
-    downstream write succeeds (at-least-once, scripts/cdc_metrics_job.py:
-    146-147). Returns the new watermark, or None on empty input."""
-    import datetime as dt
-
-    m = df.agg(F.max(ts_col).alias("m")).collect()[0]["m"]
-    if m is None:
+def advance_watermark(store: WatermarkStore, table: str, value) -> str | None:
+    """Advance to ``value``, the max(ts) actually processed -- call only
+    after the downstream write succeeds (at-least-once,
+    scripts/cdc_metrics_job.py:146-147). Returns the new watermark, or None
+    when ``value`` is None (nothing was processed)."""
+    if value is None:
         return None
-    if isinstance(m, dt.datetime):
-        val = m.strftime("%Y-%m-%d %H:%M:%S")
-    elif isinstance(m, dt.date):
-        val = m.strftime("%Y-%m-%d")
+    if isinstance(value, dt.datetime):
+        val = value.strftime("%Y-%m-%d %H:%M:%S")
+    elif isinstance(value, dt.date):
+        val = value.strftime("%Y-%m-%d")
     else:
-        val = str(m)
+        val = str(value)
     return store.advance(table, val)

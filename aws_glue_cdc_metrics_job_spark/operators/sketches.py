@@ -167,15 +167,6 @@ def quantile_estimates(
     )
 
 
-def approx_distinct(value_col: str | Column, rsd: float = 0.05) -> Column:
-    """The one-shot form (no stored sketch): ``approx_count_distinct`` with
-    a target relative standard deviation -- the drop-in for exact
-    countDistinct in 100 TB dashboard queries."""
-    return F.approx_count_distinct(
-        F.col(value_col) if isinstance(value_col, str) else value_col, rsd
-    )
-
-
 # --- Count-min sketch (Cormode & Muthukrishnan, J.Algorithms 2005): a
 # mergeable point-frequency summary. d independent hash rows x w columns
 # of counters; an item's estimated count is the MIN of its d cells --

@@ -27,10 +27,17 @@ order. Within a unit the order is unchanged (a table's watermark advances
 only after its write), so a failed unit replays on the next run like a
 failed serial run would.
 
+Each unit runs one path whatever its input: an empty change set is
+written like any other (a CDC directory with no data files), and an empty
+full-image source empties its silver image. The reference short-circuits
+on empty input (:134); here that would leave silver's full image, and the
+marts built on it, holding rows the source has deleted.
+
 Deliberate improvements over the reference (each flagged in SURVEY.md):
-- ``df.cache()`` at multi-action nodes -- the reference recomputes the
-  bronze frame for each of its 3 sinks (:84,111,112) and the silver frame
-  for its watermark ``agg(max)`` (:146);
+- the bronze frame is cached -- the reference recomputes it for each of
+  its 3 sinks (:84,111,112);
+- watermarks observed on the zone write (``DataFrame.observe``) instead of
+  a second ``agg(max)`` scan of the written frame (:146);
 - diff on business columns only (the reference's full-row subtract compares
   the per-run ingestion timestamps it just added, misclassifying every row
   every run -- O1);
@@ -42,7 +49,7 @@ Deliberate improvements over the reference (each flagged in SURVEY.md):
 Scale notes (100 TB): every zone write goes through
 ``write_parquet(partition_by=...)`` so downstream reads prune partitions;
 the CDC diff shuffles only primary keys + changed rows (operators.cdc);
-nothing collects to the driver except the tiny watermark values.
+nothing reaches the driver except the observed watermark values.
 """
 
 from __future__ import annotations
@@ -53,7 +60,7 @@ from dataclasses import dataclass, field
 from functools import partial
 from typing import TypeVar
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 from pyspark.util import inheritable_thread_target
@@ -66,6 +73,10 @@ from .sources import MedallionLayout, path_exists, read_parquet, write_parquet
 from .state import WatermarkStore
 
 T = TypeVar("T")
+
+# The silver tables order_revenue and the gold marts are built from.
+ITEMS_TABLE = "order_items"
+OPTIONS_TABLE = "order_item_options"
 
 
 @dataclass(frozen=True)
@@ -142,7 +153,7 @@ class CdcPipeline:
         if spec.ts_col is not None:
             src = incremental_read(src, spec.ts_col, self.store, f"bronze/{spec.name}", inclusive=True)
         cur = src.withColumn("ingestion_timestamp", F.lit(now).cast("timestamp")).cache()
-        write_parquet(cur, self.layout.bronze(spec.name, run_date), mode="overwrite")
+        mark = _write_noting_max(cur, spec.ts_col, self.layout.bronze(spec.name, run_date), mode="overwrite")
 
         if spec.ts_col is not None:
             delta = tag_appends(cur, now)
@@ -158,17 +169,9 @@ class CdcPipeline:
             delta = cdc_diff(cur, prev, pks=spec.pks).withColumn(
                 CDC_TS, F.lit(now).cast("timestamp")
             )
-        if delta.isEmpty():
-            # empty-input short-circuit (reference :134): a files-less
-            # partitioned dir is unreadable, so don't write or re-read it
-            if spec.ts_col is None:
-                write_parquet(
-                    cur.drop("ingestion_timestamp"), self.layout.snapshot(spec.name), mode="overwrite"
-                )
-            cur.unpersist()
-            return delta
         # the log's schema as a read infers it: the data columns, then the
-        # partition column; passing it spares the inference job
+        # partition column; passing it spares the inference job, and makes
+        # an empty change set (a directory with no data files) readable
         logged = StructType(
             [StructField(f.name, f.dataType) for f in delta.schema if f.name != CDC_ACTION]
             + [StructField(CDC_ACTION, StringType())]
@@ -181,7 +184,7 @@ class CdcPipeline:
                 cur.drop("ingestion_timestamp"), self.layout.snapshot(spec.name), mode="overwrite"
             )
         else:
-            advance_watermark(cur, spec.ts_col, self.store, f"bronze/{spec.name}")
+            advance_watermark(self.store, f"bronze/{spec.name}", mark)
         cur.unpersist()
         # Return the change set re-read from the durable log: the diff's
         # lineage reads the snapshot path, which the overwrite above just
@@ -198,33 +201,33 @@ class CdcPipeline:
 
     def _silver_table(self, spec: TableSpec, run_date: str) -> None:
         df = read_parquet(self.spark, self.layout.bronze(spec.name, run_date))
+        date_col = None
         if spec.event_date_col is not None:
-            df = df.withColumn("CREATION_DATE", F.to_date(spec.event_date_col))
+            date_col = "CREATION_DATE"
+            df = df.withColumn(date_col, F.to_date(spec.event_date_col))
             wm = self.store.get(f"silver/{spec.name}")
-            df = df.filter(F.col("CREATION_DATE") > F.lit(wm).cast("date"))
+            df = df.filter(F.col(date_col) > F.lit(wm).cast("date"))
         for col, typ in spec.casts.items():
             df = df.withColumn(col, F.col(col).cast(typ))
-        if df.isEmpty():
-            return
         order = [F.col(spec.ts_col).desc()] if spec.ts_col else []
-        df = keep_latest(df, spec.pks, order, tiebreakers=spec.pks).cache()
+        df = keep_latest(df, spec.pks, order, tiebreakers=spec.pks)
         # Watermarked fact tables accrete by event date; snapshot-diff
         # tables conform the full current image, so overwrite.
-        write_parquet(
+        mark = _write_noting_max(
             df,
+            date_col,
             self.layout.silver(spec.name),
-            mode="append" if spec.event_date_col else "overwrite",
-            partition_by=["CREATION_DATE"] if spec.event_date_col else None,
+            mode="append" if date_col else "overwrite",
+            partition_by=[date_col] if date_col else None,
         )
-        if spec.event_date_col is not None:
-            advance_watermark(df, "CREATION_DATE", self.store, f"silver/{spec.name}")
-        df.unpersist()
+        if date_col is not None:
+            advance_watermark(self.store, f"silver/{spec.name}", mark)
 
-    def build_order_revenue(self, items_table: str, options_table: str) -> DataFrame:
+    def build_order_revenue(self) -> DataFrame:
         from .plans.marts import build_order_revenue
 
-        items = read_parquet(self.spark, self.layout.silver(items_table))
-        options = read_parquet(self.spark, self.layout.silver(options_table))
+        items = read_parquet(self.spark, self.layout.silver(ITEMS_TABLE))
+        options = read_parquet(self.spark, self.layout.silver(OPTIONS_TABLE))
         revenue = build_order_revenue(items, options)
         write_parquet(
             revenue,
@@ -236,7 +239,7 @@ class CdcPipeline:
 
     # ---- gold -------------------------------------------------------------
 
-    def run_gold(self, items_table: str = "order_items", options_table: str = "order_item_options") -> None:
+    def run_gold(self) -> None:
         """All marts from silver, overwritten (SURVEY.md §2.10), the marts
         concurrently."""
         from .plans import marts
@@ -246,8 +249,8 @@ class CdcPipeline:
         # otherwise race to compute its still-empty partitions, each
         # building revenue again (see plans.adapters._memoized).
         revenue.count()
-        items = read_parquet(self.spark, self.layout.silver(items_table))
-        options = read_parquet(self.spark, self.layout.silver(options_table))
+        items = read_parquet(self.spark, self.layout.silver(ITEMS_TABLE))
+        options = read_parquet(self.spark, self.layout.silver(OPTIONS_TABLE))
         now = self.clock.today_str
 
         # mart -> builder; each unit builds its mart's plan itself, so a
@@ -281,5 +284,18 @@ class CdcPipeline:
     def run_all(self, read_source: Callable[[str], DataFrame]) -> None:
         self.run_bronze(read_source)
         self.run_silver()
-        self.build_order_revenue("order_items", "order_item_options")
+        self.build_order_revenue()
         self.run_gold()
+
+
+def _write_noting_max(df: DataFrame, col: str | None, path: str, **kwargs) -> object:
+    """``write_parquet``, returning ``max(col)`` over the rows written
+    (None when ``col`` is None or no row was written). The value is
+    observed on the write itself, so it costs no second scan."""
+    if col is None:
+        write_parquet(df, path, **kwargs)
+        return None
+    seen = Observation()
+    write_parquet(df.observe(seen, F.max(col).alias("m")), path, **kwargs)
+    # only once the write has returned: get blocks until its action reports
+    return seen.get["m"]

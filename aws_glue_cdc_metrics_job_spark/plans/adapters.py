@@ -45,7 +45,10 @@ NOW_EVENTS = "2024-01-31"  # fixed 'today' for the events-based operators (data 
 # they are memoized and spark-cached per (session, sf_dir) -- the in-process
 # analog of the reference's materialized silver zone (EP2 writes silver
 # parquet once, EP3's marts re-read it; scripts/cdc_metrics_job.py:190,225),
-# and the cache-at-multi-action-nodes fix SURVEY.md §4 calls out.
+# and the cache-at-multi-action-nodes fix SURVEY.md §4 calls out. A session
+# keeps one entry per frame name: a new sf_dir replaces, and unpersists, the
+# entry for the old one, so a caller that moves to fresh input directories
+# does not pin one cached frame per directory.
 _SILVER_CACHE: dict[tuple[int, str, str], DataFrame] = {}
 # Makes check-then-build atomic, so threads asking for the same frame share
 # one build. Reentrant: the order_revenue build asks for order_items.
@@ -56,6 +59,8 @@ def _memoized(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
     key = (id(spark), sf_dir, name)
     with _SILVER_LOCK:
         if key not in _SILVER_CACHE:
+            for old in [k for k in _SILVER_CACHE if k[0] == key[0] and k[2] == name]:
+                _SILVER_CACHE.pop(old).unpersist()
             df = build().cache()
             # Materialize EAGERLY: a cold multi-branch mart
             # (churn profile joins three aggregations of order_revenue)

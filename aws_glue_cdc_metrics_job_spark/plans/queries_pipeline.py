@@ -1050,38 +1050,12 @@ def q_docs_curation_pipeline(spark: SparkSession, sf_dir: str):
     Catalyst pipelines the stages: the quality window and dedup window
     reuse the same scan, the benchmark gram set broadcasts, and the mix
     filter is a scan-stage CASE."""
-    from ..operators.decontam import ngram_hashes
-    from ..operators.dedup import fingerprint
-    from ..operators.sampling import stratified_hash_sample
-    from pyspark.sql import Window
+    from ..curation import CurationConfig, curate
 
     docs = read_table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 97 == 0)
     corpus = docs.filter(F.col("doc_id") % 97 != 0)
-
-    quality = text.quality_top_fraction(corpus, fraction=0.5)
-    dk = Window.partitionBy("FINGERPRINT").orderBy("doc_id")
-    deduped = (
-        fingerprint(quality)
-        .withColumn("__dk", F.row_number().over(dk))
-        .filter(F.col("__dk") == 1)
-        .drop("__dk", "FINGERPRINT")
-        # Two consumers below (gram expansion + the anti join) and AQE
-        # plans them as independent subtrees with no exchange reuse; the
-        # lazy checkpoint materializes the two-window pipeline once.
-        .localCheckpoint(eager=False)
-    )
-    bench_grams = ngram_hashes(bench, 3).select("NGRAM_H").distinct()
-    dirty = (
-        ngram_hashes(deduped, 3, distinct=False)  # join prunes before any dedup shuffle
-        .join(F.broadcast(bench_grams), "NGRAM_H")
-        .select("doc_id")
-        .distinct()
-    )
-    clean = deduped.join(dirty, "doc_id", "left_anti")
-    mixed = stratified_hash_sample(
-        clean, "lang", {"en": 0.5, "de": 0.25}, ["doc_id"], default_fraction=0.1, seed="mix1"
-    )
+    mixed = curate(corpus, bench, CurationConfig())
     return mixed.select(
         F.col("doc_id").alias("DOC_ID"), F.col("lang").alias("LANG"), "QUALITY_SCORE"
     )

@@ -9,9 +9,7 @@ so each Hive partition gets one task's worth of files.
 Scale notes (100 TB):
 - Partitioned writes without a repartition produce #tasks x #values small
   files; ``repartition(partition_cols)`` (the reference's trick, kept here)
-  gives one shuffle partition per value. For very hot values, pass
-  ``files_per_partition > 1`` to salt the repartition and split the write of
-  a single date across N tasks.
+  gives one shuffle partition per value.
 - Reads rely on Catalyst's native pushdown: filters on partition columns
   prune directories; filters on data columns reach parquet row-group stats.
   Nothing custom is needed -- callers just ``filter`` after ``read``.
@@ -151,23 +149,17 @@ def write_parquet(
     path: str,
     mode: str = "overwrite",
     partition_by: list[str] | None = None,
-    compression: str = "snappy",
-    files_per_partition: int = 1,
 ) -> None:
-    """Parquet sink with the reference's layout conventions.
+    """Snappy parquet sink with the reference's layout conventions.
 
     mode 'append' for incremental zones (cdc log, silver facts:
     scripts/cdc_metrics_job.py:89,141), 'overwrite' for snapshots and
     recomputed marts (:84,111-112,187)."""
     if partition_by:
-        if files_per_partition > 1:
-            salt = (F.crc32(F.concat_ws("|", *partition_by)) % files_per_partition).alias("__salt")
-            df = df.repartition(*[F.col(c) for c in partition_by], salt).drop("__salt")
-        else:
-            df = df.repartition(*partition_by)
-        writer = df.write.mode(mode).option("compression", compression).partitionBy(*partition_by)
-    else:
-        writer = df.write.mode(mode).option("compression", compression)
+        df = df.repartition(*partition_by)
+    writer = df.write.mode(mode).option("compression", "snappy")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
 
 

@@ -69,10 +69,20 @@ GOLD_MARTS = [
 
 # The fixture's two runs execute under this caller-set job group.
 JOB_GROUP = "medallion-fixture"
-# Spark jobs the fixture starts, as measured with the stages still run one
-# unit after another. Guards against duplicated cache work: concurrent units
-# racing to fill one cached frame would each compute it again.
-FIXTURE_JOBS = 251
+# Spark jobs the fixture starts, as measured. Guards against duplicated
+# cache work (concurrent units racing to fill one cached frame would each
+# compute it again) and against actions creeping back into the stage units,
+# such as emptiness probes or watermark scans.
+FIXTURE_JOBS = 211
+
+
+def _sources(spark, items, opts, dates):
+    frames = {
+        "order_items": spark.createDataFrame(items, ITEM_SCHEMA),
+        "order_item_options": spark.createDataFrame(opts, OPT_SCHEMA),
+        "date_dim": spark.createDataFrame(dates, DATE_SCHEMA),
+    }
+    return lambda name: frames[name]
 
 
 @pytest.fixture(scope="module")
@@ -85,12 +95,7 @@ def pipeline_runs(spark, tmp_path_factory):
         return CdcPipeline(spark, layout, store, Clock.fixed(day), TABLES)
 
     def src(items, opts, dates):
-        frames = {
-            "order_items": spark.createDataFrame(items, ITEM_SCHEMA),
-            "order_item_options": spark.createDataFrame(opts, OPT_SCHEMA),
-            "date_dim": spark.createDataFrame(dates, DATE_SCHEMA),
-        }
-        return lambda name: frames[name]
+        return _sources(spark, items, opts, dates)
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()
@@ -107,7 +112,7 @@ def pipeline_runs(spark, tmp_path_factory):
         changes2_frames = p2.run_bronze(src(ITEMS_R2, OPTS_R2, DATES_R2))
         changes2 = {t: df.collect() for t, df in changes2_frames.items()}
         p2.run_silver()
-        p2.build_order_revenue("order_items", "order_item_options")
+        p2.build_order_revenue()
         p2.run_gold()
     finally:
         sc._jsc.clearJobGroup()
@@ -253,6 +258,67 @@ def test_fixture_job_count_not_above_serial(pipeline_runs):
     assert len(observed["grouped"]) <= FIXTURE_JOBS, len(observed["grouped"])
 
 
+def _copy_of_zones(spark, layout, tmp_path, day):
+    """A pipeline over a copy of the fixture's zones, its clock at ``day``."""
+    root = str(tmp_path / "zones")
+    shutil.copytree(layout.root, root)
+    copy = MedallionLayout(root)
+    return CdcPipeline(spark, copy, WatermarkStore(f"{root}/state.json"), Clock.fixed(day), TABLES)
+
+
+def _cdc_log_counts(layout, table):
+    """Rows per action in a table's whole CDC log, read with DuckDB."""
+    import duckdb
+
+    con = duckdb.connect()
+    try:
+        return dict(
+            con.execute(
+                f"SELECT cdc_action, count(*) FROM read_parquet('{layout.root}/cdc/{table}/**/*.parquet',"
+                " hive_partitioning = true) GROUP BY 1"
+            ).fetchall()
+        )
+    finally:
+        con.close()
+
+
+def test_no_change_rerun_logs_empty_change_sets(pipeline_runs, tmp_path):
+    # a bronze run over unchanged sources: the snapshot-diff tables find no
+    # change, commit an empty change set and hand it back in the logged
+    # column order, like any other change set
+    spark, layout, *_, observed = pipeline_runs
+    p = _copy_of_zones(spark, layout, tmp_path, "2024-01-07T00:00:00")
+    with open(p.store.path) as f:
+        watermarks = f.read()
+    before = {t: _cdc_log_counts(p.layout, t) for t in ("order_item_options", "date_dim")}
+    changes = p.run_bronze(_sources(spark, ITEMS_R2, OPTS_R2, DATES_R2))
+    for table, counts in before.items():
+        assert changes[table].collect() == [], table
+        assert changes[table].columns == observed["columns2"][table], table
+        assert _cdc_log_counts(p.layout, table) == counts, table
+        whole_log = read_parquet(spark, f"{p.layout.root}/cdc/{table}")
+        assert whole_log.count() == sum(counts.values()), table
+    with open(p.store.path) as f:
+        assert f.read() == watermarks
+
+
+def test_emptied_full_image_source_empties_silver(pipeline_runs, tmp_path):
+    # every option row deleted at the source: silver must drop the stale
+    # image, so order_revenue prices each line without options
+    spark, layout, *_ = pipeline_runs
+    p = _copy_of_zones(spark, layout, tmp_path, "2024-01-07T00:00:00")
+    changes = p.run_bronze(_sources(spark, ITEMS_R2, [], DATES_R2))
+    assert {(r["OPTION_NAME"], r["cdc_action"]) for r in changes["order_item_options"].collect()} == {
+        ("cheese", "delete"),
+        ("dressing", "delete"),
+    }
+    p.run_silver()
+    assert read_parquet(spark, p.layout.silver("order_item_options")).count() == 0
+    revenue = p.build_order_revenue().collect()
+    assert len(revenue) == 4
+    assert {r["OPTION_PRICE"] for r in revenue} == {0.0}
+
+
 def _gold_rows(spark, layout, mart):
     return sorted(map(repr, read_parquet(spark, layout.gold(mart)).collect()))
 
@@ -319,3 +385,17 @@ def test_memoized_frame_is_built_once_across_threads(spark, monkeypatch):
     assert builds == ["two-threads"]
     assert got[0] is not None and got[0] is got[1]
     got[0].unpersist()
+
+
+def test_memoized_frame_replaced_for_a_new_sf_dir(spark, monkeypatch):
+    # a caller that moves to a fresh input directory (one per daily run)
+    # must not leave the previous directory's frame cached
+    monkeypatch.setattr(adapters, "_SILVER_CACHE", {})
+    monkeypatch.setattr(adapters, "_order_items", lambda spark, sf_dir: spark.range(len(sf_dir)))
+    first = adapters.order_items(spark, "day-1")
+    assert first.storageLevel.useMemory
+    second = adapters.order_items(spark, "day-22")
+    assert not first.storageLevel.useMemory
+    assert second.storageLevel.useMemory
+    assert list(adapters._SILVER_CACHE) == [(id(spark), "day-22", "order_items")]
+    second.unpersist()
