@@ -12,11 +12,19 @@ The exact cuts come from the distributed-ranking shape
 bounded driver collects -- NOT from ``percentile``, whose aggregation
 state buffers every value in a single reducer (an OOM at 100 TB). Distributed end-to-end; driver traffic is <= buckets split
 points + <= buckets counts + <= 2 neighbor rows per cut.
+
+The bucket count comes from the value count N that :func:`quantile_bucket`
+observes on the checkpoint it runs anyway (``DataFrame.observe``): when N
+is at most the window cap, one bucket holds every row, so the split-point
+and counts jobs are skipped and one partitioned-window job yields the
+order statistics.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import math
+
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -46,6 +54,16 @@ _DOMINANT_FACTOR = 8
 _MAX_RECURSE = 3
 
 
+# The rows one window partition may sort when the caller sets no cap.
+_WINDOW_CAP = 1_000_000
+
+
+def _sql_double(x: float) -> str:
+    """``x`` as a Spark SQL DOUBLE literal (``repr`` round-trips a float)."""
+    x = float(x)
+    return f"{x!r}D" if math.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
+
+
 def _order_statistics(
     base: DataFrame,
     need,
@@ -53,6 +71,7 @@ def _order_statistics(
     rel_err: float,
     window_cap: int | None,
     depth: int = 0,
+    total: int | None = None,
 ) -> tuple[dict[int, float], int]:
     """Values at 1-based ascending ranks of ``base.__v``, plus total N.
 
@@ -60,6 +79,12 @@ def _order_statistics(
     the callable form lets the top-level caller derive its target ranks
     from N without a separate count() job (N falls out of the bucket
     counts this function collects anyway).
+
+    ``total``, when the caller already knows N, sizes the bucketing: if
+    N is at most the window cap, one window partition may sort all of
+    it, so there is one bucket and neither the split-point job nor the
+    counts job runs -- one partitioned-window job yields the order
+    statistics.
 
     Every job has bounded driver output: <= buckets-1 split points,
     <= 2*buckets+1 counts, one (min, max) row per dominant bucket, and
@@ -75,8 +100,14 @@ def _order_statistics(
     single-valued by construction and resolves from min==max."""
     import bisect
 
-    qs = [i / max(buckets, 2) for i in range(1, max(buckets, 2))]
-    boundaries = sorted(set(base.stat.approxQuantile("__v", qs, rel_err)))
+    one_bucket = total is not None and total <= (
+        _WINDOW_CAP if window_cap is None else window_cap
+    )
+    if one_bucket:
+        boundaries: list[float] = []
+    else:
+        qs = [i / max(buckets, 2) for i in range(1, max(buckets, 2))]
+        boundaries = sorted(set(base.stat.approxQuantile("__v", qs, rel_err)))
     # bucket = #(boundaries < v) + #(boundaries <= v) = 2r + (v == bounds[r])
     # with r = #(boundaries < v), computed by a BALANCED WHEN-TREE binary
     # search: ~log2(|boundaries|) codegen'd comparisons per row. The
@@ -85,26 +116,26 @@ def _order_statistics(
     # codegen (ArrayFilter is eval-based), and a flat when-SUM is linear in
     # the boundary count and codegen-split-sensitive -- the tree is the
     # only form that measured fastest on BOTH the heavy-tie (50 bounds,
-    # lineitem qty) and continuous (63 bounds, event value) 10x columns
-    v = F.col("__v")
-
-    def _bucket_tree(lo: int, hi: int):
+    # lineitem qty) and continuous (63 bounds, event value) 10x columns.
+    # It is built as one SQL string: one py4j call, where a Column tree
+    # costs about four per boundary
+    def _bucket_tree(lo: int, hi: int) -> str:
         # assumes r = #(boundaries < v) is in [lo, hi]
         if lo == hi:
             if lo < len(boundaries):
-                return (
-                    F.when(v == F.lit(float(boundaries[lo])), F.lit(2 * lo + 1))
-                    .otherwise(F.lit(2 * lo))
-                )
-            return F.lit(2 * lo)
+                return f"CASE WHEN __v = {_sql_double(boundaries[lo])} THEN {2 * lo + 1} ELSE {2 * lo} END"
+            return str(2 * lo)
         mid = (lo + hi) // 2  # boundaries[mid] < v  <=>  r >= mid + 1
         return (
-            F.when(F.lit(float(boundaries[mid])) < v, _bucket_tree(mid + 1, hi))
-            .otherwise(_bucket_tree(lo, mid))
+            f"CASE WHEN {_sql_double(boundaries[mid])} < __v"
+            f" THEN {_bucket_tree(mid + 1, hi)} ELSE {_bucket_tree(lo, mid)} END"
         )
 
-    b = _bucket_tree(0, len(boundaries))
-    counts = dict(base.select(b.alias("__rb")).groupBy("__rb").count().collect())
+    b = F.expr(_bucket_tree(0, len(boundaries)))
+    if one_bucket:
+        counts = {0: total}
+    else:
+        counts = dict(base.select(b.alias("__rb")).groupBy("__rb").count().collect())
     offsets, acc = [], 0
     for i in range(2 * len(boundaries) + 1):
         offsets.append(acc)
@@ -127,7 +158,7 @@ def _order_statistics(
     cap = (
         window_cap
         if window_cap is not None
-        else max(1_000_000, _DOMINANT_FACTOR * total // max(buckets, 2))
+        else max(_WINDOW_CAP, _DOMINANT_FACTOR * total // max(buckets, 2))
     )
     val_at: dict[int, float] = {}
     window_buckets: dict[int, dict[int, int]] = {}
@@ -191,6 +222,7 @@ def ranked_quantile_cuts(
     buckets: int = 64,
     rel_err: float = 0.001,
     window_cap: int | None = None,
+    count: int | None = None,
 ) -> list[float | None]:
     """Exact interpolated quantiles, bit-identical to Spark's
     ``percentile`` (and hence to the DuckDB ``quantile_cont`` oracles),
@@ -223,16 +255,18 @@ def ranked_quantile_cuts(
     collapsing the approxQuantile boundaries) do NOT degenerate to a
     single-task window: dominant rank-holding buckets are resolved
     tie-aware or recursively re-bucketed (see :func:`_order_statistics`;
-    ``window_cap`` bounds the rows any one window partition may sort)."""
-    import math
+    ``window_cap`` bounds the rows any one window partition may sort).
 
+    ``count`` is the non-NULL count of ``value_col`` (cast to double) when
+    the caller already knows it; it sizes the bucketing, so at most the
+    window cap's worth of rows skip steps 1 and 2 (one bucket)."""
     base = df.select(F.col(value_col).cast("double").alias("__v")).where(
         F.col("__v").isNotNull()
     )
 
     # percentile's positions: p * (N - 1), 0-based into the sorted values.
-    # N is supplied by _order_statistics from its bucket counts (the
-    # callable form) -- no separate count() job.
+    # N is the caller's count, or _order_statistics takes it from its
+    # bucket counts (the callable form) -- no separate count() job.
     def _need(total: int) -> set[int]:
         need: set[int] = set()
         for p in probs:
@@ -240,7 +274,7 @@ def ranked_quantile_cuts(
             need.update((math.floor(position) + 1, math.ceil(position) + 1))
         return need
 
-    val_at, total = _order_statistics(base, _need, buckets, rel_err, window_cap)
+    val_at, total = _order_statistics(base, _need, buckets, rel_err, window_cap, total=count)
     if total == 0:
         return [None] * len(probs)
     cuts: list[float | None] = []
@@ -307,10 +341,15 @@ def quantile_bucket(
     if len(labels) != len(probs) + 1:
         raise ValueError("need len(labels) == len(probs) + 1")
     # one materialization of the (possibly expensive) input lineage; the
-    # cut computation and the labeled output all reuse it
-    snap = df.localCheckpoint(eager=True)
+    # cut computation and the labeled output all reuse it. It also
+    # observes the value count that sizes the exact path's bucketing.
+    seen = Observation()
+    n = F.count(F.col(value_col).cast("double")).alias("n")
+    snap = df.observe(seen, n).localCheckpoint(eager=True)
     if exact:
-        cut_vals = ranked_quantile_cuts(snap, value_col, probs)
+        # only once the checkpoint has returned: get blocks until its
+        # action reports
+        cut_vals = ranked_quantile_cuts(snap, value_col, probs, count=seen.get["n"])
     else:
         row = approx_quantile_cuts(snap, value_col, probs, accuracy).collect()[0]
         cut_vals = [row[f"q{i}"] for i in range(len(probs))]

@@ -10,9 +10,9 @@ lifecycle is one explicit, testable object over the operator library:
   watermarked tables (C3) or snapshot-diff CDC (C2) -> action-partitioned
   CDC log + refreshed snapshot.
 - silver (:126-192): watermark-filtered conform (cast, event date, keyed
-  dedup) appended per CREATION_DATE, watermark advanced to max processed
-  date (the correct advance rule of the two the reference uses, SURVEY.md
-  C1); then the order_revenue join overwritten.
+  dedup) appended, watermark advanced to max processed date (the correct
+  advance rule of the two the reference uses, SURVEY.md C1); then the
+  order_revenue join overwritten.
 - gold (:225-571): the mart library over silver, each overwritten.
 
 The stages keep the reference's order, but inside a stage the independent
@@ -46,6 +46,17 @@ Deliberate improvements over the reference (each flagged in SURVEY.md):
 - injectable clock instead of wall-clock ``datetime.now()``/
   ``current_timestamp()`` (F3).
 
+Silver's dated tables (order_items, date_dim, order_revenue) are
+partitioned by ``CREATION_MONTH``, the first day of the event month as a
+DATE, and keep ``CREATION_DATE`` as a DATE column in the files. The
+reference partitions by event day (:141), so a table holds one directory
+per day, and every rewrite and every read pays a fixed cost per
+directory; on a month grain the directory count grows with months. A
+zone root written with the day grain must be rebuilt cold: Spark's
+partition discovery refuses a table that mixes ``CREATION_DATE=`` and
+``CREATION_MONTH=`` directories. Gold's ``fact_ltv_daily`` and the CDC log
+keep their layouts.
+
 Scale notes (100 TB): every zone write goes through
 ``write_parquet(partition_by=...)`` so downstream reads prune partitions;
 the CDC diff shuffles only primary keys + changed rows (operators.cdc);
@@ -77,6 +88,11 @@ T = TypeVar("T")
 # The silver tables order_revenue and the gold marts are built from.
 ITEMS_TABLE = "order_items"
 OPTIONS_TABLE = "order_item_options"
+
+# Silver's dated tables keep the event date as a DATE column and are
+# partitioned by its month (the first of the month, also a DATE).
+DATE_COL = "CREATION_DATE"
+MONTH_COL = "CREATION_MONTH"
 
 
 @dataclass(frozen=True)
@@ -161,11 +177,14 @@ class CdcPipeline:
             snap_path = self.layout.snapshot(spec.name)
             # Cold start is a path probe, not a broad except: a transient
             # read failure must fail the run, or the diff would tag every
-            # row 'insert' and corrupt the durable CDC log (S8, :95).
+            # row 'insert' and corrupt the durable CDC log (S8, :95). The
+            # snapshot is always written from this image, so the read
+            # passes its schema and runs no inference job.
+            image = cur.drop("ingestion_timestamp").schema
             if path_exists(self.spark, snap_path):
-                prev = read_parquet(self.spark, snap_path)
+                prev = read_parquet(self.spark, snap_path, schema=image)
             else:
-                prev = self.spark.createDataFrame([], cur.schema)
+                prev = self.spark.createDataFrame([], image)
             delta = cdc_diff(cur, prev, pks=spec.pks).withColumn(
                 CDC_TS, F.lit(now).cast("timestamp")
             )
@@ -203,7 +222,7 @@ class CdcPipeline:
         df = read_parquet(self.spark, self.layout.bronze(spec.name, run_date))
         date_col = None
         if spec.event_date_col is not None:
-            date_col = "CREATION_DATE"
+            date_col = DATE_COL
             df = df.withColumn(date_col, F.to_date(spec.event_date_col))
             wm = self.store.get(f"silver/{spec.name}")
             df = df.filter(F.col(date_col) > F.lit(wm).cast("date"))
@@ -211,14 +230,14 @@ class CdcPipeline:
             df = df.withColumn(col, F.col(col).cast(typ))
         order = [F.col(spec.ts_col).desc()] if spec.ts_col else []
         df = keep_latest(df, spec.pks, order, tiebreakers=spec.pks)
-        # Watermarked fact tables accrete by event date; snapshot-diff
-        # tables conform the full current image, so overwrite.
+        # Dated tables accrete by event date into month partitions;
+        # snapshot-diff tables conform the full current image, so overwrite.
         mark = _write_noting_max(
-            df,
+            _with_month(df) if date_col else df,
             date_col,
             self.layout.silver(spec.name),
             mode="append" if date_col else "overwrite",
-            partition_by=[date_col] if date_col else None,
+            partition_by=[MONTH_COL] if date_col else None,
         )
         if date_col is not None:
             advance_watermark(self.store, f"silver/{spec.name}", mark)
@@ -228,12 +247,12 @@ class CdcPipeline:
 
         items = read_parquet(self.spark, self.layout.silver(ITEMS_TABLE))
         options = read_parquet(self.spark, self.layout.silver(OPTIONS_TABLE))
-        revenue = build_order_revenue(items, options)
+        revenue = _with_month(build_order_revenue(items, options))
         write_parquet(
             revenue,
             self.layout.silver("order_revenue"),
             mode="overwrite",
-            partition_by=["CREATION_DATE"],
+            partition_by=[MONTH_COL],
         )
         return revenue
 
@@ -286,6 +305,10 @@ class CdcPipeline:
         self.run_silver()
         self.build_order_revenue()
         self.run_gold()
+
+
+def _with_month(df: DataFrame) -> DataFrame:
+    return df.withColumn(MONTH_COL, F.trunc(DATE_COL, "month"))
 
 
 def _write_noting_max(df: DataFrame, col: str | None, path: str, **kwargs) -> object:

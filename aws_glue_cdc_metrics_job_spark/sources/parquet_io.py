@@ -4,7 +4,9 @@ The reference reads/writes snappy parquet across five zones
 (scripts/cdc_metrics_job.py:53-55,144,190,239), partitions the CDC log by
 ``cdc_action`` (:89,111) and silver facts by ``CREATION_DATE`` (:143,168),
 and repartitions by the partition column before writing (:141,165,187,208)
-so each Hive partition gets one task's worth of files.
+so each Hive partition gets one task's worth of files. The pipeline keeps
+the CDC layout but partitions silver's dated tables by month
+(``CREATION_MONTH``, see pipeline.py).
 
 Scale notes (100 TB):
 - Partitioned writes without a repartition produce #tasks x #values small

@@ -73,7 +73,7 @@ JOB_GROUP = "medallion-fixture"
 # cache work (concurrent units racing to fill one cached frame would each
 # compute it again) and against actions creeping back into the stage units,
 # such as emptiness probes or watermark scans.
-FIXTURE_JOBS = 211
+FIXTURE_JOBS = 201
 
 
 def _sources(spark, items, opts, dates):
@@ -317,6 +317,30 @@ def test_emptied_full_image_source_empties_silver(pipeline_runs, tmp_path):
     revenue = p.build_order_revenue().collect()
     assert len(revenue) == 4
     assert {r["OPTION_PRICE"] for r in revenue} == {0.0}
+
+
+def test_silver_dated_tables_partition_by_month(pipeline_runs, tmp_path):
+    # a third run adds February rows to the fixture's January ones: each
+    # dated silver table then holds one directory per month, and the event
+    # date stays a DATE column in the files
+    spark, layout, *_ = pipeline_runs
+    p = _copy_of_zones(spark, layout, tmp_path, "2024-02-04T00:00:00")
+    feb = ("o4", "1", "u2", "r2", "pizza", False, "12.0", D(2024, 2, 3, 10))
+    p.run_all(_sources(spark, ITEMS_R2 + [feb], OPTS_R2, DATES_R2 + [("2024-02-03", 6)]))
+    dates = {"2024-01-01", "2024-01-02", "2024-01-05", "2024-02-03"}
+    for table in ("order_items", "date_dim", "order_revenue"):
+        path = p.layout.silver(table)
+        assert {d for d in os.listdir(path) if "=" in d} == {
+            "CREATION_MONTH=2024-01-01",
+            "CREATION_MONTH=2024-02-01",
+        }, table
+        silver = read_parquet(spark, path)
+        types = dict(silver.dtypes)
+        assert types["CREATION_DATE"] == types["CREATION_MONTH"] == "date", table
+        rows = silver.select("CREATION_DATE", "CREATION_MONTH").collect()
+        assert {str(r["CREATION_DATE"]) for r in rows} == dates, table
+        assert all(r["CREATION_MONTH"] == r["CREATION_DATE"].replace(day=1) for r in rows), table
+    assert p.store.get("silver/order_items") == "2024-02-03"
 
 
 def _gold_rows(spark, layout, mart):

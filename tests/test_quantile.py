@@ -1,6 +1,8 @@
 """Exact-quantile bucketing vs pandas qcut (SURVEY.md Q1, the reference's
 pd.qcut at scripts/cdc_metrics_job.py:256-266)."""
 
+import threading
+
 import pandas as pd
 import pytest
 
@@ -90,9 +92,11 @@ def test_ranked_cuts_bit_identical_to_percentile(spark, values):
     probs = [0.0, 0.2, 0.37, 0.5, 0.8, 1.0]
     for i, vals in enumerate(cases):
         df = spark.createDataFrame([(v,) for v in vals], "x double").repartition(5)
-        got = ranked_quantile_cuts(df, "x", probs, buckets=4)
         want = list(exact_quantile_cuts(df, "x", probs).collect()[0])
-        assert got == want, f"case {i}: {got} != {want}"
+        # bucketed, then one bucket sized from a known count
+        for count in (None, len(vals)):
+            got = ranked_quantile_cuts(df, "x", probs, buckets=4, count=count)
+            assert got == want, f"case {i}, count {count}: {got} != {want}"
 
 
 def test_ranked_cuts_null_and_empty(spark):
@@ -159,9 +163,9 @@ def test_ranked_cuts_heavy_ties_avoid_dominant_window(spark, monkeypatch):
     calls: list[int] = []
     real = q._order_statistics
 
-    def spy(base, need, buckets, rel_err, window_cap, depth=0):
+    def spy(base, need, buckets, rel_err, window_cap, depth=0, **kwargs):
         calls.append(depth)
-        return real(base, need, buckets, rel_err, window_cap, depth)
+        return real(base, need, buckets, rel_err, window_cap, depth, **kwargs)
 
     monkeypatch.setattr(q, "_order_statistics", spy)
 
@@ -200,3 +204,50 @@ def test_ranked_cuts_heavy_ties_avoid_dominant_window(spark, monkeypatch):
     want3 = list(exact_quantile_cuts(df3, "x", probs).collect()[0])
     assert got3 == want3
     assert max(calls) >= 1  # recursion engaged for the dense dominant bucket
+
+
+# Spark jobs quantile_bucket starts on a repartitioned frame below the
+# window cap, as measured: the input's shuffle and the checkpoint (which
+# observes the value count), then the window's shuffle and its collect.
+# The split-point and counts jobs are skipped; with them it took 7.
+BELOW_CAP_JOBS = 4
+
+
+def test_bucket_below_cap_skips_split_and_count_jobs(spark):
+    import random
+
+    rng = random.Random(3)
+    vals = [round(rng.lognormvariate(3, 1), 4) for _ in range(500)]
+    df = spark.createDataFrame(list(enumerate(vals)), "u int, x double").repartition(4)
+    sc = spark.sparkContext
+    sc.setJobGroup("quantile-below-cap", "quantile_bucket below the window cap")
+    try:
+        out = quantile_bucket(df, "x", [0.2, 0.8], ["Low", "Medium", "High"], "CLV")
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup("quantile-below-cap")
+    assert len(jobs) <= BELOW_CAP_JOBS, len(jobs)
+    lo, hi = exact_quantile_cuts(df, "x", [0.2, 0.8]).collect()[0]
+    want = {u: "Low" if v <= lo else "Medium" if v <= hi else "High" for u, v in enumerate(vals)}
+    assert {r["u"]: r["CLV"] for r in out.collect()} == want
+
+
+@pytest.mark.parametrize("kind", ["empty", "filtered", "all_null", "cached_empty"])
+def test_bucket_of_no_values_returns(spark, kind):
+    # the observed count is read after the checkpoint; for an input with
+    # no values it must still report, or the call would block for good
+    frames = {
+        "empty": lambda: spark.createDataFrame([], "x double"),
+        "filtered": lambda: spark.createDataFrame([(1.0,)], "x double").where("false"),
+        "all_null": lambda: spark.createDataFrame([(None,), (None,)], "x double"),
+        "cached_empty": lambda: spark.createDataFrame([], "x double").cache(),
+    }
+    got = []
+    worker = threading.Thread(
+        target=lambda: got.append(quantile_bucket(frames[kind](), "x", [0.5], ["lo", "hi"], "B").collect()),
+        daemon=True,
+    )
+    worker.start()
+    worker.join(timeout=120)
+    assert not worker.is_alive(), f"quantile_bucket on {kind} input did not return"
+    assert [r["B"] for r in got[0]] == ["hi"] * (2 if kind == "all_null" else 0)

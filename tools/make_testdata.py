@@ -40,6 +40,15 @@ WORDS = (
     "part order line customer vector"
 ).split()
 
+# Document text spells each of those words two ways ("scan", "scan1"):
+# with the 40 bare words every corpus document shared a 3-gram with the
+# doc_id % 97 = 0 benchmark subset, so decontamination left
+# docs_curation_pipeline nothing (80 words leave it 22 rows at scale 1).
+# Not more: the DuckDB oracles of docs_bigram_logprob and
+# docs_selection_pipeline plan a cross product that grows with the fourth
+# power of the vocabulary, and at 120 words they outgrew 1.5 GB.
+DOC_SPELLINGS = 2
+
 US_PER_DAY = 86_400_000_000
 
 
@@ -215,7 +224,16 @@ def generate(out_dir: str, scale: int = 1, seed: int = 20260814) -> None:
     )
 
     # documents: 500 token-bag docs over 20 sources / 5 langs, with ~10%
-    # planted near-duplicates so dedup operators have work to do
+    # planted near-duplicates so dedup operators have work to do. Each
+    # token's word is drawn from ``rng`` and its spelling from a stream of
+    # its own, so ``rng`` makes the same draws as with bare words and the
+    # tables generated after this one keep their values.
+    spelling_rng = np.random.default_rng([seed, 1])
+
+    def spell(stems: list[str]) -> list[str]:
+        spellings = spelling_rng.integers(0, DOC_SPELLINGS, len(stems))
+        return [f"{w}{k}" if k else w for w, k in zip(stems, spellings)]
+
     n_doc = 500
     texts: list[str] = []
     for i in range(n_doc):
@@ -224,10 +242,10 @@ def generate(out_dir: str, scale: int = 1, seed: int = 20260814) -> None:
             k = max(1, len(base) // 20)
             idx = rng.integers(0, len(base), k)
             for j in idx:
-                base[j] = str(rng.choice(WORDS))
+                base[j] = spell([str(rng.choice(WORDS))])[0]
             texts.append(" ".join(base))
         else:
-            texts.append(" ".join(rng.choice(WORDS, rng.integers(60, 240)).tolist()))
+            texts.append(" ".join(spell(rng.choice(WORDS, rng.integers(60, 240)).tolist())))
     write(
         "documents",
         pa.table(
