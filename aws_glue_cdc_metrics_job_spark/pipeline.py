@@ -51,11 +51,12 @@ partitioned by ``CREATION_MONTH``, the first day of the event month as a
 DATE, and keep ``CREATION_DATE`` as a DATE column in the files. The
 reference partitions by event day (:141), so a table holds one directory
 per day, and every rewrite and every read pays a fixed cost per
-directory; on a month grain the directory count grows with months. A
-zone root written with the day grain must be rebuilt cold: Spark's
+directory; on a month grain the directory count grows with months. Spark's
 partition discovery refuses a table that mixes ``CREATION_DATE=`` and
-``CREATION_MONTH=`` directories. Gold's ``fact_ltv_daily`` and the CDC log
-keep their layouts.
+``CREATION_MONTH=`` directories, so a run refuses to start while a dated
+silver table still holds the day grain; rewriting that table on the month
+grain (same rows, so its watermark stays valid) lets the next run go on.
+Gold's ``fact_ltv_daily`` and the CDC log keep their layouts.
 
 Scale notes (100 TB): every zone write goes through
 ``write_parquet(partition_by=...)`` so downstream reads prune partitions;
@@ -80,7 +81,7 @@ from .operators.cdc import CDC_ACTION, CDC_TS, cdc_diff, tag_appends
 from .operators.incremental import advance_watermark, incremental_read
 from .operators.relational import keep_latest
 from .session import Clock
-from .sources import MedallionLayout, path_exists, read_parquet, write_parquet
+from .sources import MedallionLayout, child_names, path_exists, read_parquet, write_parquet
 from .state import WatermarkStore
 
 T = TypeVar("T")
@@ -109,7 +110,7 @@ class TableSpec:
 # The reference's TABLES_CONFIG (scripts/cdc_metrics_job.py:41-46) expressed
 # as specs. date_dim goes through the same generic silver conform
 # (CREATION_DATE = to_date(date_key), strictly-greater watermark filter,
-# dedup on date_key, append partitioned by CREATION_DATE, watermark advanced
+# dedup on date_key, append partitioned by CREATION_MONTH, watermark advanced
 # to max processed date) that the reference hand-writes as its own
 # process_silver_date_dim variant (:194-215).
 REFERENCE_TABLES: list[TableSpec] = [
@@ -155,6 +156,7 @@ class CdcPipeline:
     def run_bronze(self, read_source: Callable[[str], DataFrame]) -> dict[str, DataFrame]:
         """Extract + CDC per table, the tables concurrently; returns the
         tagged change sets."""
+        self._refuse_day_grain_silver()
         run_date = self.clock.today_str
         now = self.clock.now.strftime("%Y-%m-%d %H:%M:%S")
         changes = self._fan_out(
@@ -215,8 +217,29 @@ class CdcPipeline:
 
     def run_silver(self) -> None:
         """Conform bronze -> silver per table, the tables concurrently."""
+        self._refuse_day_grain_silver()
         run_date = self.clock.today_str
         self._fan_out([partial(self._silver_table, spec, run_date) for spec in self.tables])
+
+    def _refuse_day_grain_silver(self) -> None:
+        """Raise, before the run writes anything, when a dated silver table
+        still holds the day grain's ``CREATION_DATE=`` directories. Month
+        directories appended next to them would make the table unreadable
+        (Spark's partition discovery refuses mixed partition columns), and
+        the failure would surface only after the table's watermark had
+        moved past the appended rows."""
+        for spec in self.tables:
+            if spec.event_date_col is None:
+                continue
+            path = self.layout.silver(spec.name)
+            if any(name.startswith(f"{DATE_COL}=") for name in child_names(self.spark, path)):
+                raise RuntimeError(
+                    f"{path} is partitioned by {DATE_COL} (the day grain); silver's dated tables "
+                    f"are partitioned by {MONTH_COL}. Rewrite the table on the month grain before "
+                    f"running: read it, add {MONTH_COL} = trunc({DATE_COL}, 'month'), write it to a "
+                    f"new directory partitioned by {MONTH_COL} and swap that in. Its rows do not "
+                    f"change, so its watermark stays valid."
+                )
 
     def _silver_table(self, spec: TableSpec, run_date: str) -> None:
         df = read_parquet(self.spark, self.layout.bronze(spec.name, run_date))

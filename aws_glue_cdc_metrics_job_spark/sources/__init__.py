@@ -1,6 +1,7 @@
 from .jdbc import incremental_query, jdbc_read
 from .parquet_io import (
     MedallionLayout,
+    child_names,
     path_exists,
     read_parquet,
     read_table,
@@ -10,6 +11,7 @@ from .parquet_io import (
 
 __all__ = [
     "MedallionLayout",
+    "child_names",
     "incremental_query",
     "jdbc_read",
     "path_exists",

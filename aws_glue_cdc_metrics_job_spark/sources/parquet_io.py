@@ -133,6 +133,15 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(jpath))
 
 
+def child_names(spark: SparkSession, path: str) -> list[str]:
+    """Names of the entries directly under ``path``; empty when it does not
+    exist."""
+    fs, jpath = _hadoop_fs(spark, path)
+    if not fs.exists(jpath):
+        return []
+    return [status.getPath().getName() for status in fs.listStatus(jpath)]
+
+
 def swap_directory(spark: SparkSession, src: str, dst: str) -> None:
     """Replace directory ``dst`` with ``src`` (delete + rename). Rename is
     atomic on HDFS/posix; object stores should use a table format instead.

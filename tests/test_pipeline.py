@@ -13,7 +13,7 @@ from aws_glue_cdc_metrics_job_spark import pipeline
 from aws_glue_cdc_metrics_job_spark.pipeline import REFERENCE_TABLES, CdcPipeline, TableSpec
 from aws_glue_cdc_metrics_job_spark.plans import adapters, marts
 from aws_glue_cdc_metrics_job_spark.session import Clock
-from aws_glue_cdc_metrics_job_spark.sources import MedallionLayout, read_parquet
+from aws_glue_cdc_metrics_job_spark.sources import MedallionLayout, read_parquet, swap_directory, write_parquet
 from aws_glue_cdc_metrics_job_spark.state import WatermarkStore
 
 D = dt.datetime
@@ -340,6 +340,56 @@ def test_silver_dated_tables_partition_by_month(pipeline_runs, tmp_path):
         rows = silver.select("CREATION_DATE", "CREATION_MONTH").collect()
         assert {str(r["CREATION_DATE"]) for r in rows} == dates, table
         assert all(r["CREATION_MONTH"] == r["CREATION_DATE"].replace(day=1) for r in rows), table
+    assert p.store.get("silver/order_items") == "2024-02-03"
+
+
+def _zone_files(root):
+    return sorted(os.path.relpath(os.path.join(d, f), root) for d, _, fs in os.walk(root) for f in fs)
+
+
+def test_day_grain_silver_is_refused_before_any_write(pipeline_runs, tmp_path):
+    # a zone root whose dated silver tables have the day grain: a run
+    # refuses before it writes a file or moves a watermark, and goes on once
+    # those tables are rewritten on the month grain, as the error says
+    spark, layout, *_ = pipeline_runs
+    p = _copy_of_zones(spark, layout, tmp_path, "2024-02-04T00:00:00")
+    dated = ("order_items", "date_dim")
+
+    def regrain(table, partition_col):
+        path = p.layout.silver(table)
+        df = read_parquet(spark, path)
+        if partition_col == "CREATION_MONTH":
+            df = df.withColumn("CREATION_MONTH", F.trunc("CREATION_DATE", "month"))
+        else:
+            df = df.drop("CREATION_MONTH")
+        write_parquet(df, str(tmp_path / table), partition_by=[partition_col])
+        swap_directory(spark, str(tmp_path / table), path)
+
+    for table in dated:
+        regrain(table, "CREATION_DATE")
+    before = _zone_files(p.layout.root)
+    with open(p.store.path) as f:
+        watermarks = f.read()
+    feb = ("o4", "1", "u2", "r2", "pizza", False, "12.0", D(2024, 2, 3, 10))
+    sources = _sources(spark, ITEMS_R2 + [feb], OPTS_R2, DATES_R2 + [("2024-02-03", 6)])
+    with pytest.raises(RuntimeError, match="silver/order_items is partitioned by CREATION_DATE"):
+        p.run_all(sources)
+    with pytest.raises(RuntimeError, match="partitioned by CREATION_DATE"):
+        p.run_silver()
+    assert _zone_files(p.layout.root) == before
+    with open(p.store.path) as f:
+        assert f.read() == watermarks
+
+    for table in dated:
+        regrain(table, "CREATION_MONTH")
+    p.run_all(sources)
+    for table in (*dated, "order_revenue"):
+        assert {d for d in os.listdir(p.layout.silver(table)) if "=" in d} == {
+            "CREATION_MONTH=2024-01-01",
+            "CREATION_MONTH=2024-02-01",
+        }, table
+    items = read_parquet(spark, p.layout.silver("order_items"))
+    assert items.where("CREATION_DATE = DATE'2024-02-03'").count() == 1
     assert p.store.get("silver/order_items") == "2024-02-03"
 
 

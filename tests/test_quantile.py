@@ -79,7 +79,7 @@ def test_ranked_cuts_bit_identical_to_percentile(spark, values):
     probs (frac == 0), negatives."""
     import math
 
-    from aws_glue_cdc_metrics_job_spark.functions.quantile import ranked_quantile_cuts
+    from aws_glue_cdc_metrics_job_spark.functions.quantile import _ranked_cuts, ranked_quantile_cuts
 
     cases = [
         values,
@@ -93,10 +93,11 @@ def test_ranked_cuts_bit_identical_to_percentile(spark, values):
     for i, vals in enumerate(cases):
         df = spark.createDataFrame([(v,) for v in vals], "x double").repartition(5)
         want = list(exact_quantile_cuts(df, "x", probs).collect()[0])
-        # bucketed, then one bucket sized from a known count
-        for count in (None, len(vals)):
-            got = ranked_quantile_cuts(df, "x", probs, buckets=4, count=count)
-            assert got == want, f"case {i}, count {count}: {got} != {want}"
+        got = ranked_quantile_cuts(df, "x", probs, buckets=4)
+        assert got == want, f"case {i}: {got} != {want}"
+        # one bucket, sized from a known count
+        got = _ranked_cuts(df, "x", probs, buckets=4, count=len(vals))
+        assert got == want, f"case {i}, one bucket: {got} != {want}"
 
 
 def test_ranked_cuts_null_and_empty(spark):
