@@ -692,7 +692,9 @@ def distribution_drift(
     proportions in ppm; DIFF_PPM = Q - P (signed, current minus
     reference); TVD_PPM = sum|diff| div 2 and CHI2_PPM =
     sum(diff^2 div max(P_PPM, 1)) are constant per-report columns.
-    NULL values and rows with a NULL slice flag are excluded."""
+    NULL values and rows with a NULL slice flag are excluded. An empty
+    slice has no proportions: its ppm column and the drift columns are
+    NULL, as DuckDB's ``//`` by zero gives, not an ANSI divide error."""
     m = 10**decimals
     base = df.where(F.col(value_col).isNotNull()).select(
         F.floor(F.col(value_col) * m + F.lit(0.5)).cast("bigint").alias("__v"),
@@ -714,9 +716,9 @@ def distribution_drift(
         "N_REF",
         "N_CUR",
         F.expr("(N_REF * 1000000)").alias("__pr"),
-        F.sum("N_REF").over(wall).alias("__tr"),
+        F.nullif(F.sum("N_REF").over(wall), F.lit(0)).alias("__tr"),
         F.expr("(N_CUR * 1000000)").alias("__pc"),
-        F.sum("N_CUR").over(wall).alias("__tc"),
+        F.nullif(F.sum("N_CUR").over(wall), F.lit(0)).alias("__tc"),
     ).select(
         "BIN",
         "N_REF",

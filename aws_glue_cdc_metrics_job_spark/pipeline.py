@@ -299,10 +299,8 @@ class CdcPipeline:
         # builder that raises fails only its own unit
         builders: dict[str, Callable[[], DataFrame]] = {
             "fact_ltv_daily": lambda: marts.fact_ltv_daily(revenue),
-            "mart_customer_ltv_snapshot": lambda: marts.ltv_snapshot(marts.fact_ltv_daily(revenue)),
-            "mart_customer_clv_segment": lambda: marts.clv_segment(
-                marts.ltv_snapshot(marts.fact_ltv_daily(revenue))
-            ),
+            "mart_customer_ltv_snapshot": lambda: marts.ltv_snapshot(revenue),
+            "mart_customer_clv_segment": lambda: marts.clv_segment(marts.ltv_snapshot(revenue)),
             "mart_customer_rfm": lambda: marts.rfm(revenue, now),
             "mart_customer_churn_profile": lambda: marts.churn_profile(revenue, now),
             **{

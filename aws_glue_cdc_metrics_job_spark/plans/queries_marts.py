@@ -89,7 +89,7 @@ SELECT * FROM snapshot
 """,
 )
 def q_ltv_snapshot(spark: SparkSession, sf_dir: str):
-    return marts.ltv_snapshot(marts.fact_ltv_daily(_revenue(spark, sf_dir)))
+    return marts.ltv_snapshot(_revenue(spark, sf_dir))
 
 
 @query(
@@ -110,7 +110,7 @@ FROM snapshot, cuts
 """,
 )
 def q_clv_segment(spark: SparkSession, sf_dir: str):
-    return marts.clv_segment(marts.ltv_snapshot(marts.fact_ltv_daily(_revenue(spark, sf_dir))))
+    return marts.clv_segment(marts.ltv_snapshot(_revenue(spark, sf_dir)))
 
 
 @query("mart_customer_clv_segment_approx")
@@ -124,10 +124,7 @@ def q_clv_segment_approx(spark: SparkSession, sf_dir: str):
     test_marts.py pins the twin agreement (identical labels for ~all
     users, per-label counts within the sketch contract) against the
     oracle-green exact twin."""
-    return marts.clv_segment(
-        marts.ltv_snapshot(marts.fact_ltv_daily(_revenue(spark, sf_dir))),
-        exact=False,
-    )
+    return marts.clv_segment(marts.ltv_snapshot(_revenue(spark, sf_dir)), exact=False)
 
 
 @query(

@@ -2458,13 +2458,18 @@ occ AS (
 pair AS (SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c12 FROM occ GROUP BY 1, 2),
 starts AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1s FROM pair GROUP BY 1),
 tok AS (SELECT unnest(toks) AS w2 FROM t4),
-uni AS (SELECT w2, CAST(COUNT(*) AS BIGINT) AS c2 FROM tok GROUP BY 1),
-ntot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM tok),
+uni AS (
+  SELECT w2, c2, CAST(SUM(c2) OVER () AS BIGINT) AS n
+  FROM (SELECT w2, CAST(COUNT(*) AS BIGINT) AS c2 FROM tok GROUP BY 1)
+),
 s AS (
   SELECT occ.doc_id,
          CAST({sql_rhu("-ln(0.75 * (c12 / c1s) + 0.25 * (c2 / n))", 9)}
               AS DECIMAL(28,9)) AS srp
-  FROM occ JOIN pair USING (w1, w2) JOIN starts USING (w1) JOIN uni USING (w2), ntot
+  FROM occ
+  JOIN pair ON pair.w1 = occ.w1 AND pair.w2 = occ.w2
+  JOIN starts ON starts.w1 = occ.w1
+  JOIN uni ON uni.w2 = occ.w2
 )
 SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS N_BIGRAMS,
        {sql_rhu("CAST(SUM(srp) AS DOUBLE) / COUNT(*)", 6)} AS AVG_NEG_LOGPROB
@@ -2667,13 +2672,18 @@ socc AS (
 spair AS (SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c12 FROM socc GROUP BY 1, 2),
 sstarts AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1s FROM spair GROUP BY 1),
 stok AS (SELECT unnest(toks) AS w2 FROM fil),
-suni AS (SELECT w2, CAST(COUNT(*) AS BIGINT) AS c2 FROM stok GROUP BY 1),
-sntot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM stok),
+suni AS (
+  SELECT w2, c2, CAST(SUM(c2) OVER () AS BIGINT) AS n
+  FROM (SELECT w2, CAST(COUNT(*) AS BIGINT) AS c2 FROM stok GROUP BY 1)
+),
 ssrp AS (
   SELECT socc.doc_id,
          CAST({sql_rhu("-ln(0.75 * (c12 / c1s) + 0.25 * (c2 / n))", 9)}
               AS DECIMAL(28,9)) AS srp
-  FROM socc JOIN spair USING (w1, w2) JOIN sstarts USING (w1) JOIN suni USING (w2), sntot
+  FROM socc
+  JOIN spair ON spair.w1 = socc.w1 AND spair.w2 = socc.w2
+  JOIN sstarts ON sstarts.w1 = socc.w1
+  JOIN suni ON suni.w2 = socc.w2
 ),
 lm AS (
   SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS nb,
@@ -2696,22 +2706,26 @@ dc AS (
          CAST(COUNT(*) FILTER (is_t) AS BIGINT) AS ct
   FROM db GROUP BY 1
 ),
-dtot AS (SELECT CAST(SUM(cr) AS BIGINT) AS tr, CAST(SUM(ct) AS BIGINT) AS tt FROM dc),
 dr AS (
   SELECT bk,
          CAST({sql_rhu("ln((ct + 1) / (tt + 1024)) - ln((cr + 1) / (tr + 1024))", 9)}
               AS DECIMAL(28,9)) AS lr
-  FROM dc, dtot
+  FROM (SELECT bk, cr, ct,
+               CAST(SUM(cr) OVER () AS BIGINT) AS tr,
+               CAST(SUM(ct) OVER () AS BIGINT) AS tt
+        FROM dc)
 ),
 wt AS (
   SELECT db.doc_id, {sql_rhu("CAST(SUM(lr) AS DOUBLE)", 6)} AS lw
-  FROM db JOIN dr USING (bk) GROUP BY 1
+  FROM db JOIN dr ON dr.bk = db.bk GROUP BY 1
 ),
 sel AS (
   SELECT f.doc_id, f.lang, lm.nb, lm.anlp, wt.lw,
          ROW_NUMBER() OVER (PARTITION BY f.lang ORDER BY lm.anlp ASC, f.doc_id) AS rn,
          COUNT(*) OVER (PARTITION BY f.lang) AS cnt
-  FROM fil f JOIN lm USING (doc_id) JOIN wt USING (doc_id)
+  FROM fil f
+  JOIN lm ON lm.doc_id = f.doc_id
+  JOIN wt ON wt.doc_id = f.doc_id
 )
 SELECT doc_id AS DOC_ID, lang AS LANG, nb AS N_BIGRAMS,
        anlp AS AVG_NEG_LOGPROB, lw AS LOG_WEIGHT

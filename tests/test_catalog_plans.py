@@ -115,6 +115,22 @@ def test_no_all_pairs_join_shapes(spark, sf_dir, name):
     )
 
 
+@pytest.mark.parametrize("name", ["docs_bigram_logprob", "docs_selection_pipeline"])
+def test_docs_oracles_plan_no_cross_product(sf_dir, name):
+    # the bigram-model oracles join pair/start/unigram counts on explicit
+    # keys: planned as cross products, they grow with the vocabulary's
+    # fourth power
+    import duckdb
+
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'")
+        plan = "\n".join(r[1] for r in con.execute("EXPLAIN " + catalog.ORACLE[name]).fetchall())
+    finally:
+        con.close()
+    assert "CROSS_PRODUCT" not in plan, plan
+
+
 def test_grade_first_names_all_exist():
     """ordered_queries() silently SKIPS GRADE_FIRST names missing from the
     catalog -- a typo in the rotation list would silently demote a query

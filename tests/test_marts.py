@@ -85,8 +85,11 @@ def test_fact_ltv_daily_cumulative(revenue):
 
 
 def test_ltv_snapshot_latest_row(revenue):
-    snap = {r["USER_ID"]: r["CUMULATIVE_LTV"] for r in marts.ltv_snapshot(marts.fact_ltv_daily(revenue)).collect()}
-    assert snap == {10: 31.5, 20: 8.5}
+    snap = {r["USER_ID"]: (r["CREATION_DATE"], r["DAILY_REVENUE"], r["CUMULATIVE_LTV"]) for r in marts.ltv_snapshot(revenue).collect()}
+    assert snap == {
+        10: (dt.date(2024, 1, 3), 20.0, 31.5),
+        20: (dt.date(2024, 1, 2), 8.5, 8.5),
+    }
 
 
 def test_rfm_segments(revenue):
@@ -127,6 +130,85 @@ def test_churn_profile(revenue):
     assert got[20]["AVG_ORDER_GAP_DAYS"] is None  # single order -> no gaps
 
 
+def _revenue_of(spark, rows):
+    """order_revenue over (ORDER_ID, USER_ID, ITEM_PRICE, CREATION_TIME_UTC)
+    lines, one line per order, no options."""
+    items = spark.createDataFrame(
+        [(o, 1, u, 1, "c", True, p, t) for o, u, p, t in rows],
+        "ORDER_ID int, LINEITEM_ID int, USER_ID int, RESTAURANT_ID int, "
+        "ITEM_CATEGORY string, IS_LOYALTY boolean, ITEM_PRICE double, CREATION_TIME_UTC timestamp",
+    )
+    opts = spark.createDataFrame([], "ORDER_ID int, LINEITEM_ID int, OPTION_NAME string, OPTION_PRICE double")
+    return marts.build_order_revenue(items, opts)
+
+
+def test_churn_window_boundaries(spark):
+    # now = 2024-01-10, so now-30 = 2023-12-11 and now-60 = 2023-11-11. The
+    # last window is (now-30, ...], the previous one (now-60, now-30].
+    rev = _revenue_of(spark, [
+        (1, 1, 7.0, D(2023, 12, 11)),   # on now-30: previous window
+        (2, 1, 9.0, D(2023, 11, 11)),   # on now-60: outside both
+        (3, 1, 4.0, D(2023, 12, 12)),   # a day after now-30: last window
+        (4, 2, 3.0, D(2023, 9, 1)),     # active only before the 60 days
+        (5, 2, 5.0, D(2023, 8, 1)),
+        (6, 3, 6.0, D(2023, 11, 30)),   # previous window only
+        (7, 3, 2.0, D(2023, 11, 12)),
+    ])
+    got = {r["USER_ID"]: r for r in marts.churn_profile(rev, "2024-01-10").collect()}
+    assert (got[1]["SPEND_LAST_30"], got[1]["SPEND_PREV_30"], got[1]["PCT_SPEND_CHANGE"]) == (4.0, 7.0, -42.8571)
+    # gaps over the dated rows in order: 30 + 1 -> (max - min) / 2
+    assert got[1]["AVG_ORDER_GAP_DAYS"] == 15.5
+    assert got[1]["DAYS_SINCE_LAST_ORDER"] == 29 and got[1]["CHURN_RISK_TAG"] == "Active"
+    assert (got[2]["SPEND_LAST_30"], got[2]["SPEND_PREV_30"], got[2]["PCT_SPEND_CHANGE"]) == (None, None, None)
+    assert got[2]["AVG_ORDER_GAP_DAYS"] == 31.0 and got[2]["CHURN_RISK_TAG"] == "At Risk"
+    assert (got[3]["SPEND_LAST_30"], got[3]["SPEND_PREV_30"], got[3]["PCT_SPEND_CHANGE"]) == (0.0, 8.0, -100.0)
+    assert got[3]["DAYS_SINCE_LAST_ORDER"] == 41 and got[3]["CHURN_RISK_TAG"] == "Monitor"
+
+
+def test_null_user_keeps_one_aggregate(spark):
+    # the oracle's single GROUP BY keeps a NULL user's last purchase date;
+    # churn's one aggregate gives a NULL user one row, not one per joined side
+    rev = _revenue_of(spark, [
+        (1, None, 8.0, D(2024, 1, 2)),
+        (2, None, 5.0, D(2023, 10, 2)),
+        (3, 1, 2.0, D(2024, 1, 5)),
+    ])
+    rfm = {r["USER_ID"]: r for r in marts.rfm(rev, "2024-01-10").collect()}
+    assert rfm[None]["LAST_PURCHASE_DATE"] == dt.date(2024, 1, 2)
+    assert (rfm[None]["RECENCY"], rfm[None]["FREQUENCY"], rfm[None]["MONETARY"]) == (8, 2, 13.0)
+    churn = marts.churn_profile(rev, "2024-01-10").collect()
+    assert sorted((r["USER_ID"] is None) for r in churn) == [False, True]
+    null_user = next(r for r in churn if r["USER_ID"] is None)
+    assert null_user["LAST_ORDER_DATE"] == dt.date(2024, 1, 2)
+    assert null_user["AVG_ORDER_GAP_DAYS"] == 92.0
+    assert (null_user["SPEND_LAST_30"], null_user["SPEND_PREV_30"]) == (8.0, 0.0)
+
+
+def test_ltv_snapshot_undated_days(spark):
+    # the reference's date-descending pick puts a NULL date last: a user
+    # with a dated day keeps the latest dated one, a user with only an
+    # undated day keeps that one; the cumulative LTV counts every day
+    rev = _revenue_of(spark, [
+        (1, 1, 4.0, None),
+        (2, 1, 6.0, D(2024, 1, 2)),
+        (3, 2, 5.0, None),
+    ])
+    snap = {r["USER_ID"]: tuple(r)[1:] for r in marts.ltv_snapshot(rev).collect()}
+    assert snap == {1: (dt.date(2024, 1, 2), 6.0, 10.0), 2: (None, 5.0, 5.0)}
+
+
+@pytest.mark.parametrize("mart", ["rfm", "churn_profile", "ltv_snapshot"])
+def test_customer_marts_are_one_aggregate(spark, revenue, mart):
+    # executed over a plain frame, each mart is aggregates and their
+    # exchanges only: no window and no join
+    base = spark.createDataFrame(revenue.collect(), revenue.schema)
+    build = getattr(marts, mart)
+    df = build(base) if mart == "ltv_snapshot" else build(base, "2024-01-10")
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan and "Join" not in plan and "CartesianProduct" not in plan, plan
+
+
 def test_sales_trends_grains(revenue):
     daily = marts.sales_trends(revenue, "daily").collect()
     assert {(str(r["CREATION_DATE"]), r["RESTAURANT_ID"], r["ITEM_CATEGORY"], r["DAILY_REVENUE"]) for r in daily} == {
@@ -162,7 +244,7 @@ def test_discount_effectiveness(items, options, revenue):
 
 
 def test_clv_segment_buckets(revenue):
-    seg = {r["USER_ID"]: r["CLV_GROUP"] for r in marts.clv_segment(marts.ltv_snapshot(marts.fact_ltv_daily(revenue))).collect()}
+    seg = {r["USER_ID"]: r["CLV_GROUP"] for r in marts.clv_segment(marts.ltv_snapshot(revenue)).collect()}
     assert seg == {20: "Low", 10: "High"}
 
 
@@ -174,7 +256,7 @@ def test_clv_segment_approx_twin_pinned_to_exact(spark, sf_dir):
     from aws_glue_cdc_metrics_job_spark.plans import adapters
 
     rev = adapters.order_revenue(spark, sf_dir)
-    snap = marts.ltv_snapshot(marts.fact_ltv_daily(rev))
+    snap = marts.ltv_snapshot(rev)
     exact = {r["USER_ID"]: r["CLV_GROUP"] for r in marts.clv_segment(snap).collect()}
     approx = {
         r["USER_ID"]: r["CLV_GROUP"]

@@ -73,7 +73,7 @@ JOB_GROUP = "medallion-fixture"
 # cache work (concurrent units racing to fill one cached frame would each
 # compute it again) and against actions creeping back into the stage units,
 # such as emptiness probes or watermark scans.
-FIXTURE_JOBS = 201
+FIXTURE_JOBS = 187
 
 
 def _sources(spark, items, opts, dates):

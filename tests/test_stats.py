@@ -456,6 +456,18 @@ class TestDistributionDrift:
         assert lo["P_PPM"] == 10**6 and lo["Q_PPM"] == 0
         assert hi["Q_PPM"] == 10**6 and hi["P_PPM"] == 0
 
+    def test_empty_slice_reports_null_not_divide_error(self, spark):
+        from aws_glue_cdc_metrics_job_spark.operators.stats import distribution_drift
+
+        # every row is reference: the current slice's total is 0
+        rows = [(float(i % 10), 0) for i in range(40)]
+        df = spark.createDataFrame(rows, "v double, cur int")
+        out = distribution_drift(df, "v", F.col("cur") == 1, bins=4).collect()
+        assert sum(r["N_REF"] for r in out) == 40
+        assert all(r["N_CUR"] == 0 and r["Q_PPM"] is None for r in out)
+        assert sum(r["P_PPM"] for r in out) == 10**6
+        assert all(r[c] is None for r in out for c in ("DIFF_PPM", "TVD_PPM", "CHI2_PPM"))
+
 
 class TestSeasonalDecompose:
     def test_pure_weekly_signal_recovered_exactly(self, spark):
